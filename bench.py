@@ -1,12 +1,12 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE full JSON line:
+Prints one COMPACT summary line (metric/value/unit/sf, no per-query
+map) followed by the full JSON line, LAST, which is the line a caller
+parses for per-query timings:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
-followed by one COMPACT summary line (same metric/value/unit/sf, no
-per-query map) so a tail-window capture that truncates the ~5 KB full
-line still ends with a parseable record (round-14 verdict, "What's
-wrong" #1). The complete per-query map is also written to
-BENCH_detail.json ($SPARK_GRAFT_BENCH_OUT).
+The complete per-query map is also written to BENCH_detail_c{N}.json,
+N the run's core count, so runs at different core counts keep separate
+files ($SPARK_GRAFT_BENCH_OUT overrides the path).
 
 Each query executes end-to-end via the noop sink (full computation, no
 driver-side collect overhead).
@@ -368,15 +368,10 @@ def main() -> None:
     }
     if errors:
         result["errors"] = errors
-    print(json.dumps(result))
-    # Second, COMPACT summary line (metric/value/unit/sf only — no
-    # per-query map): the full line above is ~5 KB at 173 queries and a
-    # tail-window capture can truncate it mid-line (round-13's bench
-    # record was lost exactly this way; round-14 verdict "What's wrong"
-    # #1). A truncated tail still ends with this short parseable line,
-    # so the headline total survives any tail window. Additions-only:
-    # the full JSON line above is unchanged and still printed first; the
-    # complete per-query map is also persisted to BENCH_detail.json.
+    # COMPACT summary line first (metric/value/unit/sf only), then the
+    # full line LAST: the per-query map is what a caller parses from the
+    # final line, and the compact line keeps the headline total readable
+    # in a tail window that cuts the ~5 KB full line short.
     print(
         json.dumps(
             {
@@ -387,15 +382,16 @@ def main() -> None:
             }
         )
     )
+    print(json.dumps(result))
     sys.stdout.flush()
-    # full per-query detail to a committed file: the driver's BENCH_r{N}
-    # records only a truncated tail of this line (~46 of the headline
-    # queries), so round-over-round diffs need the complete map on disk
-    # (round-9 verdict, "What's wrong" #2)
+    # full per-query detail to a file per core count: a run at 8 cores
+    # must not overwrite the 32-core detail
     detail_path = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "BENCH_detail.json"),
+        os.path.join(
+            os.path.dirname(os.path.abspath(__file__)),
+            f"BENCH_detail_c{spark.sparkContext.defaultParallelism}.json",
+        ),
     )
     try:
         with open(detail_path, "w") as fh:

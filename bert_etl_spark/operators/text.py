@@ -1189,7 +1189,7 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, bm25) for every document containing >= 1 query term —
     the Spark twin of SQL_BM25_CTES' ``bscore``. With
     ``spark.bert_etl.textidx.indexDir`` set, scores come off the durable
-    posting index (path-pruned probe, zero corpus access — see
+    posting index (partition-pruned probe, zero corpus access — see
     bm25_scores_indexed below); otherwise one corpus pass."""
     index_dir = _textidx_dir(spark)
     if index_dir:
@@ -1260,8 +1260,8 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rebuild refreshes them.
 #
 # Why at rest: the session BM25 path tokenizes the WHOLE corpus per
-# query. The index probe path-prunes to <= |query terms| bucket dirs
-# (PartitionFilters), reads postings that already carry (tf, dl), derives
+# query. The index probe prunes to <= |query terms| bucket dirs (a static
+# PartitionFilter), reads postings that already carry (tf, dl), derives
 # df from the pruned postings themselves (each (token, doc) row appears
 # once), and never touches the corpus — query cost is O(matching
 # postings), not O(corpus). Rows carry pkey = token|doc for ingest
@@ -1310,31 +1310,11 @@ def _textidx_dir(spark: SparkSession) -> str | None:
         return None
 
 
-def _token_bucket(col: F.Column | str):
-    c = F.col(col) if isinstance(col, str) else col
-    return F.pmod(F.xxhash64(c), F.lit(TEXTIDX_BUCKETS)).cast("int")
-
-
-def _term_buckets(spark: SparkSession, terms) -> list[int]:
-    """Bucket ids for a handful of CONSTANT query terms, via one
-    LocalTableScan job over string literals — replaces the
-    createDataFrame→distinct→collect round trip that parallelized the
-    terms across defaultParallelism Python partitions (a full shuffle
-    job per probe) just to hash a few constants (round-14 §5: the
-    driver should do almost no data work, and Spark none it can avoid).
-    Same expression (_token_bucket), so identical bucket values."""
-    df = spark.sql(
-        "SELECT token FROM (" +
-        " UNION ALL ".join(
-            f"SELECT {_sql_str(t)} AS token" for t in terms
-        ) + ")"
-    )
-    return sorted(
-        r["b"]
-        for r in df.select(_token_bucket("token").alias("b"))
-        .distinct()
-        .collect()
-    )
+def _token_bucket(token: str) -> str:
+    """SQL text of the posting bucket of ``token`` (a column name or a
+    string literal). Over constant query terms it folds to a constant,
+    so a probe's ``bucket IN (...)`` is a static PartitionFilter."""
+    return f"CAST(pmod(xxhash64({token}), {TEXTIDX_BUCKETS}) AS INT)"
 
 
 def _sql_str(s: str) -> str:
@@ -1368,7 +1348,7 @@ def _postings_plan(docs: DataFrame) -> DataFrame:
     return (
         tf.join(dl, "doc_id")
         .withColumn("pkey", F.concat_ws("|", "token", "doc_id"))
-        .withColumn("bucket", _token_bucket("token"))
+        .withColumn("bucket", F.expr(_token_bucket("token")))
     )
 
 
@@ -1387,7 +1367,11 @@ def _write_collection_stats(spark: SparkSession, index_dir: str) -> None:
 
 
 def read_collection_stats(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{index_dir}/{_STATS_DIR}/*.parquet")
+    """The frozen (n_docs, avgdl) row, read with its fixed schema — no
+    inference job per probe."""
+    return spark.read.schema("n_docs bigint, avgdl double").parquet(
+        f"{index_dir}/{_STATS_DIR}/*.parquet"
+    )
 
 
 def _textidx_open_or_build(
@@ -1562,43 +1546,32 @@ def textidx_compact(
 def bm25_scores_indexed(
     spark: SparkSession, sf_dir: str, index_dir: str
 ) -> DataFrame:
-    """(doc_id, bm25) off the durable posting index: path-pruned to the
-    query terms' bucket dirs, df derived from the pruned postings, frozen
-    collection stats — zero corpus access at query time."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        apply_tombstones,
-        pruned_scan,
-    )
+    """(doc_id, bm25) off the durable posting index: pruned to the query
+    terms' bucket dirs by a static PartitionFilter, df derived from the
+    pruned postings, frozen collection stats — zero corpus access at
+    query time."""
+    from bert_etl_spark.operators.index_lifecycle import pruned_scan
 
     _textidx_open_or_build(spark, sf_dir, index_dir)
-    buckets = _term_buckets(spark, BM25_TERMS)
+    buckets = [_token_bucket(_sql_str(t)) for t in BM25_TERMS]
     scan = pruned_scan(spark, index_dir, "bucket", buckets, key="doc_id")
-    if scan is None:  # no matching dirs — fall back to the full table
-        scan = apply_tombstones(
-            spark,
-            index_dir,
-            read_with_cached_schema(
-            spark, index_dir, [index_dir], base_path=index_dir
-        ),
-            key="doc_id",
-        )
-    cand = scan.filter(F.col("token").isin(*BM25_TERMS))
-    df_tbl = cand.groupBy("token").agg(F.count("*").alias("df"))
-    stats = read_collection_stats(spark, index_dir)
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
+    cand = scan.where(
+        f"token IN ({', '.join(_sql_str(t) for t in BM25_TERMS)})"
     )
-    tf_part = (F.col("tf") * (BM25_K1 + 1)) / (
-        F.col("tf")
-        + BM25_K1
-        * (1 - BM25_B + BM25_B * (F.col("dl").cast("double") / F.col("avgdl")))
+    df_tbl = cand.groupBy("token").agg(F.expr("count(*) AS df"))
+    stats = read_collection_stats(spark, index_dir)
+    # Okapi BM25 as SQL text (one parse); double literals keep the
+    # arithmetic in double, as in the oracle
+    idf = "ln((n_docs - df + 0.5D) / (df + 0.5D) + 1.0D)"
+    tf_part = (
+        f"((tf * {BM25_K1 + 1!r}D) / (tf + {BM25_K1!r}D * "
+        f"({1 - BM25_B!r}D + {BM25_B!r}D * (CAST(dl AS DOUBLE) / avgdl))))"
     )
     return (
         cand.join(F.broadcast(df_tbl), "token")
         .crossJoin(F.broadcast(stats))
-        .withColumn("contrib", idf * tf_part)
         .groupBy("doc_id")
-        .agg(dsum("contrib", "bm25"))
+        .agg(F.expr(f"{sql_dsum(f'{idf} * {tf_part}')} AS bm25"))
     )
 
 
@@ -1935,10 +1908,10 @@ def text_proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are the right shape when the phrase rides a quality-gate pipeline; a
 # RAG/search user issuing ad-hoc phrase queries against a STANDING corpus
 # needs the positions in the durable postings. The probe reads ONLY the
-# phrase terms' bucket dirs (<= |terms| partition dirs, path-pruned),
-# joins the two terms' position arrays per doc_id, and counts adjacency /
-# slop matches with one HOF expression — zero corpus access, zero
-# tokenize. Identical semantics to the scan forms by construction: the
+# phrase terms' bucket dirs (<= |terms| partition dirs, a static
+# PartitionFilter), joins the two terms' position arrays per doc_id, and
+# counts adjacency / slop matches with one HOF expression — zero corpus
+# access, zero tokenize. Identical semantics to the scan forms by construction: the
 # index stores tokenize()'s own 1-based offsets, so "p+1 ∈ P2" IS
 # "toks[i]=t1 ∧ toks[i+1]=t2". Oracle: the same positional self-join SQL
 # the scan forms already hash against.
@@ -1957,14 +1930,8 @@ def _positional_postings(
     from bert_etl_spark.operators.index_lifecycle import pruned_scan
 
     _textidx_open_or_build(spark, sf_dir, index_dir)
-    buckets = _term_buckets(spark, terms)
+    buckets = [_token_bucket(_sql_str(t)) for t in terms]
     scan = pruned_scan(spark, index_dir, "bucket", buckets, key="doc_id")
-    if scan is None:
-        # no matching bucket dirs: none of the terms occur anywhere
-        schema = "doc_id long, " + ", ".join(
-            f"p{i} array<int>" for i in range(len(terms))
-        )
-        return spark.createDataFrame([], schema=schema)
     if "positions" not in scan.columns:
         raise ValueError(
             f"text index at {index_dir} predates positional postings — "
@@ -1973,26 +1940,22 @@ def _positional_postings(
         )
     out = None
     for i, t in enumerate(terms):
-        side = scan.filter(F.col("token") == t).select(
-            "doc_id", F.col("positions").alias(f"p{i}")
+        side = scan.where(f"token = {_sql_str(t)}").selectExpr(
+            "doc_id", f"positions AS p{i}"
         )
         out = side if out is None else out.join(side, "doc_id")
     return out
 
 
-def _phrase_count_indexed(n_terms: int) -> F.Column:
-    """Occurrences of the n-term consecutive phrase over the joined
-    position arrays p0 … p{n-1}: count p ∈ p0 with p+i ∈ p{i} for every
-    following term — one HOF expression, the positional twin of
+def _phrase_count_indexed(n_terms: int) -> str:
+    """SQL text: occurrences of the n-term consecutive phrase over the
+    joined position arrays p0 … p{n-1}: count p ∈ p0 with p+i ∈ p{i} for
+    every following term — one HOF expression, the positional twin of
     phrase_count's offset test."""
-
-    def _cond(p):
-        c = F.array_contains(F.col("p1"), p + F.lit(1))
-        for i in range(2, n_terms):
-            c = c & F.array_contains(F.col(f"p{i}"), p + F.lit(i))
-        return c
-
-    return F.size(F.filter(F.col("p0"), _cond)).cast("bigint")
+    cond = " AND ".join(
+        f"array_contains(p{i}, p + {i})" for i in range(1, n_terms)
+    )
+    return f"CAST(size(filter(p0, p -> {cond})) AS BIGINT)"
 
 
 @query(
@@ -2019,9 +1982,8 @@ def text_phrase_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pp = _positional_postings(spark, sf_dir, index_dir, PHRASE_TERMS)
     cnt = _phrase_count_indexed(len(PHRASE_TERMS))
-    return (
-        pp.select("doc_id", cnt.alias("n_occurrences"))
-        .filter(F.col("n_occurrences") > 0)
+    return pp.selectExpr("doc_id", f"{cnt} AS n_occurrences").where(
+        "n_occurrences > 0"
     )
 
 
@@ -2051,20 +2013,12 @@ def text_proximity_search_indexed(
         spark, "textidx_demo", sf_dir
     )
     pp = _positional_postings(spark, sf_dir, index_dir, PHRASE_TERMS)
-    pairs = F.aggregate(
-        F.col("p0"),
-        F.lit(0),
-        lambda acc, p: acc
-        + F.size(
-            F.filter(
-                F.col("p1"),
-                lambda q: (q > p) & (q <= p + F.lit(PROXIMITY_SLOP)),
-            )
-        ),
-    ).cast("bigint")
-    return (
-        pp.select("doc_id", pairs.alias("n_pairs"))
-        .filter(F.col("n_pairs") > 0)
+    pairs = (
+        "CAST(aggregate(p0, 0, (acc, p) -> acc + size(filter(p1, "
+        f"q -> q > p AND q <= p + {PROXIMITY_SLOP}))) AS BIGINT)"
+    )
+    return pp.selectExpr("doc_id", f"{pairs} AS n_pairs").where(
+        "n_pairs > 0"
     )
 
 
@@ -2104,7 +2058,6 @@ def text_phrase3_search_indexed(
     )
     pp = _positional_postings(spark, sf_dir, index_dir, PHRASE3_TERMS)
     cnt = _phrase_count_indexed(len(PHRASE3_TERMS))
-    return (
-        pp.select("doc_id", cnt.alias("n_occurrences"))
-        .filter(F.col("n_occurrences") > 0)
+    return pp.selectExpr("doc_id", f"{cnt} AS n_occurrences").where(
+        "n_occurrences > 0"
     )

@@ -60,7 +60,11 @@ _BASE_CONFS: dict[str, str] = {
     # latest_cdc_state/fold/rebucket call — round-14 batch 6). 128 keeps
     # all index-family layouts on the driver's threaded lister; tables
     # with hundreds+ of partition dirs (the 100 TB case) still use the
-    # distributed path.
+    # distributed path. Index probes list the whole index root and prune
+    # in-plan (dynamic or static partition filters), and every family's
+    # modulus is at most 128 (IVF/IVF-PQ 8 cells, MaxSim 64, sign-LSH
+    # 2^planes, text 16 buckets), so that probe-time root listing stays
+    # on the driver too.
     "spark.sql.sources.parallelPartitionDiscovery.threshold": "128",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",

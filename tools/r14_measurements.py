@@ -343,7 +343,7 @@ def main() -> None:
                         F.col("vec_id").alias("q_id"),
                         F.col("e").alias("qe"),
                         F.col("nrm").alias("qnrm"),
-                        sim.sign_bucket(F.col("e"), sim.planes_for(planes_n))
+                        F.expr(sim.sign_bucket("e", sim.planes_for(planes_n)))
                         .cast("int")
                         .alias("bucket"),
                     )
@@ -355,9 +355,7 @@ def main() -> None:
                 table = sim._lsh_index_columns(
                     life.pruned_scan(spark, idx, "bucket", touched)
                 )
-                cos = sim.dot(F.col("e"), F.col("qe")) / (
-                    F.col("nrm") * F.col("qnrm")
-                )
+                cos = F.expr(sim.COS)
                 w = Window.partitionBy("q_id").orderBy(
                     F.desc("cosine"), "vec_id"
                 )
@@ -377,7 +375,7 @@ def main() -> None:
 
             assign = (
                 sim._prepared(spark, sf_dir)
-                .withColumn("bucket", sim.sign_bucket(F.col("e")))
+                .withColumn("bucket", F.expr(sim.sign_bucket("e")))
                 .drop("label")
             )
             t0 = time.time()

@@ -54,7 +54,7 @@ def main() -> None:
         (S, ["ivfpq_build_or_open", "ivfpq_index_ingest", "ivfpq_index_delete",
              "ivfpq_index_rebuild", "ivfpq_index_upsert", "_ivfpq_topk",
              "_ivfpq_adc", "read_pq_codebook", "read_codebook",
-             "_pq_codes_col", "_argmax_cell", "_probed_cells",
+             "_pq_codes", "_argmax_cell",
              "_ivf_assign", "_ivf_topk", "ivf_index_ingest",
              "ivf_index_delete", "ivf_index_rebuild", "ivf_index_upsert",
              "_prepared", "_pq_codebook_frame", "_ivf_centroids",
