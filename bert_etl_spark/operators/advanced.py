@@ -27,7 +27,14 @@ from pyspark.sql import functions as F
 
 from bert_etl_spark.functions.deterministic import davg, dsum, sql_davg, sql_dsum
 from bert_etl_spark.functions.release import release
-from bert_etl_spark.operators.index_lifecycle import read_with_cached_schema
+from bert_etl_spark.operators.index_lifecycle import (
+    IndexFamily,
+    build_family,
+    family_compact,
+    family_delete,
+    family_ingest,
+    index_scan,
+)
 from bert_etl_spark.operators.dedup import (
     COSINE_THRESHOLD,
     JACCARD_THRESHOLD,
@@ -715,7 +722,6 @@ def _lineitem_for_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # spark.bert_etl.graph.broadcastNodeLimit; the bucketed-at-rest BUILD
 # input (graph.lineitemTable) remains the build-time lever.
 GRAPH_EDGE_DIR_CONF = "spark.bert_etl.graph.edgeTableDir"
-_EDGE_MARKER = "_n_buckets"
 GRAPH_EDGE_BUCKETS = 16
 
 
@@ -724,28 +730,41 @@ def _edge_bucket(col):
     return F.pmod(F.xxhash64(c), F.lit(GRAPH_EDGE_BUCKETS)).cast("int")
 
 
-def _edges_assign_plan(li: DataFrame) -> DataFrame:
-    """The durable edge rows: (u, v, pkey, ebkt). pkey = 'u|v' is the
-    ingest-idempotence key (an edge re-offered by a replayed batch
+def _edge_rows(edges: DataFrame) -> DataFrame:
+    """(u, v) edges as durable edge rows (u, v, pkey, ebkt). pkey = 'u|v'
+    is the ingest-idempotence key (an edge re-offered by a replayed batch
     collapses); ebkt is a pure function of u, so a re-delivered edge
     lands in its standing row's partition (the touched-partition
     anti-join's losslessness condition). The hash INPUT TYPE is pinned:
-    u/v cast to bigint before bucketing, exactly as graph_edges_ingest
-    casts its batch — xxhash64 is type-sensitive (an int and a bigint of
-    the same value hash differently), so without the cast a non-bigint
-    source key column would land build rows in int-hash buckets while
-    graph_edges_delete derives the long-hash bucket and trusts it
-    (trusted_parts=True), silently tombstoning nothing (round-13 advice,
-    the 'medium' item)."""
+    u/v cast to bigint before bucketing — xxhash64 is type-sensitive (an
+    int and a bigint of the same value hash differently), so without the
+    cast a non-bigint source key column would land build rows in
+    int-hash buckets while graph_edges_delete derives the long-hash
+    bucket and trusts it (trusted_parts=True), silently tombstoning
+    nothing (round-13 advice, the 'medium' item)."""
     return (
-        _copurchase_edge_plan(li)
-        .select(
+        edges.select(
             F.col("u").cast("bigint").alias("u"),
             F.col("v").cast("bigint").alias("v"),
         )
         .withColumn("pkey", F.concat_ws("|", "u", "v"))
         .withColumn("ebkt", _edge_bucket("u"))
     )
+
+
+GRAPH_EDGES = IndexFamily(
+    label="edge table", marker="_n_buckets", part_col="ebkt", key="pkey",
+    dir_conf=GRAPH_EDGE_DIR_CONF, layout=GRAPH_EDGE_BUCKETS,
+    unit="buckets", assign=lambda spark, edges, edge_dir, layout: (
+        _edge_rows(edges)
+    ),
+)
+_EDGE_MARKER = GRAPH_EDGES.marker
+
+
+def _edges_assign_plan(li: DataFrame) -> DataFrame:
+    """The durable edge rows of the co-purchase build over ``li``."""
+    return _edge_rows(_copurchase_edge_plan(li))
 
 
 def graph_edges_build_or_open(
@@ -753,64 +772,26 @@ def graph_edges_build_or_open(
 ) -> None:
     """Ensure a standing edge table at ``edge_dir`` (shared lifecycle:
     open recovers/refuses, build is sentinel-guarded)."""
-    from bert_etl_spark.operators.index_lifecycle import build_index, open_index
-
-    marker = open_index(spark, edge_dir, _EDGE_MARKER, "ebkt")
-    if marker is not None and marker != GRAPH_EDGE_BUCKETS:
-        raise ValueError(
-            f"edge table at {edge_dir} was built with {marker} buckets "
-            f"but this build hashes into {GRAPH_EDGE_BUCKETS} — the bucket "
-            "modulus is a persistent layout property; point the conf at a "
-            "fresh dir or delete the stale table"
-        )
-    if marker is not None:
-        return
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    build_index(
-        spark,
-        edge_dir,
-        _EDGE_MARKER,
-        GRAPH_EDGE_BUCKETS,
-        _edges_assign_plan(_lineitem_for_edges(spark, sf_dir)),
-        "ebkt",
-        min(n_parts, GRAPH_EDGE_BUCKETS),
+    build_family(
+        spark, GRAPH_EDGES, edge_dir,
+        lambda: _edges_assign_plan(_lineitem_for_edges(spark, sf_dir)),
     )
+
+
+def _edges_changed(spark: SparkSession, edge_dir: str) -> None:
+    """Drop the session's memoized edge read (copurchase_edges) before a
+    maintenance verb changes the table."""
+    from bert_etl_spark.operators.registry import checkpoint_invalidate
+
+    checkpoint_invalidate(spark, "copurchase_edges_at_rest", edge_dir)
 
 
 def graph_edges_ingest(spark: SparkSession, batch: DataFrame, edge_dir: str) -> int:
     """Idempotent append of new edges (u, v) into the standing table —
     the shared O(touched-partitions) ingest verb (an edge feed from a new
     lineitem delta, an external graph mutation stream)."""
-    from bert_etl_spark.functions.markers import read_int_marker
-    from bert_etl_spark.operators.index_lifecycle import ingest_rows
-
-    if read_int_marker(spark, f"{edge_dir}/{_EDGE_MARKER}") != GRAPH_EDGE_BUCKETS:
-        raise ValueError(
-            f"no standing edge table at {edge_dir} (or a drifted layout) "
-            "— build it first (graph_edges_build_or_open)"
-        )
-    assigned = (
-        batch.select(
-            F.col("u").cast("bigint").alias("u"),
-            F.col("v").cast("bigint").alias("v"),
-        )
-        .withColumn("pkey", F.concat_ws("|", "u", "v"))
-        .withColumn("ebkt", _edge_bucket("u"))
-    )
-    from bert_etl_spark.operators.registry import checkpoint_invalidate
-
-    checkpoint_invalidate(spark, "copurchase_edges_at_rest", edge_dir)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    return ingest_rows(
-        spark,
-        edge_dir,
-        _EDGE_MARKER,
-        GRAPH_EDGE_BUCKETS,
-        assigned,
-        "ebkt",
-        min(n_parts, GRAPH_EDGE_BUCKETS),
-        key="pkey",
-    )
+    _edges_changed(spark, edge_dir)
+    return family_ingest(spark, GRAPH_EDGES, batch, edge_dir)
 
 
 def graph_edges_delete(spark: SparkSession, keys: DataFrame, edge_dir: str) -> int:
@@ -823,51 +804,23 @@ def graph_edges_delete(spark: SparkSession, keys: DataFrame, edge_dir: str) -> i
     from its one possible bucket is provably absent from the index; no
     cross-check scan needed). A feed carrying its own ebkt column keeps
     the untrusted cross-checked path."""
-    from bert_etl_spark.operators.index_lifecycle import delete_keys
-
-    from bert_etl_spark.operators.registry import checkpoint_invalidate
-
-    checkpoint_invalidate(spark, "copurchase_edges_at_rest", edge_dir)
+    _edges_changed(spark, edge_dir)
     derived = "ebkt" not in keys.columns
     if derived:
         keys = keys.withColumn(
             "ebkt",
             _edge_bucket(F.split("pkey", "\\|")[0].cast("long")),
         )
-    return delete_keys(
-        spark,
-        edge_dir,
-        _EDGE_MARKER,
-        GRAPH_EDGE_BUCKETS,
-        keys,
-        trusted_parts=derived,
-        key="pkey",
-        part_col="ebkt",
+    return family_delete(
+        spark, GRAPH_EDGES, keys, edge_dir, trusted_parts=derived
     )
 
 
 def graph_edges_compact(spark: SparkSession, edge_dir: str) -> int:
     """Compact the grown edge table (applies tombstones) through the
     shared crash-safe protocol."""
-    from bert_etl_spark.functions.markers import read_int_marker
-    from bert_etl_spark.operators.index_lifecycle import compact_index
-
-    if read_int_marker(spark, f"{edge_dir}/{_EDGE_MARKER}") is None:
-        raise ValueError(
-            f"no standing edge table at {edge_dir} — nothing to compact"
-        )
-    from bert_etl_spark.operators.registry import checkpoint_invalidate
-
-    checkpoint_invalidate(spark, "copurchase_edges_at_rest", edge_dir)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    return compact_index(
-        spark,
-        edge_dir,
-        _EDGE_MARKER,
-        "ebkt",
-        min(n_parts, GRAPH_EDGE_BUCKETS),
-        key="pkey",
-    )
+    _edges_changed(spark, edge_dir)
+    return family_compact(spark, GRAPH_EDGES, edge_dir)
 
 
 def _edges_at_rest_plan(spark: SparkSession, edge_dir: str) -> DataFrame:
@@ -875,16 +828,7 @@ def _edges_at_rest_plan(spark: SparkSession, edge_dir: str) -> DataFrame:
     at the session's first touch (then memoized): a pure FileScan of the
     ebkt= dirs with tombstones anti-joined out; no self-join, no support
     aggregation, no lineitem anywhere (the plan test pins it)."""
-    from bert_etl_spark.operators.index_lifecycle import apply_tombstones
-
-    return apply_tombstones(
-        spark,
-        edge_dir,
-        read_with_cached_schema(
-            spark, edge_dir, [edge_dir], base_path=edge_dir
-        ),
-        key="pkey",
-    ).select(
+    return index_scan(spark, edge_dir, GRAPH_EDGES.key).select(
         F.col("u").cast("bigint").alias("u"),
         F.col("v").cast("bigint").alias("v"),
     )
@@ -931,9 +875,8 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared lifecycle — the warm path reads it with NO build stage at all
     (a session re-pays nothing; the build runs once, ever, per corpus),
     tombstones masked like every durable family."""
-    edge_dir = spark.conf.get(GRAPH_EDGE_DIR_CONF, None)
+    edge_dir = GRAPH_EDGES.index_dir(spark)
     if edge_dir:
-        from bert_etl_spark.operators.index_lifecycle import apply_tombstones
         from bert_etl_spark.operators.registry import checkpoint_get
 
         # memoize the at-rest read per session: the iterated loops hit

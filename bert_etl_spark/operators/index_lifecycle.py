@@ -9,7 +9,16 @@ parquet table under a conf'd directory, an atomic integer layout marker
 dirs (pruned inside the probe's own plan), idempotent ingest
 (touched-partition semi+anti dedup on the content key), tombstone
 deletes, and compaction back to one file per partition. This module is
-that contract written once, so the families cannot drift.
+that contract written once, so the families cannot drift: each family
+is DECLARED once as an ``IndexFamily`` spec (marker, partition column,
+key, conf, layout, partition cap, assign), and every lifecycle verb
+(``open_family``, ``build_family``, ``family_ingest``, ``family_upsert``,
+``family_upsert_delete``, ``family_delete``, ``family_compact``,
+``index_stream``) is one generic function driven by the spec. Every
+full-table rewrite — compact, the rebuild/migration verbs, the keyed
+upserts' partial rewrite, the CDC fold and re-bucket — commits through
+ONE function, ``commit_rewrite``, the only writer of the
+``_compact_pending`` sentinel.
 
 Crash-safety protocol (round-10 advice, the 'high' item): the index stops
 being a pure function of (corpus, constants) the moment ingest exists —
@@ -21,10 +30,11 @@ dir => rebuild from corpus" would silently DROP them after a crash. Instead:
   (sentinel, partial data, no marker): since ingest REFUSES to run without a
   marker, such a dir provably contains only corpus-derived rows — safe to
   wipe and rebuild.
-- COMPACTION writes the full rewritten table to a sibling ``_compact_tmp``
-  dir FIRST, then stamps a ``_compact_pending`` sentinel (carrying the layout
-  value), then deletes the marker, then swaps partition dirs one by one, then
-  re-stamps the marker and cleans up. From the sentinel onward a crash at ANY
+- A REWRITE (commit_rewrite) writes the full rewritten table and its
+  artifacts to a sibling ``_compact_tmp`` dir FIRST, then stamps a
+  ``_compact_pending`` sentinel (carrying the layout value), then deletes
+  the marker, then swaps partition dirs one by one, then re-stamps the
+  marker and cleans up. From the sentinel onward a crash at ANY
   step is recoverable from the already-written tmp table: the swap is
   per-partition delete+rename, so re-running it finishes whatever the crash
   left half-done (``finish_compaction_swap``). Readers recover on open.
@@ -49,6 +59,9 @@ re-validates the marker immediately before its append as a cheap tripwire
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -166,21 +179,20 @@ def finish_compaction_swap(
     FULL rewrite, so every root partition holding SURVIVING rows has a
     tmp counterpart; a partition whose every row was tombstoned produces
     NO tmp dir, so its stale root dir is NOT replaced here —
-    compact_index deletes those explicitly after the swap, and keeps
+    commit_rewrite deletes those explicitly after the swap, and keeps
     their tombstone files (deleted last) masking the rows until it does.
     A crash-recovery re-run of this function alone therefore leaves
     fully-tombstoned partitions physically present but still masked; the
-    next compact_index removes them.
+    next full rewrite removes them.
 
     ARTIFACT dirs staged in tmp swap too: any underscore-prefixed
     DIRECTORY child of the tmp table (a rewritten ``_codebook``, a
     refreshed ``_collection_stats``, a re-bucketed ``_keymap``) replaces
     its root counterpart after the partition dirs move — the hook that
     lets a rewrite verb refresh index-owned artifacts under the SAME
-    sentinel protocol instead of a second, unprotected write (round-14:
-    textidx stats refresh, ivfpq rebuild). Plain files (parquet's
-    ``_SUCCESS``) are skipped; a regular compaction stages no artifacts,
-    so this is a no-op there. Same idempotence proof as the partition
+    sentinel protocol instead of a second, unprotected write
+    (commit_rewrite's stages). Plain files (parquet's ``_SUCCESS``) are
+    skipped. Same idempotence proof as the partition
     swap: an artifact already moved by a crashed run is simply no longer
     in tmp."""
     from bert_etl_spark.functions.markers import read_int_marker, write_int_marker
@@ -595,17 +607,8 @@ def upsert_rows(
     are unchanged: every standing row of a batch key goes, every batch
     row lands."""
     _, n_replaced, n_inserted = _upsert_delete_impl(
-        spark,
-        index_dir,
-        marker_name,
-        expected,
-        assigned,
-        None,
-        part_col,
-        n_parts,
-        key,
-        keymap,
-        multi_rows,
+        spark, index_dir, marker_name, expected, assigned, None, part_col,
+        n_parts, key, keymap, multi_rows,
     )
     return (n_replaced, n_inserted)
 
@@ -650,17 +653,8 @@ def upsert_delete_rows(
     several subplans; callers pass a projection of an already-
     checkpointed delta."""
     return _upsert_delete_impl(
-        spark,
-        index_dir,
-        marker_name,
-        expected,
-        assigned,
-        drop_keys,
-        part_col,
-        n_parts,
-        key,
-        keymap,
-        False,
+        spark, index_dir, marker_name, expected, assigned, drop_keys,
+        part_col, n_parts, key, keymap, False,
     )
 
 
@@ -679,7 +673,7 @@ def _upsert_delete_impl(
 ) -> tuple[int, int, int]:
     from pyspark.sql import functions as F
 
-    from bert_etl_spark.functions.markers import read_int_marker, write_int_marker
+    from bert_etl_spark.functions.markers import read_int_marker
 
     marker = read_int_marker(spark, f"{index_dir}/{marker_name}")
     if marker is None:
@@ -803,43 +797,31 @@ def _upsert_delete_impl(
                 .join(F.broadcast(exclkeys), key, "left_anti")
                 .unionByName(batch)
             )
-        tmp = f"{index_dir}{TMP_SUFFIX}"
-        (
-            bucket_layout(rows, part_col, min(n_parts, len(touched)))
-            .write.partitionBy(part_col)
-            .mode("overwrite")
-            .parquet(tmp)
+        stage = []
+        if ts is not None:
+
+            def _tombstones(tmp: str) -> None:
+                doomed = ts.select(key).join(
+                    F.broadcast(exclkeys), key, "left_semi"
+                )
+                if not doomed.isEmpty():
+                    # resurrection (batch keys) / physical removal (drop
+                    # keys, whose rows this swap deletes): the filtered
+                    # tombstone table swaps in as an artifact, atomically
+                    # with the rewrite
+                    (
+                        ts.join(F.broadcast(exclkeys), key, "left_anti")
+                        .coalesce(1)
+                        .write.mode("overwrite")
+                        .parquet(f"{tmp}/{TOMBSTONE_DIR}")
+                    )
+
+            stage.append(_tombstones)
+        commit_rewrite(
+            spark, index_dir, marker_name, part_col, expected, rows,
+            min(n_parts, len(touched)), stage=stage, touched=touched,
         )
         fs, p = _fs(spark, index_dir)
-        for v in touched:  # fully-drained dirs: stage EMPTY so the swap
-            d = p(f"{tmp}/{part_col}={v}")  # replaces, never skips, them
-            if not fs.exists(d):
-                fs.mkdirs(d)
-        if ts is not None:
-            doomed = ts.select(key).join(
-                F.broadcast(exclkeys), key, "left_semi"
-            )
-            if not doomed.isEmpty():
-                # resurrection (batch keys) / physical removal (drop
-                # keys, whose rows this swap deletes): the filtered
-                # tombstone table swaps in as an artifact, atomically
-                # with the rewrite
-                (
-                    ts.join(F.broadcast(exclkeys), key, "left_anti")
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(f"{tmp}/{TOMBSTONE_DIR}")
-                )
-        # single-writer tripwire, then COMMIT POINT
-        if read_int_marker(spark, f"{index_dir}/{marker_name}") != expected:
-            raise ValueError(
-                f"index at {index_dir} changed underneath this upsert — "
-                "a concurrent compact/rebuild violated the single-writer "
-                "assumption; re-run against the settled index"
-            )
-        write_int_marker(spark, f"{index_dir}/{PENDING_SENTINEL}", expected)
-        fs.delete(p(f"{index_dir}/{marker_name}"), False)
-        finish_compaction_swap(spark, index_dir, marker_name, part_col)
         if keymap or fs.exists(p(f"{index_dir}/{KEYMAP_DIR}")):
             # post-commit append, like ingest: a superseded (key, old
             # part) entry may remain — the map's documented stale-allowed
@@ -1200,36 +1182,36 @@ def delete_keys(
         )
     live = None
     n_request = None
-    if part_col is not None and part_col in keys.columns:
-        # request size + touched partitions ride the checkpoint job as
-        # observed metrics instead of a second distinct().collect() job
-        # (the ingest_rows shape; round-14 batch 4; reliable_metrics —
-        # an empty request must still deliver its zero counts)
-        req_obs = Observation()
-        with reliable_metrics(keys.sparkSession):
-            batch = (
-                keys.select(key, part_col)
-                .dropDuplicates([key])
-                .observe(
-                    req_obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.collect_set(F.col(part_col)).alias("parts"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            got = req_obs.get
-        n_request = int(got["n"])
-        touched = list(got["parts"])
-        live = physical_pruned_scan(spark, index_dir, part_col, touched)
-        request = batch.select(key)
-    else:
-        batch = None
-        request = keys.select(key).dropDuplicates([key])
-    if live is None and batch is None:
-        live = read_with_cached_schema(
-            spark, index_dir, [index_dir], base_path=index_dir
-        ).select(key)
+    batch = checkpointed = None
     try:
+        if part_col is not None and part_col in keys.columns:
+            # request size + touched partitions ride the checkpoint job as
+            # observed metrics instead of a second distinct().collect() job
+            # (the ingest_rows shape; round-14 batch 4; reliable_metrics —
+            # an empty request must still deliver its zero counts)
+            req_obs = Observation()
+            with reliable_metrics(keys.sparkSession):
+                batch = (
+                    keys.select(key, part_col)
+                    .dropDuplicates([key])
+                    .observe(
+                        req_obs,
+                        F.count(F.lit(1)).alias("n"),
+                        F.collect_set(F.col(part_col)).alias("parts"),
+                    )
+                    .localCheckpoint(eager=True)
+                )
+                got = req_obs.get
+            n_request = int(got["n"])
+            touched = list(got["parts"])
+            live = physical_pruned_scan(spark, index_dir, part_col, touched)
+            request = batch.select(key)
+        else:
+            request = keys.select(key).dropDuplicates([key])
+        if live is None and batch is None:
+            live = read_with_cached_schema(
+                spark, index_dir, [index_dir], base_path=index_dir
+            ).select(key)
         # live is None only on the pruned path with no matching dirs —
         # nothing was found where the feed claimed it lives. Otherwise,
         # broadcast the (small) REQUEST into the big side, never the
@@ -1245,7 +1227,6 @@ def delete_keys(
             .join(F.broadcast(request), key, "left_semi")
             .dropDuplicates([key])
         )
-        checkpointed = None
         if batch is not None and not trusted_parts:
             # cross-check (docstring): keys the pruned scan did not find
             # where the feed claimed may live elsewhere under a stale
@@ -1295,11 +1276,12 @@ def delete_keys(
             return n
         finally:
             release(fresh)  # the ingest_rows per-batch hygiene, same reason
-            if checkpointed is not None:
-                release(checkpointed)
     finally:
-        if batch is not None:
-            release(batch)
+        # also on the error path: a failed job after the cross-check
+        # checkpoint must not leak its blocks
+        for df in (batch, checkpointed):
+            if df is not None:
+                release(df)
 
 
 def compact_index(
@@ -1318,19 +1300,8 @@ def compact_index(
     ``_compact_pending`` sentinel lands — see the module docstring.
 
     Pending tombstones are APPLIED here: the rewrite anti-joins them out
-    (on ``key``), and the tombstone files that were read are cleared only
-    AFTER the swap commits. A partition whose EVERY row was tombstoned
-    yields no tmp dir, so the swap alone would leave its stale root dir
-    holding the deleted rows with nothing masking them once the tombstone
-    files clear (the round-11 resurrection bug) — so after the swap, root
-    ``part=`` dirs with no tmp counterpart are deleted BEFORE the applied
-    tombstone files are. Crash windows: between swap and stale-dir delete,
-    or between stale-dir delete and tombstone clear, the tombstone files
-    are still present, so every reader keeps masking the rows; the next
-    compaction applies the same tombstones again and completes the
-    removal. Tombstones whose rows are already physically gone mask
-    nothing (harmless) and clear on the next compaction; recovery via
-    finish_compaction_swap never needs to know about them.
+    (on ``key``) and commit_rewrite clears the files it read only after
+    the swap commits and the fully-tombstoned partitions are gone.
 
     ``finalize_tmp(tmp_dir)``: optional hook run AFTER the rewrite lands
     in tmp and BEFORE the commit point — the place to stage refreshed
@@ -1338,98 +1309,167 @@ def compact_index(
     ``_collection_stats``) INSIDE tmp; finish_compaction_swap moves them
     into the root table under the same sentinel protocol, so artifact
     refresh and data rewrite commit atomically-or-not-at-all together."""
-    from pyspark.sql import functions as F
+    from bert_etl_spark.functions.markers import read_int_marker
 
-    from bert_etl_spark.functions.markers import read_int_marker, write_int_marker
-
-    marker_path = f"{index_dir}/{marker_name}"
-    marker = read_int_marker(spark, marker_path)
+    marker = read_int_marker(spark, f"{index_dir}/{marker_name}")
     if marker is None:
         raise ValueError(
             f"no standing index at {index_dir} — nothing to compact"
         )
+    table, applied = live_rows(spark, index_dir, key)
+    return commit_rewrite(
+        spark, index_dir, marker_name, part_col, marker, table, n_parts,
+        applied=applied,
+        stage=[finalize_tmp] if finalize_tmp is not None else [],
+        keymap_key=key,
+    )
+
+
+def live_rows(
+    spark: SparkSession, index_dir: str, key: str
+) -> tuple[DataFrame, list[str]]:
+    """The index's live rows — the physical table minus the pending
+    tombstones — and the tombstone files that masking read. A full
+    rewrite of these rows applies exactly those files, so commit_rewrite
+    clears exactly them; files appended later (a single-writer
+    violation) are left alone. Not checkpointed: materializing the whole
+    live index is the memory hazard a rewrite at scale cannot afford."""
+    from pyspark.sql import functions as F
+
     fs, p = _fs(spark, index_dir)
-    # snapshot the tombstone files this compaction will apply — files
-    # appended after this point (single-writer violation) are left alone
-    applied = _tombstone_files(fs, p, index_dir)
+    applied = [f for f, _ in _tombstone_files(fs, p, index_dir)]
     table = read_with_cached_schema(
         spark, index_dir, [index_dir], base_path=index_dir
     )
     if applied:
         t = read_with_cached_schema(
-            spark,
-            f"{index_dir}/{TOMBSTONE_DIR}",
-            [f for f, _ in applied],
+            spark, f"{index_dir}/{TOMBSTONE_DIR}", applied
         )
         table = table.join(F.broadcast(t.select(key)), key, "left_anti")
-    tmp = f"{index_dir}{TMP_SUFFIX}"
-    # the compacted row count rides the tmp write as an observed metric —
-    # previously a full read-back count of the files just written
-    # (round-14 batch 4; reliable_metrics — a fully-tombstoned table
-    # makes the rewrite runtime-empty)
+    return table, applied
+
+
+def commit_rewrite(
+    spark: SparkSession,
+    index_dir: str,
+    marker_name: str,
+    part_col: str,
+    expected: int,
+    rows: DataFrame,
+    n_parts: int,
+    value: int | None = None,
+    applied: list[str] = (),
+    stage=(),
+    keymap_key: str | None = None,
+    touched: list | None = None,
+) -> int | None:
+    """The one rewrite commit every durable table goes through: compact,
+    the in-place rebuilds and migrations, the keyed upserts and the CDC
+    fold/re-bucket. Steps, in order:
+
+    1. write ``rows`` to the sibling tmp table (``_compact_tmp``);
+    2. stage the index-owned artifacts INSIDE tmp: each ``stage(tmp)``
+       callable (codebooks, collection stats, a filtered tombstone
+       table) and, when the index carries a key→partition map, the map
+       rebuilt on ``keymap_key`` from the rows just written — overlapped,
+       all strictly before the commit point;
+    3. single-writer tripwire: the layout marker must still read
+       ``expected``;
+    4. COMMIT POINT: stamp ``_compact_pending`` with ``value`` (default
+       ``expected``; a migration's new layout), delete the marker,
+       finish_compaction_swap — which moves partition dirs and
+       artifacts in and re-stamps the marker from the sentinel;
+    5. delete the root partitions the rewrite left no counterpart for,
+       then the ``applied`` tombstone files, last.
+
+    Crash windows: before the sentinel, the old table is untouched and
+    the next open_index clears tmp; from the sentinel on, any
+    open_index finishes the swap from tmp. Between the swap and step 5
+    the stale partitions are still masked — by the tombstone files (a
+    compact's fully-tombstoned partitions) or by the readers' per-key
+    argmax (a crashed CDC re-bucket) — and the next full rewrite removes
+    them.
+
+    ``touched``: a PARTIAL rewrite of just these partition values (the
+    keyed upserts): a touched partition the rewrite drains is staged as
+    an EMPTY tmp dir so the swap replaces it, and no other root
+    partition is stale. Returns the rewritten row count (an observed
+    metric on the tmp write) for full rewrites, None for partial ones."""
     from pyspark.sql import Observation
+    from pyspark.sql import functions as F
 
+    from bert_etl_spark.functions.markers import read_int_marker, write_int_marker
     from bert_etl_spark.functions.observe import reliable_metrics
+    from bert_etl_spark.functions.overlap import overlap
 
-    n_obs = Observation()
-    with reliable_metrics(spark):
+    tmp = f"{index_dir}{TMP_SUFFIX}"
+    fs, p = _fs(spark, index_dir)
+
+    def _write(df: DataFrame) -> None:
         (
-            bucket_layout(
-                table.observe(n_obs, F.count(F.lit(1)).alias("n")),
-                part_col,
-                n_parts,
-            )
+            bucket_layout(df, part_col, n_parts)
             .write.partitionBy(part_col)
             .mode("overwrite")
             .parquet(tmp)
         )
-        n_rows = int(n_obs.get["n"])
-    if finalize_tmp is not None:
-        finalize_tmp(tmp)
-    # fully-tombstoned partitions: root dirs the FULL rewrite produced no
-    # tmp counterpart for — the swap won't touch them, so they must be
-    # deleted explicitly or their (deleted) rows resurrect once the
-    # applied tombstone files clear. Snapshot the set now, while tmp
-    # still exists (finish_compaction_swap removes it).
-    tmp_parts = {d.getName() for d in _part_dirs(fs, p, tmp, part_col)}
-    stale = [
-        d
-        for d in _part_dirs(fs, p, index_dir, part_col)
-        if d.getName() not in tmp_parts
-    ]
-    # COMMIT POINT: tmp is complete — from here a crash is recoverable
-    write_int_marker(spark, f"{index_dir}/{PENDING_SENTINEL}", marker)
-    fs.delete(p(marker_path), False)  # readers now defer to the sentinel
-    finish_compaction_swap(spark, index_dir, marker_name, part_col)
-    for d in stale:  # rows still masked: tombstone files clear LAST
-        fs.delete(d, True)
-    # keymap refresh: drop the applied (now physically gone) keys from
-    # the map so repeat deletes of dead keys stay pruned. Best-effort by
-    # design — a crash between the delete and the rename leaves no map,
-    # which only degrades bare-key deletes back to the full-scan path.
-    km = f"{index_dir}/{KEYMAP_DIR}"
-    if applied and fs.exists(p(km)):
-        kdf = read_with_cached_schema(spark, km, [km], base_path=km)
-        tkeys = read_with_cached_schema(
+
+    n_rows, stale = None, []
+    if touched is None:
+        # the row count rides the tmp write as an observed metric
+        # (reliable_metrics — a fully-tombstoned table makes the rewrite
+        # runtime-empty)
+        n_obs = Observation()
+        with reliable_metrics(spark):
+            _write(rows.observe(n_obs, F.count(F.lit(1)).alias("n")))
+            n_rows = int(n_obs.get["n"])
+        tmp_parts = {d.getName() for d in _part_dirs(fs, p, tmp, part_col)}
+        stale = [
+            d
+            for d in _part_dirs(fs, p, index_dir, part_col)
+            if d.getName() not in tmp_parts
+        ]
+    else:
+        _write(rows)
+        for v in touched:  # fully-drained dirs: stage EMPTY so the swap
+            d = p(f"{tmp}/{part_col}={v}")  # replaces, never skips, them
+            if not fs.exists(d):
+                fs.mkdirs(d)
+    stages = [lambda fn=fn: fn(tmp) for fn in stage]
+    if keymap_key is not None and fs.exists(p(f"{index_dir}/{KEYMAP_DIR}")):
+        # slim read-back of the rows just written, with their own schema
+        # (no inference job); underscore dirs staged alongside are hidden
+        # from the listing
+        slim = rows.select(keymap_key, part_col).schema
+        stages.append(lambda: keymap_record(
             spark,
-            f"{index_dir}/{TOMBSTONE_DIR}",
-            [f for f, _ in applied],
-        ).select(key)
-        refreshed = kdf.join(F.broadcast(tkeys), key, "left_anti")
-        ktmp = f"{km}{TMP_SUFFIX}"
-        (
-            bucket_layout(refreshed, "kbkt", min(n_parts, KEYMAP_BUCKETS))
-            .write.partitionBy("kbkt")
-            .mode("overwrite")
-            .parquet(ktmp)
+            tmp,
+            spark.read.schema(slim).option("basePath", tmp).parquet(tmp),
+            keymap_key,
+            part_col,
+            n_parts,
+        ))
+    if stages:
+        overlap(*stages)
+    marker = read_int_marker(spark, f"{index_dir}/{marker_name}")
+    if marker != expected:
+        raise ValueError(
+            f"index at {index_dir} changed underneath this rewrite (marker "
+            f"now {marker}, expected {expected}) — a concurrent "
+            "compact/rebuild violated the single-writer assumption; re-run "
+            "against the settled index"
         )
-        fs.delete(p(km), True)
-        if not fs.rename(p(ktmp), p(km)):
-            raise IOError(f"keymap refresh failed moving {ktmp}")
-        invalidate_schema(spark, km)
-    for f, _ in applied:  # post-commit: masked rows are physically gone
+    write_int_marker(
+        spark,
+        f"{index_dir}/{PENDING_SENTINEL}",
+        expected if value is None else value,
+    )
+    fs.delete(p(f"{index_dir}/{marker_name}"), False)
+    finish_compaction_swap(spark, index_dir, marker_name, part_col)
+    for d in stale:  # still masked: the applied tombstones clear LAST
+        fs.delete(d, True)
+    for f in applied:
         fs.delete(p(f), False)
-    return int(n_rows)
+    return n_rows
 
 
 def physical_pruned_scan(
@@ -1629,4 +1669,238 @@ def index_file_stats(
             f"{part_col} string, n_files int, n_rows bigint, "
             "n_tombstones bigint, tombstone_bytes bigint"
         ),
+    )
+
+
+@dataclass(frozen=True)
+class IndexFamily:
+    """One durable index family, declared once: everything the generic
+    verbs below need to open, check, assign into and rewrite it.
+
+    ``layout`` is the value a fresh build stamps (centroids, planes,
+    buckets); an opened index must carry exactly it, unless ``layouts``
+    names the range a migration verb may move it within (sign-LSH plane
+    counts) — the verbs then run at the stamped value. ``cap(layout)``
+    bounds the partition count of maintenance writes. ``assign(spark,
+    batch, index_dir, layout)`` turns an arrival batch into index rows
+    under the index's frozen quantizer. ``key`` is what deletes,
+    tombstones and upserts address; ``row_key`` the per-row identity
+    ingest dedups on, when one key spans many rows (a document's
+    postings). ``keymap``: the family keeps the optional key→partition
+    map for bare-key deletes."""
+
+    label: str
+    marker: str
+    part_col: str
+    key: str
+    dir_conf: str | None
+    layout: int
+    unit: str
+    assign: Callable
+    cap: Callable[[int], int] = lambda layout: layout
+    layouts: range | None = None
+    row_key: str | None = None
+    keymap: bool = False
+
+    def index_dir(self, spark: SparkSession) -> str | None:
+        """The standing index dir the family's conf names, if any."""
+        try:
+            return spark.conf.get(self.dir_conf, None)
+        except Exception:
+            return None
+
+    def n_parts(self, spark: SparkSession, layout: int) -> int:
+        n = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
+        return min(n, self.cap(layout))
+
+
+def open_family(
+    spark: SparkSession, fam: IndexFamily, index_dir: str, verb: str = ""
+) -> int | None:
+    """open_index (recovering a crashed rewrite) plus the family's layout
+    check. Returns the stamped layout; with ``verb`` set, a missing index
+    raises instead of returning None."""
+    value = open_index(spark, index_dir, fam.marker, fam.part_col)
+    if value is None:
+        if verb:
+            raise ValueError(
+                f"no standing {fam.label} at {index_dir} — nothing to "
+                f"{verb}; build it first"
+            )
+        return None
+    ok = value in fam.layouts if fam.layouts is not None else value == fam.layout
+    if not ok:
+        want = (
+            f"{fam.layouts.start}..{fam.layouts.stop - 1}"
+            if fam.layouts is not None
+            else fam.layout
+        )
+        raise ValueError(
+            f"{fam.label} at {index_dir} was built with {value} {fam.unit} "
+            f"but this build uses {want} — the {fam.unit} count is a "
+            "persistent layout property; point the conf at a fresh dir or "
+            "delete the stale index to rebuild"
+        )
+    return value
+
+
+def build_family(
+    spark: SparkSession,
+    fam: IndexFamily,
+    index_dir: str,
+    plan: Callable[[], DataFrame],
+    finalize=None,
+) -> int:
+    """Open the family's index at ``index_dir``, building it from
+    ``plan()`` (a thunk: plan construction may collect a quantizer) when
+    the dir is buildable. Returns the stamped layout."""
+    value = open_family(spark, fam, index_dir)
+    if value is None:
+        value = fam.layout
+        build_index(
+            spark, index_dir, fam.marker, value, plan(), fam.part_col,
+            fam.n_parts(spark, value), finalize=finalize,
+            keymap_key=fam.key if _keymap_on(spark, fam) else None,
+        )
+    return value
+
+
+def _keymap_on(spark: SparkSession, fam: IndexFamily) -> bool:
+    return fam.keymap and keymap_enabled(spark)
+
+
+def family_ingest(
+    spark: SparkSession, fam: IndexFamily, batch: DataFrame, index_dir: str
+) -> int:
+    """ingest_rows of ``batch`` assigned under the standing layout."""
+    value = open_family(spark, fam, index_dir, "ingest into")
+    return ingest_rows(
+        spark, index_dir, fam.marker, value,
+        fam.assign(spark, batch, index_dir, value), fam.part_col,
+        fam.n_parts(spark, value), key=fam.row_key or fam.key,
+        keymap=_keymap_on(spark, fam),
+    )
+
+
+def family_upsert(
+    spark: SparkSession, fam: IndexFamily, batch: DataFrame, index_dir: str
+) -> tuple[int, int]:
+    """upsert_rows of ``batch`` assigned under the standing layout."""
+    value = open_family(spark, fam, index_dir, "upsert into")
+    return upsert_rows(
+        spark, index_dir, fam.marker, value,
+        fam.assign(spark, batch, index_dir, value), fam.part_col,
+        fam.n_parts(spark, value), key=fam.key,
+        keymap=_keymap_on(spark, fam),
+        multi_rows=fam.row_key is not None,
+    )
+
+
+def family_upsert_delete(
+    spark: SparkSession,
+    fam: IndexFamily,
+    batch: DataFrame,
+    keys: DataFrame,
+    index_dir: str,
+) -> tuple[int, int, int]:
+    """upsert_delete_rows: ``batch`` upserted and ``keys`` deleted in one
+    touched-partition rewrite."""
+    value = open_family(spark, fam, index_dir, "upsert into")
+    return upsert_delete_rows(
+        spark, index_dir, fam.marker, value,
+        fam.assign(spark, batch, index_dir, value), keys, fam.part_col,
+        fam.n_parts(spark, value), key=fam.key,
+        keymap=_keymap_on(spark, fam),
+    )
+
+
+def family_delete(
+    spark: SparkSession,
+    fam: IndexFamily,
+    keys: DataFrame,
+    index_dir: str,
+    trusted_parts: bool = False,
+) -> int:
+    """Tombstone ``keys``. A feed carrying the partition column prunes
+    (delete_keys, cross-checked unless ``trusted_parts``) — only where a
+    key lives in one partition; a bare-key feed goes through the
+    key→partition map when the family keeps one, else the slim full key
+    scan."""
+    value = open_family(spark, fam, index_dir, "delete from")
+    part = fam.part_col if fam.row_key is None else None
+    if fam.keymap and part not in keys.columns:
+        return delete_keys_by_map(
+            spark, index_dir, fam.marker, value, keys, key=fam.key,
+            part_col=fam.part_col,
+        )
+    return delete_keys(
+        spark, index_dir, fam.marker, value, keys, key=fam.key,
+        part_col=part, trusted_parts=trusted_parts,
+    )
+
+
+def family_compact(
+    spark: SparkSession, fam: IndexFamily, index_dir: str, finalize_tmp=None
+) -> int:
+    """compact_index at the standing layout (see its docstring)."""
+    value = open_family(spark, fam, index_dir, "compact")
+    return compact_index(
+        spark, index_dir, fam.marker, fam.part_col,
+        fam.n_parts(spark, value), key=fam.key, finalize_tmp=finalize_tmp,
+    )
+
+
+def family_rewrite(
+    spark: SparkSession,
+    fam: IndexFamily,
+    index_dir: str,
+    expected: int,
+    rows: DataFrame,
+    value: int | None = None,
+    applied: list[str] = (),
+    stage=(),
+) -> int:
+    """commit_rewrite of a whole re-assigned family table (the rebuild
+    and migration verbs): ``rows`` laid out under ``value`` (default
+    ``expected``)."""
+    value = expected if value is None else value
+    return commit_rewrite(
+        spark, index_dir, fam.marker, fam.part_col, expected, rows,
+        fam.n_parts(spark, value), value=value, applied=applied,
+        stage=stage, keymap_key=fam.key,
+    )
+
+
+def index_stream(
+    stream: DataFrame,
+    index_dir: str,
+    checkpoint_dir: str,
+    write,
+    compact=None,
+    compact_every: int = 0,
+    compact_when_tombstones_over: int = 0,
+):
+    """Always-on maintenance of a standing index: every micro-batch of
+    ``stream`` goes to ``write(spark, batch, index_dir)`` (a family's
+    ingest or delete verb) inside foreachBatch — exactly-once at the sink
+    because both verbs are idempotent under replay — and ``compact(spark,
+    index_dir)`` runs in the same lane when compaction_due says so
+    (``compact_every=N`` epochs, or pending tombstone bytes over
+    ``compact_when_tombstones_over``; single-writer by construction).
+    Returns the StreamingQuery (availableNow trigger)."""
+    spark = stream.sparkSession
+
+    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
+        write(spark, batch_df, index_dir)
+        if compact is not None and compaction_due(
+            spark, index_dir, epoch_id, compact_every,
+            compact_when_tombstones_over,
+        ):
+            compact(spark, index_dir)
+
+    return (
+        stream.writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )

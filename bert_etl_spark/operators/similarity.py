@@ -29,7 +29,20 @@ from pyspark.sql import functions as F
 
 from bert_etl_spark.functions.deterministic import dsum, sql_dsum
 from bert_etl_spark.functions.localdf import local_frame
-from bert_etl_spark.operators.index_lifecycle import read_with_cached_schema
+from bert_etl_spark.operators.index_lifecycle import (
+    IndexFamily,
+    build_family,
+    family_compact,
+    family_delete,
+    family_ingest,
+    family_rewrite,
+    family_upsert,
+    family_upsert_delete,
+    index_scan,
+    index_stream,
+    live_rows,
+    open_family,
+)
 from bert_etl_spark.operators.registry import (
     ALL_ORACLES,
     checkpoint_get,
@@ -330,20 +343,12 @@ N_PROBES = 2
 # ask #2: the MaxSim and sign-LSH families both have at-rest, marker-guarded,
 # partition-pruned indexes; the single-vector IVF (the most common ANN shape a
 # user reaches for) gets the identical contract: set the conf → the
-# (vec_id, e, nrm, cell) assignment is a partitionBy(cell) parquet table
-# with an atomic `_n_centroids` marker and a frozen `_codebook` artifact,
-# probes read only the probed cells, and build/ingest/stream/compact
-# run through the shared crash-safe lifecycle. Unset → session-lifetime
-# checkpoint_once blocks.
+# (vec_id, label, e, nrm, cell) assignment is a partitionBy(cell) parquet
+# table with an atomic `_n_centroids` marker and a frozen `_codebook`
+# artifact, probes read only the probed cells, and every lifecycle verb is
+# the generic one of index_lifecycle driven by the IVF family spec. Unset →
+# session-lifetime checkpoint_once blocks.
 IVF_INDEX_DIR_CONF = "spark.bert_etl.ivf.indexDir"
-_IVF_MARKER = "_n_centroids"
-
-
-def _ivf_index_dir(spark: SparkSession) -> str | None:
-    try:
-        return spark.conf.get(IVF_INDEX_DIR_CONF, None)
-    except Exception:
-        return None
 
 
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -383,6 +388,39 @@ def _ivf_assign_plan(
     )
 
 
+def _arrival_label(batch: DataFrame) -> Column:
+    """The arrival's payload label; a payload-less arrival lands with a
+    NULL label (filtered probes then never match it — the vector-store
+    semantics)."""
+    if "label" in batch.columns:
+        return F.col("label").cast("int").alias("label")
+    return F.lit(None).cast("int").alias("label")
+
+
+def _ivf_rows(
+    spark: SparkSession, batch: DataFrame, index_dir: str, layout: int
+) -> DataFrame:
+    """Arrivals (vec_id, embedding[, label]) as IVF index rows, assigned
+    with the index's own frozen ``_codebook``."""
+    return (
+        batch.select("vec_id", _arrival_label(batch), "embedding")
+        .withColumn("e", F.expr(as_double("embedding")))
+        .withColumn("nrm", F.expr(l2_norm("e")))
+        .select(
+            "vec_id", "label", "e", "nrm",
+            F.expr(_argmax_cell(read_codebook(spark, index_dir))).alias("cell"),
+        )
+    )
+
+
+IVF = IndexFamily(
+    label="IVF index", marker="_n_centroids", part_col="cell", key="vec_id",
+    dir_conf=IVF_INDEX_DIR_CONF, layout=N_CENTROIDS, unit="centroids",
+    assign=_ivf_rows, keymap=True,
+)
+_IVF_MARKER = IVF.marker
+
+
 def _ivf_assign(
     spark: SparkSession, sf_dir: str, index_dir: str | None = None
 ) -> DataFrame:
@@ -391,41 +429,15 @@ def _ivf_assign(
     shared lifecycle: open recovers/refuses, build is sentinel-guarded,
     the quantizer freezes as ``_codebook``, pending tombstones are masked
     out of the read), else built once per session via checkpoint_once."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        build_index,
-        index_scan,
-        open_index,
-    )
-
-    index_dir = index_dir or _ivf_index_dir(spark)
+    index_dir = index_dir or IVF.index_dir(spark)
     if index_dir:
-        marker = open_index(spark, index_dir, _IVF_MARKER, "cell")
-        if marker is not None and marker != N_CENTROIDS:
-            raise ValueError(
-                f"IVF index at {index_dir} was built with {marker} "
-                f"centroids but this build quantizes into {N_CENTROIDS} — "
-                "the quantizer is a persistent layout property; point the "
-                "conf at a fresh dir (or delete the stale index to rebuild)"
-            )
-        if marker is None:
-            from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-            n_parts = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-            )
-            build_index(
-                spark,
-                index_dir,
-                _IVF_MARKER,
-                N_CENTROIDS,
-                _ivf_assign_plan(spark, sf_dir),
-                "cell",
-                min(n_parts, N_CENTROIDS),
-                finalize=lambda: _write_codebook(
-                    spark, sf_dir, index_dir, _ivf_centroids(spark, sf_dir)
-                ),
-                keymap_key="vec_id" if keymap_enabled(spark) else None,
-            )
+        build_family(
+            spark, IVF, index_dir,
+            lambda: _ivf_assign_plan(spark, sf_dir),
+            finalize=lambda: _write_codebook(
+                spark, sf_dir, index_dir, _ivf_centroids(spark, sf_dir)
+            ),
+        )
         return _ivf_index_columns(index_scan(spark, index_dir))
     hit = checkpoint_get(spark, "ivf_assign", sf_dir)
     if hit is not None:
@@ -442,194 +454,39 @@ def _ivf_assign(
 def ivf_index_ingest(
     spark: SparkSession, batch: DataFrame, index_dir: str
 ) -> int:
-    """Ingest new single vectors into the standing durable IVF index:
-    assign with the index's own frozen ``_codebook``, dedup within the
-    batch and against the index's vec_id column, append into cell= dirs —
-    maxsim_index_ingest's single-vector twin through the shared
-    lifecycle. ``batch``: (vec_id, embedding)."""
-    from bert_etl_spark.operators.index_lifecycle import ingest_rows, open_index
-
-    marker = open_index(spark, index_dir, _IVF_MARKER, "cell")
-    if marker is None:
-        raise ValueError(
-            f"no standing IVF index at {index_dir} — build it first (set "
-            "spark.bert_etl.ivf.indexDir and run sim_ivf, or call "
-            "_ivf_assign)"
-        )
-    if marker != N_CENTROIDS:
-        raise ValueError(
-            f"IVF index at {index_dir} was built with {marker} centroids "
-            f"but this build quantizes into {N_CENTROIDS} — rebuild or "
-            "point at a fresh dir"
-        )
-    cent_rows = read_codebook(spark, index_dir)
-    # the payload column rides along when the arrival carries it; a
-    # payload-less arrival lands with a NULL label (filtered probes then
-    # simply never match it — the vector-store semantics)
-    lbl = (
-        F.col("label").cast("int")
-        if "label" in batch.columns
-        else F.lit(None).cast("int")
-    )
-    assigned = (
-        batch.select("vec_id", lbl.alias("label"), F.col("embedding"))
-        .withColumn("e", F.expr(as_double("embedding")))
-        .withColumn("nrm", F.expr(l2_norm("e")))
-        .select(
-            "vec_id", "label", "e", "nrm",
-            F.expr(_argmax_cell(cent_rows)).alias("cell"),
-        )
-    )
-    from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return ingest_rows(
-        spark,
-        index_dir,
-        _IVF_MARKER,
-        N_CENTROIDS,
-        assigned,
-        "cell",
-        min(n_parts, N_CENTROIDS),
-        keymap=keymap_enabled(spark),
-    )
+    """Ingest new single vectors (vec_id, embedding[, label]) into the
+    standing durable IVF index: assigned with the frozen ``_codebook``,
+    deduped within the batch and against the touched cells, appended
+    (index_lifecycle.ingest_rows). Returns the rows ingested."""
+    return family_ingest(spark, IVF, batch, index_dir)
 
 
 def ivf_index_upsert(
     spark: SparkSession, batch: DataFrame, index_dir: str
 ) -> tuple[int, int]:
     """Keyed upsert into the standing durable IVF index: re-embedded
-    vectors REPLACE their standing rows in place (wherever the frozen
-    quantizer had filed them — including a move to a different cell when
-    the new embedding assigns differently), fresh keys insert, and a
-    currently-tombstoned key resurrects atomically with its new row —
-    the delete→compact→re-ingest cycle the ingest contract prescribes
-    for updates, collapsed into one sentinel commit (upsert_rows).
-    ``batch``: (vec_id, embedding[, label]). Returns
-    ``(n_replaced, n_inserted)``."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        keymap_enabled,
-        open_index,
-        upsert_rows,
-    )
-
-    marker = open_index(spark, index_dir, _IVF_MARKER, "cell")
-    if marker is None:
-        raise ValueError(
-            f"no standing IVF index at {index_dir} — build it first (set "
-            "spark.bert_etl.ivf.indexDir and run sim_ivf, or call "
-            "_ivf_assign)"
-        )
-    if marker != N_CENTROIDS:
-        raise ValueError(
-            f"IVF index at {index_dir} was built with {marker} centroids "
-            f"but this build quantizes into {N_CENTROIDS} — rebuild or "
-            "point at a fresh dir"
-        )
-    assigned = _ivf_upsert_assigned(spark, batch, index_dir)
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return upsert_rows(
-        spark,
-        index_dir,
-        _IVF_MARKER,
-        N_CENTROIDS,
-        assigned,
-        "cell",
-        min(n_parts, N_CENTROIDS),
-        keymap=keymap_enabled(spark),
-    )
-
-
-def _ivf_upsert_assigned(
-    spark: SparkSession, batch: DataFrame, index_dir: str
-) -> DataFrame:
-    """The upsert batch assigned under the index's frozen quantizer —
-    shared by the keyed upsert and the combined upsert+delete verb."""
-    cent_rows = read_codebook(spark, index_dir)
-    lbl = (
-        F.col("label").cast("int")
-        if "label" in batch.columns
-        else F.lit(None).cast("int")
-    )
-    return (
-        batch.select("vec_id", lbl.alias("label"), F.col("embedding"))
-        .withColumn("e", F.expr(as_double("embedding")))
-        .withColumn("nrm", F.expr(l2_norm("e")))
-        .select(
-            "vec_id", "label", "e", "nrm",
-            F.expr(_argmax_cell(cent_rows)).cast("int").alias("cell"),
-        )
-    )
+    vectors REPLACE their standing rows in place (moving cell when the
+    new embedding assigns differently), fresh keys insert, a tombstoned
+    key resurrects atomically (index_lifecycle.upsert_rows). ``batch``:
+    (vec_id, embedding[, label]). Returns ``(n_replaced, n_inserted)``."""
+    return family_upsert(spark, IVF, batch, index_dir)
 
 
 def ivf_index_upsert_delete(
     spark: SparkSession, batch: DataFrame, keys: DataFrame, index_dir: str
 ) -> tuple[int, int, int]:
-    """Keyed upsert AND keyed delete against the standing durable IVF
-    index in ONE touched-partition rewrite and sentinel swap
+    """Keyed upsert AND keyed delete in ONE touched-partition rewrite
     (index_lifecycle.upsert_delete_rows) — the combined verb
-    cdc_index_sync routes its per-key argmax delta through: same end
-    state as ivf_index_delete followed by ivf_index_upsert (the two key
-    sets are disjoint by the argmax contract), half the per-sync verb
-    machinery (round-15). ``batch``: (vec_id, embedding[, label]);
-    ``keys``: any frame with a vec_id column. Returns
-    ``(n_deleted, n_replaced, n_inserted)``."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        keymap_enabled,
-        open_index,
-        upsert_delete_rows,
-    )
-
-    marker = open_index(spark, index_dir, _IVF_MARKER, "cell")
-    if marker is None:
-        raise ValueError(
-            f"no standing IVF index at {index_dir} — build it first (set "
-            "spark.bert_etl.ivf.indexDir and run sim_ivf, or call "
-            "_ivf_assign)"
-        )
-    if marker != N_CENTROIDS:
-        raise ValueError(
-            f"IVF index at {index_dir} was built with {marker} centroids "
-            f"but this build quantizes into {N_CENTROIDS} — rebuild or "
-            "point at a fresh dir"
-        )
-    assigned = _ivf_upsert_assigned(spark, batch, index_dir)
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return upsert_delete_rows(
-        spark,
-        index_dir,
-        _IVF_MARKER,
-        N_CENTROIDS,
-        assigned,
-        keys,
-        "cell",
-        min(n_parts, N_CENTROIDS),
-        keymap=keymap_enabled(spark),
-    )
+    cdc_index_sync routes its per-key argmax delta through. ``batch``:
+    (vec_id, embedding[, label]); ``keys``: any frame with a vec_id
+    column. Returns ``(n_deleted, n_replaced, n_inserted)``."""
+    return family_upsert_delete(spark, IVF, batch, keys, index_dir)
 
 
 def ivf_index_compact(spark: SparkSession, index_dir: str) -> int:
-    """Compact the grown IVF index back to one file per cell through the
-    shared crash-safe protocol (tmp + pending sentinel + per-cell swap)."""
-    from bert_etl_spark.functions.markers import read_int_marker
-    from bert_etl_spark.operators.index_lifecycle import compact_index
-
-    if read_int_marker(spark, f"{index_dir}/{_IVF_MARKER}") is None:
-        raise ValueError(
-            f"no standing IVF index at {index_dir} — nothing to compact"
-        )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return compact_index(
-        spark, index_dir, _IVF_MARKER, "cell", min(n_parts, N_CENTROIDS)
-    )
+    """Compact the grown IVF index back to one file per cell, applying
+    pending tombstones (index_lifecycle.compact_index)."""
+    return family_compact(spark, IVF, index_dir)
 
 
 def ivf_index_stream(
@@ -639,84 +496,33 @@ def ivf_index_stream(
     compact_every: int = 0,
     compact_when_tombstones_over: int = 0,
 ):
-    """Always-on ingest of arriving vectors into the standing durable IVF
-    index (foreachBatch → ivf_index_ingest) — idempotent under replay via
-    the anti-join, like its MaxSim and sign-LSH twins. ``compact_every=N``
-    runs ivf_index_compact inside the lane on every Nth epoch (in-path
-    maintenance, single-writer by construction — the ledger's
-    compact_every idiom; 0 = external cadence).
-    ``compact_when_tombstones_over=B``: compact when pending tombstone
-    bytes exceed B (compaction_due — measured masking debt instead of a
-    blind cadence; either trigger suffices)."""
-    from bert_etl_spark.operators.index_lifecycle import compaction_due
-
-    spark = stream.sparkSession
-
-    def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        ivf_index_ingest(spark, batch_df, index_dir)
-        if compaction_due(
-            spark, index_dir, epoch_id, compact_every,
-            compact_when_tombstones_over,
-        ):
-            ivf_index_compact(spark, index_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Always-on ingest of arriving vectors (foreachBatch →
+    ivf_index_ingest), compacting in the lane per compaction_due
+    (index_lifecycle.index_stream)."""
+    return index_stream(
+        stream, index_dir, checkpoint_dir, ivf_index_ingest,
+        ivf_index_compact, compact_every, compact_when_tombstones_over,
     )
 
 
 def ivf_index_delete_stream(
     stream: DataFrame, index_dir: str, checkpoint_dir: str
 ):
-    """Always-on deletes against the standing durable IVF index
-    (foreachBatch → ivf_index_delete) — the delete verb's streaming
-    sibling, completing verb parity with ingest (ivf_index_stream).
-    Idempotent under replay: delete_keys skips keys already tombstoned,
-    so a re-delivered batch records nothing. ``stream``: rows carrying a
-    vec_id column (a CDC delete feed, a GDPR opt-out topic)."""
-    spark = stream.sparkSession
-
-    def _delete(batch_df: DataFrame, epoch_id: int) -> None:
-        ivf_index_delete(spark, batch_df, index_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_delete)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Always-on deletes (foreachBatch → ivf_index_delete) of rows
+    carrying a vec_id column (a CDC delete feed, a GDPR opt-out topic);
+    a replayed batch records nothing."""
+    return index_stream(stream, index_dir, checkpoint_dir, ivf_index_delete)
 
 
 def ivf_index_delete(
     spark: SparkSession, keys: DataFrame, index_dir: str
 ) -> int:
-    """Tombstone-delete vectors from the standing durable IVF index —
-    the lifecycle's DELETE verb (build/ingest/stream/compact existed;
-    vector stores also need removal: revoked documents, opted-out users,
-    re-embedded corpora). Logical until the next compact: probes mask the
-    keys immediately (index_scan anti-joins the ``_tombstones`` table),
-    ivf_index_compact applies them physically and clears them. ``keys``:
-    any frame with a vec_id column. Returns new tombstones recorded."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        delete_keys,
-        delete_keys_by_map,
-    )
-
-    # a delete feed that recorded the cell at ingest time gets the
-    # O(touched-partitions) liveness check; a bare vec_id feed goes
-    # through the persisted key→partition map when the index carries one
-    # (spark.bert_etl.index.keymap at build/ingest time), else the
-    # column-pruned full key scan (delete_keys' documented honest cost)
-    if "cell" in keys.columns:
-        return delete_keys(
-            spark, index_dir, _IVF_MARKER, N_CENTROIDS, keys, part_col="cell"
-        )
-    return delete_keys_by_map(
-        spark, index_dir, _IVF_MARKER, N_CENTROIDS, keys, part_col="cell"
-    )
+    """Tombstone-delete vectors from the standing durable IVF index:
+    logical until the next compact, masked from every probe at once.
+    ``keys``: any frame with a vec_id column (and optionally the cell
+    recorded at ingest time, which prunes the liveness check). Returns
+    new tombstones recorded."""
+    return family_delete(spark, IVF, keys, index_dir)
 
 
 # The registered delete demo: build the durable IVF index in a session-
@@ -828,7 +634,7 @@ def sim_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage 1: the at-rest cell assignment (session-shared, or the durable
     # partitionBy(cell) index under spark.bert_etl.ivf.indexDir)
-    index_dir = _ivf_index_dir(spark)
+    index_dir = IVF.index_dir(spark)
     assign = _ivf_assign(spark, sf_dir)
     return _ivf_topk(spark, sf_dir, assign, index_dir)
 
@@ -1018,18 +824,40 @@ def sim_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # buckets by PATH, and the index survives sessions/executor loss. Unset →
 # session-lifetime checkpoint_once blocks (fast local default).
 SIMLSH_INDEX_DIR_CONF = "spark.bert_etl.simlsh.indexDir"
-_SIMLSH_MARKER = "_n_planes"
-
-
-def _simlsh_index_dir(spark: SparkSession) -> str | None:
-    try:
-        return spark.conf.get(SIMLSH_INDEX_DIR_CONF, None)
-    except Exception:
-        return None
 
 
 def _lsh_index_columns(df: DataFrame) -> DataFrame:
     return df.selectExpr("vec_id", "e", "nrm", "CAST(bucket AS INT) AS bucket")
+
+
+def _lsh_rows(
+    spark: SparkSession, batch: DataFrame, index_dir: str, layout: int
+) -> DataFrame:
+    """Arrivals (vec_id, embedding) hashed with the deterministic planes
+    at the index's STAMPED plane count — the hyperplanes are
+    compile-time constants, so there is no codebook artifact, but a
+    migrated index (simlsh_index_rebuild) hashes with planes_for(its
+    count)."""
+    return (
+        batch.select("vec_id", F.expr(as_double("embedding")).alias("e"))
+        .withColumn("nrm", F.expr(l2_norm("e")))
+        .withColumn(
+            "bucket",
+            F.expr(sign_bucket("e", planes_for(layout))).cast("int"),
+        )
+    )
+
+
+# the plane count is the one MIGRATABLE layout: the verbs accept any
+# stamped count in range and hash at it; only the probe (whose oracle
+# hashes with N_PLANES) requires N_PLANES
+SIMLSH = IndexFamily(
+    label="sign-LSH index", marker="_n_planes", part_col="bucket",
+    key="vec_id", dir_conf=SIMLSH_INDEX_DIR_CONF, layout=N_PLANES,
+    unit="planes", assign=_lsh_rows, cap=lambda planes: 1 << planes,
+    layouts=range(1, 25), keymap=True,
+)
+_SIMLSH_MARKER = SIMLSH.marker
 
 
 def _lsh_bucket_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1040,9 +868,7 @@ def _lsh_bucket_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ledger's `_n_buckets` contract; open_index recovers interrupted
     compactions and refuses unmarked data, the shared lifecycle), else
     session-lifetime checkpoint_once blocks."""
-    from bert_etl_spark.operators.index_lifecycle import build_index, open_index
-
-    index_dir = _simlsh_index_dir(spark)
+    index_dir = SIMLSH.index_dir(spark)
     if not index_dir:
         hit = checkpoint_get(spark, "simlsh_buckets", sf_dir)
         if hit is not None:
@@ -1051,169 +877,52 @@ def _lsh_bucket_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket", F.expr(sign_bucket("e"))
         )
         return checkpoint_once(assign, "simlsh_buckets", sf_dir)
-    marker = open_index(spark, index_dir, _SIMLSH_MARKER, "bucket")
-    if marker is not None and marker != N_PLANES:
-        raise ValueError(
-            f"sign-LSH index at {index_dir} was built with {marker} planes "
-            f"but this build hashes with {N_PLANES} — the plane count is a "
-            "persistent layout property; migrate it in place with "
-            f"simlsh_index_rebuild(spark, index_dir, {N_PLANES}), or point "
-            "the conf at a fresh dir"
-        )
-    if marker is None:
-        assign = _prepared(spark, sf_dir).withColumn(
+    planes = build_family(
+        spark, SIMLSH, index_dir,
+        lambda: _prepared(spark, sf_dir).withColumn(
             "bucket", F.expr(sign_bucket("e"))
+        ),
+    )
+    if planes != N_PLANES:
+        raise ValueError(
+            f"sign-LSH index at {index_dir} was built with {planes} planes "
+            f"but this probe hashes with {N_PLANES} — migrate it in place "
+            f"with simlsh_index_rebuild(spark, index_dir, {N_PLANES}), or "
+            "point the conf at a fresh dir"
         )
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-        )
-        from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-        build_index(
-            spark, index_dir, _SIMLSH_MARKER, N_PLANES, assign, "bucket",
-            n_parts,
-            keymap_key="vec_id" if keymap_enabled(spark) else None,
-        )
-    from bert_etl_spark.operators.index_lifecycle import index_scan
-
     return _lsh_index_columns(index_scan(spark, index_dir))
 
 
 def simlsh_index_ingest(
     spark: SparkSession, batch: DataFrame, index_dir: str
 ) -> int:
-    """Ingest a batch of new vectors into the standing durable sign-LSH
-    index: hash each with the module's deterministic PLANES (unlike the
-    MaxSim quantizer, the hyperplanes are compile-time constants — no
-    codebook artifact to freeze), dedup within the batch and against the
-    index's vec_id column, APPEND survivors into their bucket= dirs.
-    Returns the number of rows ingested. ``batch``: (vec_id, embedding).
-    Completes the sign-LSH lifecycle to parity with the MaxSim index
-    (round-10 ask #3); single-writer vs compact, as everywhere."""
-    from bert_etl_spark.operators.index_lifecycle import ingest_rows, open_index
-
-    marker = open_index(spark, index_dir, _SIMLSH_MARKER, "bucket")
-    if marker is None:
-        raise ValueError(
-            f"no standing sign-LSH index at {index_dir} — build it first "
-            "(set spark.bert_etl.simlsh.indexDir and run "
-            "sim_lsh_index_probe, or call _lsh_bucket_table)"
-        )
-    if marker != N_PLANES:
-        raise ValueError(
-            f"sign-LSH index at {index_dir} was built with {marker} planes "
-            f"but this build hashes with {N_PLANES} — migrate with "
-            f"simlsh_index_rebuild(spark, index_dir, {N_PLANES}) or point "
-            "at a fresh dir"
-        )
-    assigned = (
-        batch.select("vec_id", F.expr(as_double("embedding")).alias("e"))
-        .withColumn("nrm", F.expr(l2_norm("e")))
-        .withColumn("bucket", F.expr(sign_bucket("e")))
-    )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-    return ingest_rows(
-        spark,
-        index_dir,
-        _SIMLSH_MARKER,
-        N_PLANES,
-        assigned,
-        "bucket",
-        min(n_parts, 1 << N_PLANES),
-        keymap=keymap_enabled(spark),
-    )
+    """Ingest new vectors (vec_id, embedding) into the standing durable
+    sign-LSH index, hashed at its stamped plane count; idempotent under
+    re-delivery (index_lifecycle.ingest_rows). Returns rows ingested."""
+    return family_ingest(spark, SIMLSH, batch, index_dir)
 
 
 def simlsh_index_upsert(
     spark: SparkSession, batch: DataFrame, index_dir: str
 ) -> tuple[int, int]:
-    """ivf_index_upsert's sign-LSH twin: re-embedded vectors REPLACE
-    their standing rows (re-hashed with the module's deterministic
-    planes at the index's stamped plane count), fresh keys insert,
-    tombstoned keys resurrect atomically — upsert_rows through the
-    partial-swap protocol. ``batch``: (vec_id, embedding). Returns
-    (n_replaced, n_inserted)."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        keymap_enabled,
-        open_index,
-        upsert_rows,
-    )
-
-    marker = open_index(spark, index_dir, _SIMLSH_MARKER, "bucket")
-    if marker is None:
-        raise ValueError(
-            f"no standing sign-LSH index at {index_dir} — build it first"
-        )
-    assigned = (
-        batch.select("vec_id", F.expr(as_double("embedding")).alias("e"))
-        .withColumn("nrm", F.expr(l2_norm("e")))
-        .withColumn(
-            "bucket",
-            F.expr(sign_bucket("e", planes_for(marker))).cast("int"),
-        )
-    )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return upsert_rows(
-        spark,
-        index_dir,
-        _SIMLSH_MARKER,
-        marker,
-        assigned,
-        "bucket",
-        min(n_parts, 1 << marker),
-        keymap=keymap_enabled(spark),
-    )
+    """Keyed upsert (vec_id, embedding) into the standing sign-LSH index
+    (index_lifecycle.upsert_rows). Returns (n_replaced, n_inserted)."""
+    return family_upsert(spark, SIMLSH, batch, index_dir)
 
 
 def simlsh_index_compact(spark: SparkSession, index_dir: str) -> int:
-    """Compact the grown sign-LSH index back to one file per bucket —
-    maxsim_index_compact's twin through the shared crash-safe protocol
-    (tmp table + pending sentinel + per-bucket swap + re-stamp)."""
-    from bert_etl_spark.functions.markers import read_int_marker
-    from bert_etl_spark.operators.index_lifecycle import compact_index
-
-    if read_int_marker(spark, f"{index_dir}/{_SIMLSH_MARKER}") is None:
-        raise ValueError(
-            f"no standing sign-LSH index at {index_dir} — nothing to compact"
-        )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return compact_index(
-        spark, index_dir, _SIMLSH_MARKER, "bucket", min(n_parts, 1 << N_PLANES)
-    )
+    """Compact the grown sign-LSH index back to one file per bucket,
+    applying pending tombstones (index_lifecycle.compact_index)."""
+    return family_compact(spark, SIMLSH, index_dir)
 
 
 def simlsh_index_delete(
     spark: SparkSession, keys: DataFrame, index_dir: str
 ) -> int:
-    """Tombstone-delete vectors from the standing sign-LSH index — the
-    family's missing delete verb (round-13 'next round' item #5; the
-    ivf/ivfpq twins landed earlier). Logical until the next compact;
-    probes mask immediately. A feed that recorded the bucket at ingest
-    time prunes directly (cross-checked); a BARE-KEY feed (GDPR opt-out
-    — no vector to re-hash) goes through the persisted key→partition map
-    when the index carries one (delete_keys_by_map), falling back to the
-    slim full key scan only for keys the map does not locate."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        delete_keys,
-        delete_keys_by_map,
-    )
-
-    if "bucket" in keys.columns:
-        return delete_keys(
-            spark, index_dir, _SIMLSH_MARKER, N_PLANES, keys,
-            part_col="bucket",
-        )
-    return delete_keys_by_map(
-        spark, index_dir, _SIMLSH_MARKER, N_PLANES, keys, part_col="bucket"
-    )
+    """Tombstone-delete vectors from the standing sign-LSH index: a feed
+    carrying the bucket prunes (cross-checked), a bare-key feed goes
+    through the key→partition map when the index keeps one."""
+    return family_delete(spark, SIMLSH, keys, index_dir)
 
 
 def simlsh_index_stream(
@@ -1223,32 +932,12 @@ def simlsh_index_stream(
     compact_every: int = 0,
     compact_when_tombstones_over: int = 0,
 ):
-    """Always-on ingest of arriving vectors into the standing durable
-    sign-LSH index: readStream of (vec_id, embedding) → foreachBatch →
-    simlsh_index_ingest per micro-batch — maxsim_index_stream's twin.
-    Exactly-once the same way: the anti-join keyed on vec_id makes any
-    replayed/re-delivered batch a no-op, so at-least-once delivery is
-    idempotent at the sink. ``compact_every=N``: in-path compaction on
-    every Nth epoch (0 = external cadence);
-    ``compact_when_tombstones_over=B``: compact on measured pending
-    tombstone bytes (compaction_due). Returns the StreamingQuery."""
-    from bert_etl_spark.operators.index_lifecycle import compaction_due
-
-    spark = stream.sparkSession
-
-    def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        simlsh_index_ingest(spark, batch_df, index_dir)
-        if compaction_due(
-            spark, index_dir, epoch_id, compact_every,
-            compact_when_tombstones_over,
-        ):
-            simlsh_index_compact(spark, index_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Always-on ingest of arriving (vec_id, embedding) rows
+    (foreachBatch → simlsh_index_ingest), compacting in the lane per
+    compaction_due (index_lifecycle.index_stream)."""
+    return index_stream(
+        stream, index_dir, checkpoint_dir, simlsh_index_ingest,
+        simlsh_index_compact, compact_every, compact_when_tombstones_over,
     )
 
 
@@ -1256,147 +945,35 @@ def simlsh_index_rebuild(
     spark: SparkSession, index_dir: str, n_planes: int
 ) -> int:
     """RE-HASH the standing durable sign-LSH index under a NEW plane
-    count, in place — the family's capacity-migration verb. The
-    hyperplanes themselves are compile-time constants (nothing to
-    retrain — maxsim_index_rebuild's docstring), but the plane COUNT is
-    a frozen layout property: 2^p buckets saturate as the index grows
-    (at 100 TB a 16-bucket layout makes every probe scan ~1/16th of the
-    corpus), and until now the marker-mismatch error's only remedy was
-    "point the conf at a fresh dir" — the manual copy the CDC re-bucket
-    verb (cdc_rebucket, streaming/events.py) eliminated for the op log.
-    Same cure here: read the LIVE rows (current partitions minus
-    tombstones — never the corpus table, which would silently drop
-    ingested-only rows, the index_lifecycle module-docstring rule),
-    re-hash every vector with ``planes_for(n_planes)`` (a PREFIX of the
-    old planes when shrinking, a superset when growing), re-partition,
-    and swap through the compaction protocol: tmp sibling + the
-    ``_compact_pending`` sentinel stamped with the NEW plane count (the
-    sentinel value is what finish_compaction_swap re-stamps as the
-    layout marker, so data and marker commit together), a rebuilt
-    ``_keymap`` staged inside tmp when the index carries one, applied
-    tombstone files cleared last. Crash at any step after the sentinel
-    is finished by any reader via open_index; before it, the old layout
-    is untouched. Works in both directions (grow or shrink); rebuilding
-    to the CURRENT count is a plain compact-with-keymap-refresh.
-    Single-writer with ingest/compact, like all maintenance verbs.
-    Returns the rebuilt row count.
+    count, in place — the family's capacity-migration verb: 2^p buckets
+    saturate as the index grows (at 100 TB a 16-bucket layout makes every
+    probe scan ~1/16th of the corpus). Reads the LIVE rows (partitions
+    minus tombstones — never the corpus, which would silently drop
+    ingested-only rows), re-hashes every vector with
+    ``planes_for(n_planes)`` (a PREFIX of the old planes when shrinking,
+    a superset when growing) and commits through commit_rewrite with the
+    NEW count as the sentinel value, so data and marker land together;
+    a crash before the sentinel leaves the old layout untouched, after it
+    any open_index finishes the migration. Rebuilding to the current
+    count is a plain compact with a keymap refresh. Returns the rebuilt
+    row count.
 
     Reference anchor: ETLDataset.update's overwrite-in-place semantics
     (/root/reference/bert/etl/__init__.py:158-164)."""
-    from bert_etl_spark.functions.markers import write_int_marker
-    from bert_etl_spark.operators.index_lifecycle import (
-        KEYMAP_BUCKETS,
-        KEYMAP_DIR,
-        PENDING_SENTINEL,
-        TMP_SUFFIX,
-        apply_tombstones,
-        bucket_layout,
-        finish_compaction_swap,
-        keymap_enabled,
-        open_index,
-    )
-
-    if not 1 <= n_planes <= 24:
+    if n_planes not in SIMLSH.layouts:
         raise ValueError(
             f"n_planes={n_planes} out of range — the bucket id is "
             "1 << n_planes, keep it a sane partition count"
         )
-    if open_index(spark, index_dir, _SIMLSH_MARKER, "bucket") is None:
-        raise ValueError(
-            f"no standing sign-LSH index at {index_dir} — nothing to rebuild"
-        )
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(index_dir).getFileSystem(hconf)
-
-    def _p(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    def _dirs(root, pat):
-        st = fs.globStatus(_p(f"{root}/{pat}"))
-        return [] if st is None else [s.getPath() for s in st]
-
-    # snapshot the tombstone files this rebuild applies (cleared last)
-    tdir = f"{index_dir}/_tombstones"
-    applied = (
-        [
-            f.getPath()
-            for f in fs.listStatus(_p(tdir))
-            if not f.getPath().getName().startswith(("_", "."))
-        ]
-        if fs.exists(_p(tdir))
-        else []
-    )
-    phys = read_with_cached_schema(
-                spark, index_dir, [index_dir], base_path=index_dir
-            )
-    # NOT checkpointed: the live frame executes once, in the rewrite
-    # (the rebuild-verb memory rule — never materialize the full index)
-    live = apply_tombstones(spark, index_dir, phys, "vec_id").select(
-        "vec_id", "e", "nrm"
-    )
-    assigned = live.withColumn(
+    planes = open_family(spark, SIMLSH, index_dir, "rebuild")
+    live, applied = live_rows(spark, index_dir, SIMLSH.key)
+    rows = live.select("vec_id", "e", "nrm").withColumn(
         "bucket", F.expr(sign_bucket("e", planes_for(n_planes))).cast("int")
     )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
+    return family_rewrite(
+        spark, SIMLSH, index_dir, planes, rows, value=n_planes,
+        applied=applied,
     )
-    tmp = f"{index_dir}{TMP_SUFFIX}"
-    # row count rides the rewrite as an observed metric — previously a
-    # full read-back count of the files just written (round-14 batch 4;
-    # reliable_metrics scope per functions/observe.py)
-    from pyspark.sql import Observation
-
-    from bert_etl_spark.functions.observe import reliable_metrics
-
-    n_obs = Observation()
-    with reliable_metrics(spark):
-        (
-            bucket_layout(
-                assigned.observe(n_obs, F.count(F.lit(1)).alias("n")),
-                "bucket",
-                min(n_parts, 1 << n_planes),
-            )
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        n_rows = int(n_obs.get["n"])
-    if keymap_enabled(spark) or fs.exists(_p(f"{index_dir}/{KEYMAP_DIR}")):
-        written = spark.read.option("basePath", tmp).parquet(tmp)
-        (
-            written.select(
-                "vec_id",
-                "bucket",
-                F.pmod(F.xxhash64(F.col("vec_id")), F.lit(KEYMAP_BUCKETS))
-                .cast("int")
-                .alias("kbkt"),
-            )
-            .transform(
-                lambda d: bucket_layout(
-                    d, "kbkt", min(n_parts, KEYMAP_BUCKETS)
-                )
-            )
-            .write.partitionBy("kbkt")
-            .mode("overwrite")
-            .parquet(f"{tmp}/{KEYMAP_DIR}")
-        )
-    tmp_parts = {d.getName() for d in _dirs(tmp, "bucket=*")}
-    stale = [
-        d
-        for d in _dirs(index_dir, "bucket=*")
-        if d.getName() not in tmp_parts
-    ]
-    # COMMIT POINT: tmp complete (data + keymap), sentinel carries the
-    # NEW plane count — the marker finish_compaction_swap re-stamps
-    write_int_marker(spark, f"{index_dir}/{PENDING_SENTINEL}", n_planes)
-    fs.delete(_p(f"{index_dir}/{_SIMLSH_MARKER}"), False)
-    finish_compaction_swap(spark, index_dir, _SIMLSH_MARKER, "bucket")
-    for d in stale:  # buckets the new modulus emptied (or shrink removed)
-        fs.delete(d, True)
-    for f in applied:  # applied tombstones clear LAST (compact rule)
-        fs.delete(f, False)
-    return int(n_rows)
 
 
 # The INDEX-PROBE form of sign-LSH ANN — identical result contract to
@@ -1708,15 +1285,7 @@ def sim_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 IVFPQ_INDEX_DIR_CONF = "spark.bert_etl.ivfpq.indexDir"
-_IVFPQ_MARKER = "_n_centroids"
 _PQ_CODEBOOK_DIR = "_pq_codebook"
-
-
-def _ivfpq_index_dir(spark: SparkSession) -> str | None:
-    try:
-        return spark.conf.get(IVFPQ_INDEX_DIR_CONF, None)
-    except Exception:
-        return None
 
 
 def _pq_codebook_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1770,14 +1339,12 @@ def _pq_codes(pq_rows: list) -> str:
     return "array(" + ", ".join(codes) + ")"
 
 
-def _ivfpq_assign_plan(
-    spark: SparkSession, sf_dir: str, cent_rows: list, pq_rows: list
-) -> DataFrame:
-    """One narrow corpus pass producing the compressed index rows
-    (vec_id, label, cell, codes): coarse argmax + M argmin encodes, all
-    constant-folded — no float vector is stored (the compression IS the
-    index)."""
-    return _prepared(spark, sf_dir).select(
+def _ivfpq_encode(vectors: DataFrame, cent_rows: list, pq_rows: list) -> DataFrame:
+    """The compressed index rows (vec_id, label, cell, codes) of
+    (vec_id, label, e) vectors: coarse argmax + M argmin encodes, all
+    constant-folded into one narrow pass — no float vector is stored
+    (the compression IS the index)."""
+    return vectors.select(
         "vec_id",
         F.col("label").cast("int").alias("label"),
         F.expr(_argmax_cell(cent_rows)).cast("int").alias("cell"),
@@ -1808,149 +1375,69 @@ def _ivfpq_session_index(spark: SparkSession, sf_dir: str) -> str:
     return d
 
 
+def _ivfpq_rows(
+    spark: SparkSession, batch: DataFrame, index_dir: str, layout: int
+) -> DataFrame:
+    """Arrivals (vec_id, embedding[, label]) encoded with the index's own
+    frozen quantizers."""
+    return _ivfpq_encode(
+        batch.select(
+            "vec_id", _arrival_label(batch),
+            F.expr(as_double("embedding")).alias("e"),
+        ),
+        read_codebook(spark, index_dir),
+        read_pq_codebook(spark, index_dir),
+    )
+
+
+IVFPQ = IndexFamily(
+    label="IVF-PQ index", marker="_n_centroids", part_col="cell",
+    key="vec_id", dir_conf=IVFPQ_INDEX_DIR_CONF, layout=N_CENTROIDS,
+    unit="centroids", assign=_ivfpq_rows, keymap=True,
+)
+_IVFPQ_MARKER = IVFPQ.marker
+
+
 def ivfpq_build_or_open(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     """Ensure a standing IVF-PQ index at ``index_dir`` (shared lifecycle:
     open recovers/refuses, build is sentinel-guarded, BOTH quantizers
     freeze in the finalize hook before the marker commits)."""
-    from bert_etl_spark.operators.index_lifecycle import build_index, open_index
 
-    marker = open_index(spark, index_dir, _IVFPQ_MARKER, "cell")
-    if marker is not None and marker != N_CENTROIDS:
-        raise ValueError(
-            f"IVF-PQ index at {index_dir} was built with {marker} "
-            f"centroids but this build quantizes into {N_CENTROIDS} — "
-            "point the conf at a fresh dir or delete the stale index"
+    def _plan() -> DataFrame:
+        cent_rows = sorted(  # driver-side sorts of the bounded codebook
+            _ivf_centroids(spark, sf_dir).collect(), key=lambda r: r["cid"]
+        )  # collects — no range-exchange jobs (batch 6)
+        pq_rows = sorted(
+            _pq_codebook_frame(spark, sf_dir).collect(),
+            key=lambda r: (r["m"], r["cid"]),
         )
-    if marker is not None:
-        return
-    cent_rows = sorted(  # driver-side sorts of the bounded codebook
-        _ivf_centroids(spark, sf_dir).collect(), key=lambda r: r["cid"]
-    )  # collects — no range-exchange jobs (batch 6)
-    pq_rows = sorted(
-        _pq_codebook_frame(spark, sf_dir).collect(),
-        key=lambda r: (r["m"], r["cid"]),
-    )
+        return _ivfpq_encode(_prepared(spark, sf_dir), cent_rows, pq_rows)
 
-    def _freeze():
+    def _freeze() -> None:
         _write_codebook(spark, sf_dir, index_dir, _ivf_centroids(spark, sf_dir))
         _pq_codebook_frame(spark, sf_dir).coalesce(1).write.mode(
             "overwrite"
         ).parquet(f"{index_dir}/{_PQ_CODEBOOK_DIR}")
 
-    from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    build_index(
-        spark,
-        index_dir,
-        _IVFPQ_MARKER,
-        N_CENTROIDS,
-        _ivfpq_assign_plan(spark, sf_dir, cent_rows, pq_rows),
-        "cell",
-        min(n_parts, N_CENTROIDS),
-        finalize=_freeze,
-        keymap_key="vec_id" if keymap_enabled(spark) else None,
-    )
+    build_family(spark, IVFPQ, index_dir, _plan, finalize=_freeze)
 
 
 def ivfpq_index_ingest(spark: SparkSession, batch: DataFrame, index_dir: str) -> int:
-    """Ingest new vectors into the standing IVF-PQ index: assign cell AND
-    codes with the index's own frozen quantizers, then the shared
-    idempotent O(touched-partitions) append. ``batch``: (vec_id,
-    embedding[, label]). Validates via open_index, not a bare marker
-    read: with ivfpq_index_stream(compact_every=N) a crash inside the
-    compaction sentinel window (marker deleted, ``_compact_pending``
-    stamped) must let the REPLAYED epoch finish the swap and re-ingest —
-    a marker-only check would refuse and strand the stream (round-12
-    advice, the 'medium' item; the ivf/maxsim/simlsh ingest verbs
-    already recover this way)."""
-    from bert_etl_spark.operators.index_lifecycle import ingest_rows, open_index
-
-    if open_index(spark, index_dir, _IVFPQ_MARKER, "cell") != N_CENTROIDS:
-        raise ValueError(
-            f"no standing IVF-PQ index at {index_dir} (or a drifted "
-            "layout) — build it first (ivfpq_build_or_open)"
-        )
-    cent_rows = read_codebook(spark, index_dir)
-    pq_rows = read_pq_codebook(spark, index_dir)
-    lbl = (
-        F.col("label").cast("int")
-        if "label" in batch.columns
-        else F.lit(None).cast("int")
-    )
-    assigned = (
-        batch.select("vec_id", lbl.alias("label"), F.col("embedding"))
-        .withColumn("e", F.expr(as_double("embedding")))
-        .select(
-            "vec_id",
-            "label",
-            F.expr(_argmax_cell(cent_rows)).cast("int").alias("cell"),
-            F.expr(_pq_codes(pq_rows)).alias("codes"),
-        )
-    )
-    from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    return ingest_rows(
-        spark,
-        index_dir,
-        _IVFPQ_MARKER,
-        N_CENTROIDS,
-        assigned,
-        "cell",
-        min(n_parts, N_CENTROIDS),
-        keymap=keymap_enabled(spark),
-    )
+    """Ingest new vectors (vec_id, embedding[, label]) into the standing
+    IVF-PQ index: cell and codes from the frozen quantizers, then the
+    shared idempotent O(touched-partitions) append. Returns rows
+    ingested."""
+    return family_ingest(spark, IVFPQ, batch, index_dir)
 
 
 def ivfpq_index_upsert(
     spark: SparkSession, batch: DataFrame, index_dir: str
 ) -> tuple[int, int]:
-    """ivf_index_upsert's codes-at-rest twin, completing upsert parity
-    across all four vector families: re-embedded vectors RE-ENCODE with
-    the index's frozen quantizers (new cell + new PQ codes) and REPLACE
-    their standing rows through the partial-swap protocol; fresh keys
-    insert; tombstoned keys resurrect atomically. ``batch``: (vec_id,
-    embedding[, label]). Returns (n_replaced, n_inserted)."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        keymap_enabled,
-        open_index,
-        upsert_rows,
-    )
-
-    if open_index(spark, index_dir, _IVFPQ_MARKER, "cell") != N_CENTROIDS:
-        raise ValueError(
-            f"no standing IVF-PQ index at {index_dir} (or a drifted "
-            "layout) — build it first (ivfpq_build_or_open)"
-        )
-    cent_rows = read_codebook(spark, index_dir)
-    pq_rows = read_pq_codebook(spark, index_dir)
-    lbl = (
-        F.col("label").cast("int")
-        if "label" in batch.columns
-        else F.lit(None).cast("int")
-    )
-    assigned = (
-        batch.select("vec_id", lbl.alias("label"), F.col("embedding"))
-        .withColumn("e", F.expr(as_double("embedding")))
-        .select(
-            "vec_id",
-            "label",
-            F.expr(_argmax_cell(cent_rows)).cast("int").alias("cell"),
-            F.expr(_pq_codes(pq_rows)).alias("codes"),
-        )
-    )
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    return upsert_rows(
-        spark,
-        index_dir,
-        _IVFPQ_MARKER,
-        N_CENTROIDS,
-        assigned,
-        "cell",
-        min(n_parts, N_CENTROIDS),
-        keymap=keymap_enabled(spark),
-    )
+    """Keyed upsert into the standing IVF-PQ index: re-embedded vectors
+    RE-ENCODE with the frozen quantizers and replace their rows; fresh
+    keys insert; tombstoned keys resurrect atomically. ``batch``:
+    (vec_id, embedding[, label]). Returns (n_replaced, n_inserted)."""
+    return family_upsert(spark, IVFPQ, batch, index_dir)
 
 
 def ivfpq_index_stream(
@@ -1960,167 +1447,88 @@ def ivfpq_index_stream(
     compact_every: int = 0,
     compact_when_tombstones_over: int = 0,
 ):
-    """Always-on ingest of arriving vectors into the standing IVF-PQ
-    index (foreachBatch → ivfpq_index_ingest) — verb parity with the
-    other durable families; idempotent under replay via the shared
-    touched-partition anti-join. ``compact_every=N``: in-path compaction
-    on every Nth epoch (0 = external cadence);
-    ``compact_when_tombstones_over=B``: compact on measured pending
-    tombstone bytes (compaction_due)."""
-    from bert_etl_spark.operators.index_lifecycle import compaction_due
-
-    spark = stream.sparkSession
-
-    def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        ivfpq_index_ingest(spark, batch_df, index_dir)
-        if compaction_due(
-            spark, index_dir, epoch_id, compact_every,
-            compact_when_tombstones_over,
-        ):
-            ivfpq_index_compact(spark, index_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Always-on ingest (foreachBatch → ivfpq_index_ingest), compacting
+    in the lane per compaction_due (index_lifecycle.index_stream)."""
+    return index_stream(
+        stream, index_dir, checkpoint_dir, ivfpq_index_ingest,
+        ivfpq_index_compact, compact_every, compact_when_tombstones_over,
     )
 
 
 def ivfpq_index_delete(spark: SparkSession, keys: DataFrame, index_dir: str) -> int:
     """Tombstone-delete vectors from the standing IVF-PQ index (logical
-    until compact; probes mask immediately — the shared delete verb). A
-    feed that recorded the cell at ingest time prunes directly; a
-    BARE-KEY feed (GDPR opt-out — no vector to re-assign) goes through
-    the persisted key→partition map when the index carries one
-    (delete_keys_by_map), falling back to the slim full key scan only
-    for keys the map does not locate."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        delete_keys,
-        delete_keys_by_map,
-    )
-
-    if "cell" in keys.columns:
-        return delete_keys(
-            spark, index_dir, _IVFPQ_MARKER, N_CENTROIDS, keys,
-            part_col="cell",
-        )
-    return delete_keys_by_map(
-        spark, index_dir, _IVFPQ_MARKER, N_CENTROIDS, keys, part_col="cell"
-    )
+    until compact; probes mask immediately). A feed carrying the cell
+    prunes; a bare-key feed goes through the key→partition map when the
+    index keeps one."""
+    return family_delete(spark, IVFPQ, keys, index_dir)
 
 
 def ivfpq_index_compact(spark: SparkSession, index_dir: str) -> int:
     """Compact the grown IVF-PQ index (applies pending tombstones, one
     file per cell) through the shared crash-safe protocol."""
-    from bert_etl_spark.functions.markers import read_int_marker
-    from bert_etl_spark.operators.index_lifecycle import compact_index
+    return family_compact(spark, IVFPQ, index_dir)
 
-    if read_int_marker(spark, f"{index_dir}/{_IVFPQ_MARKER}") is None:
-        raise ValueError(
-            f"no standing IVF-PQ index at {index_dir} — nothing to compact"
-        )
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    return compact_index(
-        spark, index_dir, _IVFPQ_MARKER, "cell", min(n_parts, N_CENTROIDS)
-    )
+
+def _retrained_codebook(spark: SparkSession, seeds: list) -> tuple:
+    """The coarse quantizer retrained from ``seeds`` (live rows in vec_id
+    order, renumbered densely: cid = rank) and the commit_rewrite stage
+    that writes it as the ``_codebook`` artifact inside tmp. local_frame
+    (one Python slice), not createDataFrame: a coalesce(1) write over a
+    defaultParallelism-sliced local relation pays one Python-worker
+    handshake per slice — measured ~4.5 s per codebook write on
+    local[32] vs ~0.35 s."""
+    from types import SimpleNamespace
+
+    cent_rows = [
+        SimpleNamespace(cid=i, ce=[float(x) for x in s["e"]])
+        for i, s in enumerate(seeds)
+    ]
+
+    def stage(tmp: str) -> None:
+        local_frame(
+            spark,
+            [(r.cid, r.ce) for r in cent_rows],
+            "cid int, ce array<double>",
+        ).write.mode("overwrite").parquet(f"{tmp}/_codebook")
+
+    return cent_rows, stage
 
 
 def ivfpq_index_rebuild(
     spark: SparkSession, index_dir: str, vectors: DataFrame
 ) -> int:
     """RE-TRAIN the standing IVF-PQ index in place, crash-safely — the
-    staleness CURE the round-13 drift audit only detected (round-13
-    'next round' item #1; reference anchor: ``ETLDataset.update``'s
-    overwrite-in-place verb, /root/reference/bert/etl/__init__.py:158-164).
+    staleness CURE the round-13 drift audit only detected (reference
+    anchor: ``ETLDataset.update``'s overwrite-in-place verb,
+    /root/reference/bert/etl/__init__.py:158-164).
 
     Both quantizers re-train with the build's own deterministic rule
-    applied to the index's LIVE rows (current partitions minus pending
-    tombstones — NEVER the corpus table, whose rebuild would silently
-    drop ingested-only rows, the index_lifecycle module-docstring
-    hazard): coarse centroids = the N_CENTROIDS smallest live vec_ids'
-    vectors, PQ codebooks = the PQ_K smallest live vec_ids' subvectors,
-    both renumbered densely (cid = rank) so the position-indexed encoders
-    stay consistent. Every live row re-encodes against the new
-    quantizers and the whole table re-partitions by its new cell.
+    applied to the index's LIVE rows (never the corpus table, whose
+    rebuild would silently drop ingested-only rows): coarse centroids =
+    the N_CENTROIDS smallest live vec_ids' vectors, PQ codebooks = the
+    PQ_K smallest live vec_ids' subvectors, both renumbered densely
+    (cid = rank) so the position-indexed encoders stay consistent. Every
+    live row re-encodes and re-partitions by its new cell.
 
     ``vectors``: the caller's vector source for re-encoding — (vec_id,
-    embedding) rows, e.g. the corpus scan, the vector-store tier the
-    exact-rerank stage already reads, or a union including re-supplied
-    ingest batches. Codes are LOSSY, so true re-training needs true
+    embedding) rows. Codes are LOSSY, so true re-training needs true
     vectors; live keys MISSING from the source are still PRESERVED —
     they re-encode from their RECONSTRUCTED vectors (codeword
-    concatenation via the old codebooks, the standard refine-without-
-    originals fallback) and are reported in the return. Nothing is ever
-    dropped: row count in == row count out, minus nothing.
+    concatenation via the old codebooks) and are reported in a warning.
+    Nothing is ever dropped.
 
-    Crash safety is the compaction protocol with staged artifacts: the
-    re-encoded table lands in the sibling tmp dir together with the NEW
-    ``_codebook``/``_pq_codebook`` (and a rebuilt ``_keymap`` when the
-    index carries one), then the ``_compact_pending`` sentinel commits
-    the whole set — finish_compaction_swap moves partition dirs AND
-    artifact dirs, so data and quantizers can never be observed
-    half-swapped; applied tombstone files clear last (their rows are
-    physically gone only after the swap commits). A crash at any step
-    after the sentinel is finished by any reader via open_index; before
-    the sentinel, the old index is untouched.
-
-    Fresh-build parity, the verb's contract (tests pin it): after
-    rebuild the index equals bit-for-bit what ivfpq_build_or_open would
-    produce over a corpus holding exactly the live rows — while
-    preserving rows a from-scratch rebuild would lose. Operational
-    wiring: run when the drift audit's mean recall falls below
+    Crash safety is commit_rewrite's: the re-encoded table, the NEW
+    ``_codebook``/``_pq_codebook`` (and a rebuilt ``_keymap``) land in
+    tmp and swap in together under one sentinel. Fresh-build parity
+    (tests pin it): after rebuild the index equals what
+    ivfpq_build_or_open would produce over a corpus holding exactly the
+    live rows. Run when the drift audit's mean recall falls below
     ``spark.bert_etl.ivfpq.recallRebuildFloor`` (ivfpq_rebuild_due).
-    Single-writer with ingest/compact, like all maintenance. Returns the
-    rebuilt row count."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        KEYMAP_BUCKETS,
-        KEYMAP_DIR,
-        PENDING_SENTINEL,
-        TMP_SUFFIX,
-        apply_tombstones,
-        bucket_layout,
-        finish_compaction_swap,
-        keymap_enabled,
-        open_index,
-    )
-    from bert_etl_spark.functions.markers import read_int_marker, write_int_marker
-    from bert_etl_spark.functions.release import release
-
-    if open_index(spark, index_dir, _IVFPQ_MARKER, "cell") != N_CENTROIDS:
-        raise ValueError(
-            f"no standing IVF-PQ index at {index_dir} (or a drifted "
-            "layout) — nothing to rebuild"
-        )
+    Returns the rebuilt row count."""
+    layout = open_family(spark, IVFPQ, index_dir, "rebuild")
     old_pq = read_pq_codebook(spark, index_dir)
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(index_dir).getFileSystem(hconf)
-
-    def _p(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    def _dirs(root, pat):
-        st = fs.globStatus(_p(f"{root}/{pat}"))
-        return [] if st is None else [s.getPath() for s in st]
-
-    # snapshot the tombstone files this rebuild applies (cleared last)
-    tdir = f"{index_dir}/_tombstones"
-    applied = (
-        [
-            f.getPath()
-            for f in fs.listStatus(_p(tdir))
-            if not f.getPath().getName().startswith(("_", "."))
-        ]
-        if fs.exists(_p(tdir))
-        else []
-    )
-    phys = read_with_cached_schema(
-                spark, index_dir, [index_dir], base_path=index_dir
-            )
-    live = apply_tombstones(spark, index_dir, phys, "vec_id").select(
-        "vec_id", "label", "codes"
-    )
+    live, applied = live_rows(spark, index_dir, IVFPQ.key)
+    live = live.select("vec_id", "label", "codes")
     src = (
         vectors.select(
             "vec_id", F.expr(as_double("embedding")).alias("e")
@@ -2143,173 +1551,74 @@ def ivfpq_index_rebuild(
         live.join(F.broadcast(src.select("vec_id")), "vec_id", "left_anti")
         .selectExpr("vec_id", "label", f"concat({pieces}) AS e")
     )
-    # NOT checkpointed (the 100 TB memory-hazard rule above): the full
-    # resolve-join executes exactly once — in the rewrite — because the
-    # seeds resolve through a SLIM path: the PQ_K smallest live keys
-    # (TakeOrdered over the key column alone) broadcast into the join.
-    # The unresolved-key count rides the rewrite as an observed metric
-    # on a union-side tag (previously a separate slim anti-join count
-    # job — a second full pass over the live key column at scale;
-    # round-14 session 3). The tag is observed on the write branch only
-    # (the seed TakeOrdered must not complete the Observation with
-    # limit-truncated values) and dropped by the assigned projection.
+    # the full resolve-join executes exactly once — in the rewrite —
+    # because the seeds resolve through a SLIM path: the PQ_K smallest
+    # live keys (TakeOrdered over the key column alone) broadcast into
+    # the join. The unresolved-key count rides the rewrite as an
+    # observed metric on a union-side tag, observed on the write branch
+    # only (the seed TakeOrdered must not complete the Observation with
+    # limit-truncated values) and dropped by the index projection.
     all_rows = resolved.withColumn("_recon", F.lit(0)).unionByName(
         recon.withColumn("_recon", F.lit(1))
     )
-    try:
-        # deterministic retrain: the build's first-N rule over LIVE rows,
-        # renumbered densely (collect is bounded: PQ_K rows)
-        seed_keys = live.select("vec_id").orderBy("vec_id").limit(PQ_K)
-        seeds = (
-            all_rows.join(F.broadcast(seed_keys), "vec_id")
-            .orderBy("vec_id")
-            .limit(PQ_K)
-            .collect()
+    seed_keys = live.select("vec_id").orderBy("vec_id").limit(PQ_K)
+    seeds = (
+        all_rows.join(F.broadcast(seed_keys), "vec_id")
+        .orderBy("vec_id")
+        .limit(PQ_K)
+        .collect()
+    )
+    if len(seeds) < PQ_K:
+        raise ValueError(
+            f"index at {index_dir} holds {len(seeds)} live rows — "
+            f"fewer than the {PQ_K} training seeds a rebuild needs"
         )
-        if len(seeds) < PQ_K:
-            raise ValueError(
-                f"index at {index_dir} holds {len(seeds)} live rows — "
-                f"fewer than the {PQ_K} training seeds a rebuild needs"
-            )
-        cent_rows = [
-            {"cid": i, "ce": [float(x) for x in s["e"]]}
-            for i, s in enumerate(seeds[:N_CENTROIDS])
-        ]
-        from types import SimpleNamespace
+    from types import SimpleNamespace
 
-        cent_rows = [SimpleNamespace(**r) for r in cent_rows]
-        pq_rows = [
-            SimpleNamespace(
-                m=m,
-                cid=i,
-                cw=[float(x) for x in s["e"][m * PQ_DSUB:(m + 1) * PQ_DSUB]],
-            )
-            for m in range(PQ_M)
-            for i, s in enumerate(seeds)
-        ]
-        from pyspark.sql import Observation
-
-        from bert_etl_spark.functions.observe import reliable_metrics
-
-        n_obs = Observation()
-        assigned = all_rows.observe(  # write-branch only: see _recon note
-            n_obs,
-            F.count(F.lit(1)).alias("n"),
-            F.sum("_recon").alias("nrec"),
-        ).select(
-            "vec_id",
-            F.col("label").cast("int").alias("label"),
-            F.expr(_argmax_cell(cent_rows)).cast("int").alias("cell"),
-            F.expr(_pq_codes(pq_rows)).alias("codes"),
+    cent_rows, cb_stage = _retrained_codebook(spark, seeds[:N_CENTROIDS])
+    pq_rows = [
+        SimpleNamespace(
+            m=m,
+            cid=i,
+            cw=[float(x) for x in s["e"][m * PQ_DSUB:(m + 1) * PQ_DSUB]],
         )
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
+        for m in range(PQ_M)
+        for i, s in enumerate(seeds)
+    ]
+    from pyspark.sql import Observation
+
+    rec_obs = Observation()
+    rows = _ivfpq_encode(
+        all_rows.observe(rec_obs, F.sum("_recon").alias("nrec")),
+        cent_rows,
+        pq_rows,
+    )
+
+    def _pq_stage(tmp: str) -> None:
+        local_frame(
+            spark,
+            [(int(r.m), int(r.cid), r.cw) for r in pq_rows],
+            "m int, cid int, cw array<double>",
+        ).write.mode("overwrite").parquet(f"{tmp}/{_PQ_CODEBOOK_DIR}")
+
+    n_rows = family_rewrite(
+        spark, IVFPQ, index_dir, layout, rows, applied=applied,
+        stage=[cb_stage, _pq_stage],
+    )
+    n_recon = int(rec_obs.get["nrec"] or 0)
+    if n_recon:
+        import warnings
+
+        warnings.warn(
+            f"ivfpq_index_rebuild at {index_dir}: {n_recon} live rows "
+            "were missing from the vector source and re-encoded from "
+            "their code reconstructions (preserved, but at the old "
+            "quantization's resolution) — supply their vectors to "
+            "re-encode them exactly",
+            RuntimeWarning,
+            stacklevel=2,
         )
-        tmp = f"{index_dir}{TMP_SUFFIX}"
-        # row count + unresolved-key count via observed metrics on the
-        # rewrite — previously a full read-back count of the written
-        # files (round-14 batch 4) plus a separate slim anti-join count
-        # job (folded here, session 3; reliable_metrics scope per
-        # functions/observe.py)
-        with reliable_metrics(spark):
-            (
-                bucket_layout(
-                    _ivfpq_index_columns(assigned),
-                    "cell",
-                    min(n_parts, N_CENTROIDS),
-                )
-                .write.partitionBy("cell")
-                .mode("overwrite")
-                .parquet(tmp)
-            )
-            row = n_obs.get
-            n_rows = int(row["n"])
-            n_recon = int(row["nrec"] or 0)
-        # stage the NEW quantizers (and keymap) INSIDE tmp: they swap in
-        # with the data under the same sentinel — never half-committed.
-        # local_frame (ONE Python slice), not createDataFrame: a
-        # coalesce(1) write over a defaultParallelism-sliced local
-        # relation iterates every slice sequentially in one task, paying
-        # the Python-worker handshake per slice — measured ~4.5 s per
-        # codebook write on local[32] vs ~0.35 s single-slice.
-        # The three artifact writes are independent (disjoint tmp
-        # subdirs; the main overwrite that wipes tmp has already
-        # committed above) and all strictly precede the sentinel —
-        # overlapped from driver threads (guide §2.6; round-14 batch 5).
-        from bert_etl_spark.functions.overlap import overlap
-
-        def _cb_write() -> None:
-            local_frame(
-                spark,
-                [(int(r.cid), r.ce) for r in cent_rows],
-                "cid int, ce array<double>",
-            ).write.mode("overwrite").parquet(f"{tmp}/_codebook")
-
-        def _pq_write() -> None:
-            local_frame(
-                spark,
-                [(int(r.m), int(r.cid), r.cw) for r in pq_rows],
-                "m int, cid int, cw array<double>",
-            ).write.mode("overwrite").parquet(f"{tmp}/{_PQ_CODEBOOK_DIR}")
-
-        stages = [_cb_write, _pq_write]
-        if keymap_enabled(spark) or fs.exists(_p(f"{index_dir}/{KEYMAP_DIR}")):
-
-            def _km_write() -> None:
-                written = spark.read.option("basePath", tmp).parquet(tmp)
-                (
-                    written.select(
-                        "vec_id",
-                        "cell",
-                        F.pmod(
-                            F.xxhash64(F.col("vec_id")), F.lit(KEYMAP_BUCKETS)
-                        )
-                        .cast("int")
-                        .alias("kbkt"),
-                    )
-                    .transform(
-                        lambda d: bucket_layout(
-                            d, "kbkt", min(n_parts, KEYMAP_BUCKETS)
-                        )
-                    )
-                    .write.partitionBy("kbkt")
-                    .mode("overwrite")
-                    .parquet(f"{tmp}/{KEYMAP_DIR}")
-                )
-
-            stages.append(_km_write)
-        overlap(*stages)
-        tmp_parts = {d.getName() for d in _dirs(tmp, "cell=*")}
-        stale = [
-            d
-            for d in _dirs(index_dir, "cell=*")
-            if d.getName() not in tmp_parts
-        ]
-        # COMMIT POINT: tmp complete (data + quantizers + keymap)
-        write_int_marker(
-            spark, f"{index_dir}/{PENDING_SENTINEL}", N_CENTROIDS
-        )
-        fs.delete(_p(f"{index_dir}/{_IVFPQ_MARKER}"), False)
-        finish_compaction_swap(spark, index_dir, _IVFPQ_MARKER, "cell")
-        for d in stale:  # cells the re-partition emptied
-            fs.delete(d, True)
-        for f in applied:  # applied tombstones clear LAST (compact rule)
-            fs.delete(f, False)
-        if n_recon:
-            import warnings
-
-            warnings.warn(
-                f"ivfpq_index_rebuild at {index_dir}: {n_recon} live rows "
-                "were missing from the vector source and re-encoded from "
-                "their code reconstructions (preserved, but at the old "
-                "quantization's resolution) — supply their vectors to "
-                "re-encode them exactly",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        return int(n_rows)
-    finally:
-        release(all_rows)
+    return n_rows
 
 
 def ivfpq_rebuild_due(spark: SparkSession, recall_df: DataFrame) -> bool:
@@ -2327,216 +1636,61 @@ def ivfpq_rebuild_due(spark: SparkSession, recall_df: DataFrame) -> bool:
 
 
 def _vector_index_rebuild(
-    spark: SparkSession,
-    index_dir: str,
-    marker_name: str,
-    expected: int,
-    n_seeds: int,
-    columns_fn,
+    spark: SparkSession, fam: IndexFamily, index_dir: str, columns_fn
 ) -> int:
     """Shared in-place rebuild for the vector-at-rest families (IVF,
     MaxSim — their rows carry the full vector, so unlike the IVF-PQ
     rebuild no external vector source and no reconstruction fallback are
     needed): re-train the coarse quantizer with the build's deterministic
-    rule over the LIVE rows (the ``n_seeds`` smallest live vec_ids'
+    rule over the LIVE rows (the ``fam.layout`` smallest live vec_ids'
     vectors, renumbered densely so the position-indexed encoder stays
-    consistent), re-assign every live row, re-partition, and swap data +
-    the new ``_codebook`` (+ a rebuilt ``_keymap`` when the index carries
-    one) together under the compaction sentinel — the ivfpq_index_rebuild
-    protocol, minus the PQ stage. Pending tombstones are applied (their
-    files clear last). Returns the rebuilt row count."""
-    from bert_etl_spark.functions.markers import write_int_marker
-    from bert_etl_spark.functions.release import release
-    from bert_etl_spark.operators.index_lifecycle import (
-        KEYMAP_BUCKETS,
-        KEYMAP_DIR,
-        PENDING_SENTINEL,
-        TMP_SUFFIX,
-        apply_tombstones,
-        bucket_layout,
-        finish_compaction_swap,
-        keymap_enabled,
-        open_index,
-    )
-
-    if open_index(spark, index_dir, marker_name, "cell") != expected:
+    consistent), re-assign every live row, and commit data + the new
+    ``_codebook`` (+ a rebuilt ``_keymap``) together through
+    commit_rewrite, applying pending tombstones. Returns the rebuilt row
+    count."""
+    layout = open_family(spark, fam, index_dir, "rebuild")
+    # not checkpointed: the slim seed TakeOrdered and the rewrite each
+    # re-run the columnar scan + broadcast tombstone anti-join instead
+    live, applied = live_rows(spark, index_dir, fam.key)
+    seeds = live.select("vec_id", "e").orderBy("vec_id").limit(
+        layout
+    ).collect()
+    if len(seeds) < layout:
         raise ValueError(
-            f"no standing index at {index_dir} (or a drifted layout) — "
-            "nothing to rebuild"
+            f"index at {index_dir} holds {len(seeds)} live rows — "
+            f"fewer than the {layout} training seeds a rebuild needs"
         )
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(index_dir).getFileSystem(hconf)
-
-    def _p(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    def _dirs(root, pat):
-        st = fs.globStatus(_p(f"{root}/{pat}"))
-        return [] if st is None else [s.getPath() for s in st]
-
-    tdir = f"{index_dir}/_tombstones"
-    applied = (
-        [
-            f.getPath()
-            for f in fs.listStatus(_p(tdir))
-            if not f.getPath().getName().startswith(("_", "."))
-        ]
-        if fs.exists(_p(tdir))
-        else []
+    cent_rows, cb_stage = _retrained_codebook(spark, seeds)
+    rows = columns_fn(
+        live.drop("cell").withColumn(
+            "cell", F.expr(_argmax_cell(cent_rows)).cast("int")
+        )
     )
-    phys = read_with_cached_schema(
-                spark, index_dir, [index_dir], base_path=index_dir
-            )
-    # NOT checkpointed: materializing the full live index into executor
-    # blocks is the memory hazard a 100 TB rebuild cannot afford — the
-    # two actions below (a slim seed TakeOrdered and the rewrite) each
-    # re-run the columnar scan + broadcast tombstone anti-join instead,
-    # the cheap side of that trade at any size
-    live = apply_tombstones(spark, index_dir, phys, "vec_id")
-    try:
-        seeds = live.select("vec_id", "e").orderBy("vec_id").limit(
-            n_seeds
-        ).collect()
-        if len(seeds) < n_seeds:
-            raise ValueError(
-                f"index at {index_dir} holds {len(seeds)} live rows — "
-                f"fewer than the {n_seeds} training seeds a rebuild needs"
-            )
-        from types import SimpleNamespace
-
-        cent_rows = [
-            SimpleNamespace(cid=i, ce=[float(x) for x in s["e"]])
-            for i, s in enumerate(seeds)
-        ]
-        assigned = columns_fn(
-            live.drop("cell").withColumn(
-                "cell", F.expr(_argmax_cell(cent_rows)).cast("int")
-            )
-        )
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-        )
-        tmp = f"{index_dir}{TMP_SUFFIX}"
-        # row count via observed metric on the rewrite — previously a
-        # full read-back count of the written files (round-14 batch 4;
-        # reliable_metrics scope per functions/observe.py)
-        from pyspark.sql import Observation
-
-        from bert_etl_spark.functions.observe import reliable_metrics
-
-        n_obs = Observation()
-        with reliable_metrics(spark):
-            (
-                bucket_layout(
-                    assigned.observe(n_obs, F.count(F.lit(1)).alias("n")),
-                    "cell",
-                    min(n_parts, expected),
-                )
-                .write.partitionBy("cell")
-                .mode("overwrite")
-                .parquet(tmp)
-            )
-            n_rows = int(n_obs.get["n"])
-        # local_frame (one Python slice), not createDataFrame+coalesce:
-        # see ivfpq_index_rebuild — the sliced local relation pays one
-        # Python-worker handshake per slice inside the single write task.
-        # Artifact writes are independent (disjoint underscore subdirs of
-        # the already-written tmp; parquet listing hides them from the
-        # keymap's read) — overlapped pre-sentinel (guide §2.6; batch 5).
-        from bert_etl_spark.functions.overlap import overlap
-
-        def _cb_write() -> None:
-            local_frame(
-                spark,
-                [(int(r.cid), r.ce) for r in cent_rows],
-                "cid int, ce array<double>",
-            ).write.mode("overwrite").parquet(f"{tmp}/_codebook")
-
-        stages = [_cb_write]
-        if keymap_enabled(spark) or fs.exists(_p(f"{index_dir}/{KEYMAP_DIR}")):
-
-            def _km_write() -> None:
-                written = spark.read.option("basePath", tmp).parquet(tmp)
-                (
-                    written.select(
-                        "vec_id",
-                        "cell",
-                        F.pmod(
-                            F.xxhash64(F.col("vec_id")), F.lit(KEYMAP_BUCKETS)
-                        )
-                        .cast("int")
-                        .alias("kbkt"),
-                    )
-                    .transform(
-                        lambda d: bucket_layout(
-                            d, "kbkt", min(n_parts, KEYMAP_BUCKETS)
-                        )
-                    )
-                    .write.partitionBy("kbkt")
-                    .mode("overwrite")
-                    .parquet(f"{tmp}/{KEYMAP_DIR}")
-                )
-
-            stages.append(_km_write)
-        overlap(*stages)
-        tmp_parts = {d.getName() for d in _dirs(tmp, "cell=*")}
-        stale = [
-            d
-            for d in _dirs(index_dir, "cell=*")
-            if d.getName() not in tmp_parts
-        ]
-        # COMMIT POINT: tmp complete (data + codebook + keymap)
-        write_int_marker(spark, f"{index_dir}/{PENDING_SENTINEL}", expected)
-        fs.delete(_p(f"{index_dir}/{marker_name}"), False)
-        finish_compaction_swap(spark, index_dir, marker_name, "cell")
-        for d in stale:
-            fs.delete(d, True)
-        for f in applied:
-            fs.delete(f, False)
-        return int(n_rows)
-    finally:
-        release(live)
+    return family_rewrite(
+        spark, fam, index_dir, layout, rows, applied=applied,
+        stage=[cb_stage],
+    )
 
 
 def ivf_index_rebuild(spark: SparkSession, index_dir: str) -> int:
     """RE-TRAIN the standing single-vector IVF index in place — the
     ivfpq_index_rebuild sibling for the family that stores its vectors
-    AT REST (no external vector source needed: the live rows ARE the
-    training data). New quantizer = the N_CENTROIDS smallest live
-    vec_ids' vectors (the build's first-N rule over the live set, dense
-    renumber); every row re-assigns; data + new ``_codebook`` (+ keymap)
-    swap under one sentinel; tombstones applied. Crash-recoverable at
-    every step via open_index. Run when the quantizer went stale —
-    training rows deleted, or ingest drifted the distribution."""
-    return _vector_index_rebuild(
-        spark,
-        index_dir,
-        _IVF_MARKER,
-        N_CENTROIDS,
-        N_CENTROIDS,
-        _ivf_index_columns,
-    )
+    AT REST (the live rows ARE the training data). New quantizer = the
+    N_CENTROIDS smallest live vec_ids' vectors; every row re-assigns;
+    data + new ``_codebook`` (+ keymap) commit together; tombstones
+    applied. Run when the quantizer went stale — training rows deleted,
+    or ingest drifted the distribution."""
+    return _vector_index_rebuild(spark, IVF, index_dir, _ivf_index_columns)
 
 
 def maxsim_index_rebuild(spark: SparkSession, index_dir: str) -> int:
     """ivf_index_rebuild's multi-vector twin: re-train the MaxSim coarse
     quantizer from the index's own live token vectors (the
-    MAXSIM_IVF_CENTROIDS smallest live vec_ids, dense renumber),
-    re-assign, re-partition, swap — completing rebuild-verb parity for
-    every family whose quantizer can go stale (IVF-PQ round 14, IVF and
-    MaxSim here; sign-LSH's hyperplanes are compile-time constants with
-    nothing to retrain — its capacity move is the plane-count migration,
+    MAXSIM_IVF_CENTROIDS smallest live vec_ids), re-assign, re-partition,
+    commit (sign-LSH's capacity move is the plane-count migration,
     simlsh_index_rebuild; the text index refreshes its stats at the
     fold)."""
-    return _vector_index_rebuild(
-        spark,
-        index_dir,
-        _MAXSIM_MARKER,
-        MAXSIM_IVF_CENTROIDS,
-        MAXSIM_IVF_CENTROIDS,
-        _index_columns,
-    )
+    return _vector_index_rebuild(spark, MAXSIM, index_dir, _index_columns)
 
 
 def _ivfpq_topk(spark: SparkSession, sf_dir: str, index_dir: str) -> DataFrame:
@@ -2567,7 +1721,6 @@ def _ivfpq_adc(
     (vec_id, codes) columns — never a float vector, never the corpus; the
     code explode is x M narrow; the ADC sum is a map-side-combined
     partial agg on (q_id, vec_id) in exact decimals."""
-    from bert_etl_spark.operators.index_lifecycle import index_scan
 
     cent = _codebook_frame(spark, index_dir)
     if cent is None:
@@ -2729,7 +1882,7 @@ def sim_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("q_id", "neighbor_id", "adc_dot", "rn")
         )
 
-    index_dir = _ivfpq_index_dir(spark)
+    index_dir = IVFPQ.index_dir(spark)
     if index_dir:
         ivfpq_build_or_open(spark, sf_dir, index_dir)
         return _probe(index_dir)
@@ -2754,7 +1907,7 @@ def sim_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sim_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    index_dir = _ivfpq_index_dir(spark)
+    index_dir = IVFPQ.index_dir(spark)
     if index_dir:
         ivfpq_build_or_open(spark, sf_dir, index_dir)
         return _ivfpq_topk(spark, sf_dir, index_dir)
@@ -2835,7 +1988,7 @@ def sim_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    index_dir = _ivfpq_index_dir(spark)
+    index_dir = IVFPQ.index_dir(spark)
     if index_dir:
         ivfpq_build_or_open(spark, sf_dir, index_dir)
         return _rerank(index_dir)
@@ -3373,29 +2526,16 @@ SIMLSH_MIGRATE_PLANES = 6
 )
 def sim_lsh_rebuild_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bert_etl_spark.functions.scratch import session_scratch_dir
-    from bert_etl_spark.operators.index_lifecycle import (
-        build_index,
-        index_scan,
-        keymap_enabled,
-        open_index,
-    )
 
     # dedicated scratch replica (mutating query — the isolation rule)
     idx = session_scratch_dir(spark, "lsh_migrate", sf_dir)
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
+    planes = build_family(
+        spark, SIMLSH, idx,
+        lambda: _prepared(spark, sf_dir).withColumn(
+            "bucket", F.expr(sign_bucket("e"))
+        ),
     )
-    marker = open_index(spark, idx, _SIMLSH_MARKER, "bucket")
-    if marker != SIMLSH_MIGRATE_PLANES:
-        if marker is None:
-            assign = _prepared(spark, sf_dir).withColumn(
-                "bucket", F.expr(sign_bucket("e"))
-            )
-            build_index(
-                spark, idx, _SIMLSH_MARKER, N_PLANES, assign, "bucket",
-                min(n_parts, 1 << N_PLANES),
-                keymap_key="vec_id" if keymap_enabled(spark) else None,
-            )
+    if planes != SIMLSH_MIGRATE_PLANES:
         emb = tbl(spark, sf_dir, "embeddings")
         shifted = emb.filter(
             (F.col("vec_id") >= DRIFT_SRC_START)
@@ -3871,14 +3011,35 @@ def _maxsim_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and executor loss — the deployment shape named by _maxsim_assign's
 # docstring since round 9 and by the judge's r9 ask #2.
 MAXSIM_INDEX_DIR_CONF = "spark.bert_etl.maxsim.indexDir"
-_MAXSIM_MARKER = "_n_centroids"
 
 
-def _maxsim_index_dir(spark: SparkSession) -> str | None:
-    try:
-        return spark.conf.get(MAXSIM_INDEX_DIR_CONF, None)
-    except Exception:
-        return None
+def _maxsim_rows(
+    spark: SparkSession, batch: DataFrame, index_dir: str, layout: int
+) -> DataFrame:
+    """Arriving token vectors (vec_id, embedding) as MaxSim index rows,
+    assigned with the quantizer THE INDEX ITSELF carries (the
+    ``_codebook`` frozen at build — the standing corpus need not still
+    contain the centroid vectors, and a side-channel codebook could
+    drift)."""
+    return (
+        batch.select("vec_id", F.expr(as_double("embedding")).alias("e"))
+        .withColumn("nrm", F.expr(l2_norm("e")))
+        .withColumn("doc", F.expr(f"vec_id div {MAXSIM_GROUP}"))
+        .select(
+            "vec_id", "doc", "e", "nrm",
+            F.expr(_argmax_cell(read_codebook(spark, index_dir))).cast("int")
+            .alias("cell"),
+        )
+    )
+
+
+MAXSIM = IndexFamily(
+    label="MaxSim index", marker="_n_centroids", part_col="cell",
+    key="vec_id", dir_conf=MAXSIM_INDEX_DIR_CONF,
+    layout=MAXSIM_IVF_CENTROIDS, unit="centroids", assign=_maxsim_rows,
+    keymap=True,
+)
+_MAXSIM_MARKER = MAXSIM.marker
 
 
 def _codebook_frame(spark: SparkSession, index_dir: str) -> DataFrame | None:
@@ -3938,7 +3099,7 @@ def _maxsim_quantizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the codebook artifact exists to prevent), the first-N corpus scan
     otherwise. Identical values at build time, so the registered
     queries' results don't depend on the mode."""
-    index_dir = _maxsim_index_dir(spark)
+    index_dir = MAXSIM.index_dir(spark)
     if index_dir:
         cb = _codebook_frame(spark, index_dir)
         if cb is not None:
@@ -3978,43 +3139,15 @@ def _maxsim_assign_at_rest(
 
     The build runs the same narrow constant-folded projection as the
     session-lifetime path (one corpus scan, zero joins), repartitioned by
-    cell so each of the |C| partition dirs lands as one file.
+    cell so each of the |C| partition dirs lands as one file; the
+    quantizer is PART OF the index (the finalize hook freezes it as
+    ``_codebook``, the artifact later ingests assign against).
     """
-    from bert_etl_spark.operators.index_lifecycle import build_index, open_index
-
-    marker = open_index(spark, index_dir, _MAXSIM_MARKER, "cell")
-    if marker is not None and marker != MAXSIM_IVF_CENTROIDS:
-        raise ValueError(
-            f"MaxSim index at {index_dir} was built with "
-            f"{marker} centroids but this build quantizes into "
-            f"{MAXSIM_IVF_CENTROIDS} — the quantizer is a persistent "
-            "layout property; point the conf at a fresh dir (or delete "
-            "the stale index to rebuild)"
-        )
-    if marker is None:
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-        )
-        # the quantizer is PART OF the index artifact (the finalize hook):
-        # later ingests must assign with the codebook the table was built
-        # under, and the standing corpus isn't guaranteed to still contain
-        # the centroid vectors (an arrival batch may BE docs 0..k). The
-        # underscore prefix hides the subdir from the root table scan.
-        from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-        build_index(
-            spark,
-            index_dir,
-            _MAXSIM_MARKER,
-            MAXSIM_IVF_CENTROIDS,
-            _maxsim_assign_plan(spark, sf_dir),
-            "cell",
-            n_parts,
-            finalize=lambda: _write_codebook(spark, sf_dir, index_dir),
-            keymap_key="vec_id" if keymap_enabled(spark) else None,
-        )
-    from bert_etl_spark.operators.index_lifecycle import index_scan
-
+    build_family(
+        spark, MAXSIM, index_dir,
+        lambda: _maxsim_assign_plan(spark, sf_dir),
+        finalize=lambda: _write_codebook(spark, sf_dir, index_dir),
+    )
     return _index_columns(index_scan(spark, index_dir))
 
 
@@ -4151,7 +3284,7 @@ def _maxsim_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment scale this table is what you'd write partitionBy(cell) so
     probes prune to P partitions — exactly what the indexDir path does.
     """
-    index_dir = _maxsim_index_dir(spark)
+    index_dir = MAXSIM.index_dir(spark)
     if index_dir:
         return _maxsim_assign_at_rest(spark, sf_dir, index_dir)
     hit = checkpoint_get(spark, "maxsim_ivf_assign", sf_dir)
@@ -4423,183 +3556,41 @@ def sim_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def maxsim_index_ingest(
     spark: SparkSession, batch: DataFrame, index_dir: str
 ) -> int:
-    """Ingest a batch of NEW multi-vector documents into the standing
-    durable MaxSim index: assign each token vector to its cell with the
-    quantizer THE INDEX ITSELF carries (the ``_codebook`` artifact frozen
-    at build time — the standing corpus need not still contain the
-    centroid vectors, and a side-channel codebook could drift),
-    drop token ids already present (anti-join on the index's slim vec_id
-    column: at-least-once producers re-deliver, the reference's ETLState
-    contract is new-items-vs-persisted-index, never blind append), and
-    APPEND the survivors into the cell= partition dirs. Returns the
-    number of token rows ingested.
-
-    ``batch``: (vec_id, embedding array<float|double>) — the raw arrival
-    shape. The marker is validated (and the quantizer loaded) through the
-    normal open path (which also recovers an interrupted compaction), so
-    a mismatched standing index refuses before any write; intra-batch
-    duplicate vec_ids collapse to one row and the marker is re-validated
-    immediately before the append (index_lifecycle.ingest_rows — the
-    single-writer tripwire). Growth math at 100 TB: an append touches
-    only the partitions its batch's cells hash to; probes keep pruning by
-    path; the exact rerank reads the grown table the same way. Compaction
-    of many small per-ingest files is maxsim_index_compact's job,
-    orthogonal here. Single-writer: never run concurrently with a
-    compact (see index_lifecycle's module docstring).
-    """
-    from bert_etl_spark.operators.index_lifecycle import ingest_rows, open_index
-
-    marker = open_index(spark, index_dir, _MAXSIM_MARKER, "cell")
-    if marker is None:
-        raise ValueError(
-            f"no standing MaxSim index at {index_dir} — build it first "
-            "(set spark.bert_etl.maxsim.indexDir and run any MaxSim "
-            "query, or call _maxsim_assign)"
-        )
-    if marker != MAXSIM_IVF_CENTROIDS:
-        raise ValueError(
-            f"MaxSim index at {index_dir} was built with {marker} "
-            f"centroids but this build quantizes into "
-            f"{MAXSIM_IVF_CENTROIDS} — rebuild or point at a fresh dir"
-        )
-    cent_rows = read_codebook(spark, index_dir)
-    prep = batch.select(
-        "vec_id", F.expr(as_double("embedding")).alias("e")
-    ).withColumn("nrm", F.expr(l2_norm("e"))).withColumn(
-        "doc", F.expr(f"vec_id div {MAXSIM_GROUP}")
-    )
-    assigned = prep.select(
-        "vec_id", "doc", "e", "nrm",
-        F.expr(_argmax_cell(cent_rows)).alias("cell"),
-    )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-    return ingest_rows(
-        spark,
-        index_dir,
-        _MAXSIM_MARKER,
-        MAXSIM_IVF_CENTROIDS,
-        assigned,
-        "cell",
-        min(n_parts, MAXSIM_IVF_CENTROIDS),
-        keymap=keymap_enabled(spark),
-    )
+    """Ingest a batch of NEW multi-vector documents (vec_id, embedding)
+    into the standing durable MaxSim index: each token vector assigned
+    with the frozen ``_codebook``, token ids already present dropped
+    (the reference's ETLState contract is new-items-vs-persisted-index,
+    never blind append), survivors APPENDED into their cell= dirs
+    (index_lifecycle.ingest_rows). Returns token rows ingested.
+    Single-writer with compact (index_lifecycle's module docstring)."""
+    return family_ingest(spark, MAXSIM, batch, index_dir)
 
 
 def maxsim_index_upsert(
     spark: SparkSession, batch: DataFrame, index_dir: str
 ) -> tuple[int, int]:
-    """ivf_index_upsert's multi-vector twin: re-embedded token vectors
-    REPLACE their standing rows in place (re-assigned with the index's
-    frozen quantizer), fresh token ids insert, tombstoned ids resurrect
-    atomically — upsert_rows through the partial-swap protocol.
-    ``batch``: (vec_id, embedding). Returns (n_replaced, n_inserted)."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        keymap_enabled,
-        open_index,
-        upsert_rows,
-    )
-
-    marker = open_index(spark, index_dir, _MAXSIM_MARKER, "cell")
-    if marker is None:
-        raise ValueError(
-            f"no standing MaxSim index at {index_dir} — build it first "
-            "(set spark.bert_etl.maxsim.indexDir and run any MaxSim "
-            "query, or call _maxsim_assign)"
-        )
-    if marker != MAXSIM_IVF_CENTROIDS:
-        raise ValueError(
-            f"MaxSim index at {index_dir} was built with {marker} "
-            f"centroids but this build quantizes into "
-            f"{MAXSIM_IVF_CENTROIDS} — rebuild or point at a fresh dir"
-        )
-    cent_rows = read_codebook(spark, index_dir)
-    assigned = (
-        batch.select("vec_id", F.expr(as_double("embedding")).alias("e"))
-        .withColumn("nrm", F.expr(l2_norm("e")))
-        .withColumn("doc", F.expr(f"vec_id div {MAXSIM_GROUP}"))
-        .select(
-            "vec_id", "doc", "e", "nrm",
-            F.expr(_argmax_cell(cent_rows)).cast("int").alias("cell"),
-        )
-    )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return upsert_rows(
-        spark,
-        index_dir,
-        _MAXSIM_MARKER,
-        MAXSIM_IVF_CENTROIDS,
-        assigned,
-        "cell",
-        min(n_parts, MAXSIM_IVF_CENTROIDS),
-        keymap=keymap_enabled(spark),
-    )
+    """Keyed upsert of token vectors (vec_id, embedding) into the
+    standing MaxSim index (index_lifecycle.upsert_rows). Returns
+    (n_replaced, n_inserted)."""
+    return family_upsert(spark, MAXSIM, batch, index_dir)
 
 
 def maxsim_index_compact(spark: SparkSession, index_dir: str) -> int:
-    """Compact a grown MaxSim index (per-ingest appends leave one file
-    per touched cell per batch) back to one file per cell, preserving the
-    partitionBy(cell) layout — the index-aware counterpart of
-    sources.sinks.compact_dataset (which would flatten the partitioning
-    the probes prune on). Returns the compacted row count.
-
-    CRASH-SAFE and RECOVERABLE (round-10 advice, the 'high' item) via the
-    shared protocol in index_lifecycle.compact_index: the compacted table
-    is fully written to a sibling ``_compact_tmp`` dir, a
-    ``_compact_pending`` sentinel carrying the layout value is stamped,
-    only THEN is the marker deleted and the per-cell swap run — so a
-    crash at any later step recovers from the tmp table on the next open
-    (finish_compaction_swap), never by rebuilding from the corpus (which
-    would silently drop ingested documents). Single-writer: never run
-    concurrently with an ingest."""
-    from bert_etl_spark.functions.markers import read_int_marker
-    from bert_etl_spark.operators.index_lifecycle import compact_index
-
-    if read_int_marker(spark, f"{index_dir}/{_MAXSIM_MARKER}") is None:
-        raise ValueError(
-            f"no standing MaxSim index at {index_dir} — nothing to compact"
-        )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return compact_index(
-        spark,
-        index_dir,
-        _MAXSIM_MARKER,
-        "cell",
-        min(n_parts, MAXSIM_IVF_CENTROIDS),
-    )
+    """Compact a grown MaxSim index back to one file per cell,
+    preserving the partitionBy(cell) layout the probes prune on (which
+    sources.sinks.compact_dataset would flatten) and applying pending
+    tombstones, through the crash-safe commit_rewrite. Returns the
+    compacted row count."""
+    return family_compact(spark, MAXSIM, index_dir)
 
 
 def maxsim_index_delete(
     spark: SparkSession, keys: DataFrame, index_dir: str
 ) -> int:
-    """Tombstone-delete token vectors from the standing MaxSim index —
-    the family's missing delete verb (round-13 'next round' item #5).
+    """Tombstone-delete token vectors from the standing MaxSim index.
     ``keys``: any frame with a vec_id column (delete a whole document by
-    offering its MAXSIM_GROUP token ids). A feed carrying the cell
-    prunes directly (cross-checked); a bare-key feed goes through the
-    persisted key→partition map when present, else the slim full key
-    scan — the shared delete_keys contract."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        delete_keys,
-        delete_keys_by_map,
-    )
-
-    if "cell" in keys.columns:
-        return delete_keys(
-            spark, index_dir, _MAXSIM_MARKER, MAXSIM_IVF_CENTROIDS, keys,
-            part_col="cell",
-        )
-    return delete_keys_by_map(
-        spark, index_dir, _MAXSIM_MARKER, MAXSIM_IVF_CENTROIDS, keys,
-        part_col="cell",
-    )
+    offering its MAXSIM_GROUP token ids)."""
+    return family_delete(spark, MAXSIM, keys, index_dir)
 
 
 def maxsim_index_stream(
@@ -4609,41 +3600,14 @@ def maxsim_index_stream(
     compact_every: int = 0,
     compact_when_tombstones_over: int = 0,
 ):
-    """Always-on ingest of arriving multi-vector documents into the
-    standing durable MaxSim index: ``readStream`` of (vec_id, embedding)
-    → foreachBatch → maxsim_index_ingest per micro-batch. The streaming
-    sibling of the LSH band ledger (streaming/events.py) for the
-    similarity family. ``compact_when_tombstones_over=B``: compact on
-    measured pending tombstone bytes (compaction_due), alongside the
-    ``compact_every=N`` epoch cadence.
-
-    Exactly-once WITHOUT epoch bookkeeping: foreachBatch is
-    at-least-once, but ingest's anti-join against the index's vec_id
-    column makes a replayed or re-delivered batch a measured NO-OP (the
-    test pins it), so the sink is idempotent by construction — the same
-    property the ledger buys with epoch=<id> overwrite partitions, here
-    free because the index is keyed by content id rather than
-    accumulating per-epoch emissions. Returns the StreamingQuery; callers
-    await it (availableNow trigger: drain-and-stop, the batch-parity
-    harness shape).
-    """
-    spark = stream.sparkSession
-
-    def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        from bert_etl_spark.operators.index_lifecycle import compaction_due
-
-        maxsim_index_ingest(spark, batch_df, index_dir)
-        if compaction_due(
-            spark, index_dir, epoch_id, compact_every,
-            compact_when_tombstones_over,
-        ):
-            maxsim_index_compact(spark, index_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Always-on ingest of arriving multi-vector documents: ``readStream``
+    of (vec_id, embedding) → foreachBatch → maxsim_index_ingest, compacting
+    in the lane per compaction_due (index_lifecycle.index_stream).
+    Exactly-once WITHOUT epoch bookkeeping: ingest's anti-join makes a
+    replayed batch a measured no-op (the test pins it)."""
+    return index_stream(
+        stream, index_dir, checkpoint_dir, maxsim_index_ingest,
+        maxsim_index_compact, compact_every, compact_when_tombstones_over,
     )
 
 
@@ -4729,7 +3693,7 @@ def sim_maxsim_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr = int(max_vec) // MAXSIM_GROUP - (MAXSIM_INCR_DOCS - 1)
     standing = assign.filter(f"doc < {thr}")
     corpus_assign = standing
-    if _maxsim_index_dir(spark):
+    if MAXSIM.index_dir(spark):
         # durable-index reads arrive as ~1 scan split per 128 MB (64 small
         # cell files coalesce to 1-2 partitions locally), which serializes
         # the rerank's O(batch x candidates x G^2) cosine work on one core
@@ -4824,7 +3788,7 @@ def streaming_maxsim_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr = int(max_vec) // MAXSIM_GROUP - (MAXSIM_INCR_DOCS - 1)
     standing = assign.filter(f"doc < {thr}")
     corpus_assign = standing
-    if _maxsim_index_dir(spark):
+    if MAXSIM.index_dir(spark):
         from bert_etl_spark.operators.registry import spread
 
         corpus_assign = spread(corpus_assign)
@@ -4930,7 +3894,7 @@ def sim_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = _ivf_assign(spark, sf_dir)
     probes = _ivf_probes(
         _prepared(spark, sf_dir).filter(F.col("vec_id") < N_QUERIES),
-        _ivf_quantizer(spark, sf_dir, _ivf_index_dir(spark)),
+        _ivf_quantizer(spark, sf_dir, IVF.index_dir(spark)),
     )
     return _rerank(
         assign.filter(F.col("label").isin(*FILTER_LABELS))
@@ -5191,7 +4155,7 @@ def sim_hybrid_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bert_etl_spark.functions.scratch import session_scratch_dir
 
-    ivf_dir = _ivf_index_dir(spark)
+    ivf_dir = IVF.index_dir(spark)
     tix_dir = None
     try:
         tix_dir = spark.conf.get(_TIX_CONF, None)
@@ -5582,7 +4546,7 @@ def sim_mmr_batch_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema="q_id long, id long, mmr_rank int, mmr_score double",
         )
 
-    index_dir = _ivfpq_index_dir(spark)
+    index_dir = IVFPQ.index_dir(spark)
     if index_dir:
         ivfpq_build_or_open(spark, sf_dir, index_dir)
         return _diversify(index_dir)

@@ -21,7 +21,16 @@ from pyspark.sql import functions as F
 
 from bert_etl_spark.functions.deterministic import dsum, sql_dsum
 from bert_etl_spark.functions.localdf import local_frame
-from bert_etl_spark.operators.index_lifecycle import read_with_cached_schema
+from bert_etl_spark.operators.index_lifecycle import (
+    IndexFamily,
+    build_family,
+    family_compact,
+    family_delete,
+    family_ingest,
+    family_upsert,
+    index_stream,
+    read_with_cached_schema,
+)
 from bert_etl_spark.operators.dedup import shingles_df, tokenize
 from bert_etl_spark.operators.registry import persist_once, query, spread, tbl
 
@@ -1191,7 +1200,7 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``spark.bert_etl.textidx.indexDir`` set, scores come off the durable
     posting index (partition-pruned probe, zero corpus access — see
     bm25_scores_indexed below); otherwise one corpus pass."""
-    index_dir = _textidx_dir(spark)
+    index_dir = TEXTIDX.index_dir(spark)
     if index_dir:
         return bm25_scores_indexed(spark, sf_dir, index_dir)
     docs = tbl(spark, sf_dir, "documents")
@@ -1303,13 +1312,6 @@ def _textidx_legacy_check(spark: SparkSession, index_dir: str) -> None:
             )
 
 
-def _textidx_dir(spark: SparkSession) -> str | None:
-    try:
-        return spark.conf.get(TEXTIDX_DIR_CONF, None)
-    except Exception:
-        return None
-
-
 def _token_bucket(token: str) -> str:
     """SQL text of the posting bucket of ``token`` (a column name or a
     string literal). Over constant query terms it folds to a constant,
@@ -1352,17 +1354,30 @@ def _postings_plan(docs: DataFrame) -> DataFrame:
     )
 
 
-def _write_collection_stats(spark: SparkSession, index_dir: str) -> None:
-    """Freeze (n_docs, avgdl) from the postings just written."""
-    table = read_with_cached_schema(
-            spark, index_dir, [index_dir], base_path=index_dir
-        )
+TEXTIDX = IndexFamily(
+    label="text index", marker=_TEXTIDX_MARKER, part_col="bucket",
+    key="doc_id", dir_conf=TEXTIDX_DIR_CONF, layout=TEXTIDX_BUCKETS,
+    unit="buckets", assign=lambda spark, docs, index_dir, layout: (
+        _postings_plan(docs)
+    ),
+    row_key="pkey",
+)
+
+
+def _write_collection_stats(
+    spark: SparkSession, table_dir: str, table: DataFrame | None = None
+) -> None:
+    """Freeze (n_docs, avgdl) of the postings table at ``table_dir``
+    into its ``_collection_stats`` artifact — at build over the index,
+    at a refresh-compact over the tmp rewrite the stats swap in with."""
+    if table is None:
+        table = spark.read.option("basePath", table_dir).parquet(table_dir)
     stats = table.select("doc_id", "dl").distinct().agg(
         F.count("*").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
     )
     stats.coalesce(1).write.mode("overwrite").parquet(
-        f"{index_dir}/{_STATS_DIR}"
+        f"{table_dir}/{_STATS_DIR}"
     )
 
 
@@ -1375,33 +1390,26 @@ def read_collection_stats(spark: SparkSession, index_dir: str) -> DataFrame:
 
 
 def _textidx_open_or_build(
-    spark: SparkSession, sf_dir: str, index_dir: str
+    spark: SparkSession,
+    sf_dir: str,
+    index_dir: str,
+    docs: DataFrame | None = None,
 ) -> None:
-    from bert_etl_spark.operators.index_lifecycle import build_index, open_index
-
+    """Open the standing text index, or build it from ``docs`` (default:
+    the whole documents table) with its collection stats frozen."""
     _textidx_legacy_check(spark, index_dir)
-    marker = open_index(spark, index_dir, _TEXTIDX_MARKER, "bucket")
-    if marker is not None and marker != TEXTIDX_BUCKETS:
-        raise ValueError(
-            f"text index at {index_dir} was built with {marker} buckets "
-            f"but this build hashes into {TEXTIDX_BUCKETS} — the bucket "
-            "modulus is a persistent layout property; point the conf at a "
-            "fresh dir or delete the stale index"
-        )
-    if marker is None:
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-        )
-        build_index(
-            spark,
-            index_dir,
-            _TEXTIDX_MARKER,
-            TEXTIDX_BUCKETS,
-            _postings_plan(tbl(spark, sf_dir, "documents")),
-            "bucket",
-            min(n_parts, TEXTIDX_BUCKETS),
-            finalize=lambda: _write_collection_stats(spark, index_dir),
-        )
+    build_family(
+        spark, TEXTIDX, index_dir,
+        lambda: _postings_plan(
+            tbl(spark, sf_dir, "documents") if docs is None else docs
+        ),
+        finalize=lambda: _write_collection_stats(
+            spark, index_dir,
+            read_with_cached_schema(
+                spark, index_dir, [index_dir], base_path=index_dir
+            ),
+        ),
+    )
 
 
 def textidx_ingest(
@@ -1410,72 +1418,24 @@ def textidx_ingest(
     """Append NEW documents' postings into the standing text index —
     idempotent on pkey (re-delivered docs re-offer identical posting
     rows; the anti-join drops them). Collection statistics stay FROZEN at
-    build time (the _codebook contract): new docs are scored with
-    build-time idf/avgdl until a rebuild. ``batch_docs``: (doc_id, text).
-    Validates via open_index so a textidx_stream(compact_every=N) epoch
-    replayed after a crash inside the compaction sentinel window finishes
-    the interrupted swap instead of refusing (round-12 advice — the same
-    recovery the dense families' ingest verbs already run)."""
-    from bert_etl_spark.operators.index_lifecycle import ingest_rows, open_index
-
+    build time (the _codebook contract) until a refresh-compact.
+    ``batch_docs``: (doc_id, text)."""
     _textidx_legacy_check(spark, index_dir)
-    if open_index(spark, index_dir, _TEXTIDX_MARKER, "bucket") is None:
-        raise ValueError(
-            f"no standing text index at {index_dir} — build it first"
-        )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return ingest_rows(
-        spark,
-        index_dir,
-        _TEXTIDX_MARKER,
-        TEXTIDX_BUCKETS,
-        _postings_plan(batch_docs),
-        "bucket",
-        min(n_parts, TEXTIDX_BUCKETS),
-        key="pkey",
-    )
+    return family_ingest(spark, TEXTIDX, batch_docs, index_dir)
 
 
 def textidx_upsert(
     spark: SparkSession, docs: DataFrame, index_dir: str
 ) -> tuple[int, int]:
-    """Re-ingest CHANGED documents atomically — the multi-row form of
-    the keyed upsert (upsert_rows, multi_rows=True): a document's OLD
-    postings, across every token bucket they occupy, are replaced by
-    the new text's postings in ONE partial swap; fresh doc_ids insert;
-    a tombstoned doc resurrects atomically (the filtered ``_tombstones``
-    swaps as an artifact). This closes the text index's update gap: a
-    changed document previously needed delete → full compact →
-    re-ingest, with the doc invisible in between. Touched buckets =
-    (buckets holding the doc's old postings, from the slim
-    doc_id+bucket scan) ∪ (the new postings' buckets) — bounded by the
-    batch's token diversity, not the index. Collection stats stay
-    FROZEN (the _codebook contract; refresh at the fold via
-    textidx_compact(refresh_stats=True)). ``docs``: (doc_id, text).
-    Returns (n_docs_replaced, n_docs_inserted)."""
-    from bert_etl_spark.operators.index_lifecycle import open_index, upsert_rows
-
+    """Re-ingest CHANGED documents atomically — the multi-row keyed
+    upsert (upsert_rows, multi_rows=True): a document's OLD postings,
+    across every token bucket they occupy, are replaced by the new
+    text's postings in ONE partial swap; fresh doc_ids insert; a
+    tombstoned doc resurrects atomically. Collection stats stay FROZEN
+    (refresh at the fold via textidx_compact(refresh_stats=True)).
+    ``docs``: (doc_id, text). Returns (n_docs_replaced, n_docs_inserted)."""
     _textidx_legacy_check(spark, index_dir)
-    if open_index(spark, index_dir, _TEXTIDX_MARKER, "bucket") is None:
-        raise ValueError(
-            f"no standing text index at {index_dir} — build it first"
-        )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return upsert_rows(
-        spark,
-        index_dir,
-        _TEXTIDX_MARKER,
-        TEXTIDX_BUCKETS,
-        _postings_plan(docs),
-        "bucket",
-        min(n_parts, TEXTIDX_BUCKETS),
-        key="doc_id",
-        multi_rows=True,
-    )
+    return family_upsert(spark, TEXTIDX, docs, index_dir)
 
 
 def textidx_delete(
@@ -1484,13 +1444,8 @@ def textidx_delete(
     """Tombstone whole documents out of the text index (one tombstone per
     doc_id masks every posting of the doc; compaction drops them
     physically). ``doc_keys``: any frame with a doc_id column."""
-    from bert_etl_spark.operators.index_lifecycle import delete_keys
-
     _textidx_legacy_check(spark, index_dir)
-    return delete_keys(
-        spark, index_dir, _TEXTIDX_MARKER, TEXTIDX_BUCKETS, doc_keys,
-        key="doc_id",
-    )
+    return family_delete(spark, TEXTIDX, doc_keys, index_dir)
 
 
 def textidx_compact(
@@ -1501,45 +1456,19 @@ def textidx_compact(
 
     ``refresh_stats=True`` also RECOMPUTES the frozen collection
     statistics (n_docs, avgdl — the BM25 idf/avgdl inputs stamped at
-    build) from the postings this compaction is already rewriting, and
-    swaps them in under the SAME ``_compact_pending`` sentinel as the
-    data (staged inside the tmp table; finish_compaction_swap moves
-    artifact dirs) — stats refresh and rewrite commit together or not at
-    all. This is the staleness cure for an ingest-heavy index whose
-    scores drift away from a fresh build (round-13 'next round' item #2):
-    the fold is the natural refresh point, mirroring the CDC design —
-    scores computed after a refresh-compact equal a fresh full-corpus
-    build's exactly (tests pin that). Default False keeps the documented
-    frozen-stats contract for callers that want build-time
-    reproducibility."""
-    from bert_etl_spark.operators.index_lifecycle import compact_index
-
+    build) from the rewritten postings, staged inside tmp so they swap
+    in under the SAME ``_compact_pending`` sentinel as the data — the
+    staleness cure for an ingest-heavy index: scores after a
+    refresh-compact equal a fresh full-corpus build's exactly (tests pin
+    that). Default False keeps the frozen-stats contract for callers
+    that want build-time reproducibility."""
     _textidx_legacy_check(spark, index_dir)
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-
-    def _refresh(tmp_dir: str) -> None:
-        # stats from the POST-tombstone rewrite the swap is about to
-        # commit — one distinct-doc aggregate over the slim (doc_id, dl)
-        # projection of the tmp table
-        table = spark.read.option("basePath", tmp_dir).parquet(tmp_dir)
-        stats = table.select("doc_id", "dl").distinct().agg(
-            F.count("*").alias("n_docs"),
-            (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-        )
-        stats.coalesce(1).write.mode("overwrite").parquet(
-            f"{tmp_dir}/{_STATS_DIR}"
-        )
-
-    return compact_index(
-        spark,
-        index_dir,
-        _TEXTIDX_MARKER,
-        "bucket",
-        min(n_parts, TEXTIDX_BUCKETS),
-        key="doc_id",
-        finalize_tmp=_refresh if refresh_stats else None,
+    return family_compact(
+        spark, TEXTIDX, index_dir,
+        finalize_tmp=(
+            (lambda tmp: _write_collection_stats(spark, tmp))
+            if refresh_stats else None
+        ),
     )
 
 
@@ -1633,27 +1562,15 @@ def text_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_bm25_indexed_refreshed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bert_etl_spark.functions.scratch import session_scratch_dir
     from bert_etl_spark.operators.global_order import rank_bounded
-    from bert_etl_spark.operators.index_lifecycle import build_index, open_index
 
     # a DEDICATED scratch replica (this query MUTATES its index via
     # ingest + compact — never the shared textidx_demo dir, the
     # sim_ivfpq_recall_drift isolation rule)
     index_dir = session_scratch_dir(spark, "textidx_refresh", sf_dir)
     docs = tbl(spark, sf_dir, "documents")
-    if open_index(spark, index_dir, _TEXTIDX_MARKER, "bucket") is None:
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-        )
-        build_index(
-            spark,
-            index_dir,
-            _TEXTIDX_MARKER,
-            TEXTIDX_BUCKETS,
-            _postings_plan(docs.filter(F.col("doc_id") % 2 == 0)),
-            "bucket",
-            min(n_parts, TEXTIDX_BUCKETS),
-            finalize=lambda: _write_collection_stats(spark, index_dir),
-        )
+    _textidx_open_or_build(
+        spark, sf_dir, index_dir, docs.filter(F.col("doc_id") % 2 == 0)
+    )
     # grow the corpus past the frozen stats, then refresh at the fold.
     # Re-runs are no-ops end to end: the ingest anti-join drops every
     # re-offered posting and the refresh recomputes identical stats.
@@ -1738,37 +1655,18 @@ def textidx_stream(
     compact_when_tombstones_over: int = 0,
     refresh_stats_on_compact: bool = False,
 ):
-    """Always-on document ingest into the standing text index
-    (foreachBatch → textidx_ingest) — verb parity with the dense
-    families' *_stream siblings. Exactly-once at the sink via the pkey
-    anti-join (a re-delivered document re-offers identical posting rows,
-    all dropped). ``compact_every=N``: in-path compaction on every Nth
-    epoch (0 = external cadence); ``compact_when_tombstones_over=B``:
-    compact on measured pending tombstone bytes (compaction_due).
+    """Always-on document ingest (foreachBatch → textidx_ingest), compacting
+    in the lane per compaction_due (index_lifecycle.index_stream).
     ``refresh_stats_on_compact=True``: every in-path compaction also
-    recomputes the frozen collection stats from the postings it rewrites
-    (textidx_compact's refresh — the always-on cure for BM25 staleness
-    under ingest; the fold is the natural refresh point).
+    recomputes the frozen collection stats (textidx_compact's refresh —
+    the always-on cure for BM25 staleness under ingest).
     ``stream``: rows (doc_id, text)."""
-    from bert_etl_spark.operators.index_lifecycle import compaction_due
-
-    spark = stream.sparkSession
-
-    def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        textidx_ingest(spark, batch_df, index_dir)
-        if compaction_due(
-            spark, index_dir, epoch_id, compact_every,
-            compact_when_tombstones_over,
-        ):
-            textidx_compact(
-                spark, index_dir, refresh_stats=refresh_stats_on_compact
-            )
-
-    return (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return index_stream(
+        stream, index_dir, checkpoint_dir, textidx_ingest,
+        lambda spark, d: textidx_compact(
+            spark, d, refresh_stats=refresh_stats_on_compact
+        ),
+        compact_every, compact_when_tombstones_over,
     )
 
 
@@ -1977,7 +1875,7 @@ def _phrase_count_indexed(n_terms: int) -> str:
 def text_phrase_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bert_etl_spark.functions.scratch import session_scratch_dir
 
-    index_dir = _textidx_dir(spark) or session_scratch_dir(
+    index_dir = TEXTIDX.index_dir(spark) or session_scratch_dir(
         spark, "textidx_demo", sf_dir
     )
     pp = _positional_postings(spark, sf_dir, index_dir, PHRASE_TERMS)
@@ -2009,7 +1907,7 @@ def text_proximity_search_indexed(
 ) -> DataFrame:
     from bert_etl_spark.functions.scratch import session_scratch_dir
 
-    index_dir = _textidx_dir(spark) or session_scratch_dir(
+    index_dir = TEXTIDX.index_dir(spark) or session_scratch_dir(
         spark, "textidx_demo", sf_dir
     )
     pp = _positional_postings(spark, sf_dir, index_dir, PHRASE_TERMS)
@@ -2053,7 +1951,7 @@ def text_phrase3_search_indexed(
 ) -> DataFrame:
     from bert_etl_spark.functions.scratch import session_scratch_dir
 
-    index_dir = _textidx_dir(spark) or session_scratch_dir(
+    index_dir = TEXTIDX.index_dir(spark) or session_scratch_dir(
         spark, "textidx_demo", sf_dir
     )
     pp = _positional_postings(spark, sf_dir, index_dir, PHRASE3_TERMS)

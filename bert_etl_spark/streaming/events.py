@@ -1232,169 +1232,66 @@ def _cdc_log_files(spark: SparkSession, state_dir: str) -> int:
 
 def cdc_compact_state(spark: SparkSession, state_dir: str) -> int:
     """Fold the op log to its current argmax rows (one per key, op='D'
-    tombstones kept), through the shared crash-safe swap protocol.
-    Returns the folded row count. Single-writer with the apply stream,
-    like all maintenance — the in-path ``compact_every`` /
-    ``compact_when_log_files_over`` cadence satisfies that by
-    construction. Opens via open_index (not a bare marker read), so a
-    STANDALONE maintenance call after a crash mid-fold (sentinel stamped,
-    marker deleted) finishes the interrupted swap the way
-    latest_cdc_state/cdc_apply_stream do, instead of refusing (round-13
-    advice, 'low' item). The fold RE-COMPUTES ``bkt`` from the key
+    tombstones kept), through the shared rewrite commit
+    (index_lifecycle.commit_rewrite). Returns the folded row count.
+    Single-writer with the apply stream, like all maintenance — the
+    in-path ``compact_every`` / ``compact_when_log_files_over`` cadence
+    satisfies that by construction. Opens via open_index, so a
+    STANDALONE call after a crash mid-fold finishes the interrupted swap
+    instead of refusing. The fold RE-COMPUTES ``bkt`` from the key
     instead of trusting the stored partition value — self-healing for any
-    row a crashed re-bucket left under a stale modulus dir (cdc_rebucket
-    docstring), and free for the normal case where the values agree."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        PENDING_SENTINEL,
-        TMP_SUFFIX,
-        bucket_layout,
-        finish_compaction_swap,
-        open_index,
-    )
-
-    nb = open_index(spark, state_dir, CDC_MARKER, "bkt")
-    if nb is None:
-        raise ValueError(f"no applied CDC state under {state_dir}")
-    log = _cdc_read_log(spark, state_dir)
-    if log is None:
-        return 0  # stamped-but-empty state: nothing to fold
-    folded = _cdc_argmax(log).withColumn("bkt", _cdc_bucket(nb))
-    tmp = f"{state_dir}{TMP_SUFFIX}"
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    # the folded row count rides the tmp write as an observed metric —
-    # previously a full read-back count of the files just written
-    # (round-14 batch 4; reliable_metrics scope per functions/observe.py)
-    from pyspark.sql import Observation
-
-    from bert_etl_spark.functions.observe import reliable_metrics
-
-    fold_obs = Observation()
-    with reliable_metrics(spark):
-        (
-            bucket_layout(
-                folded.observe(fold_obs, F.count(F.lit(1)).alias("n")),
-                "bkt",
-                min(n_parts, nb),
-            )
-            .write.partitionBy("bkt")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        n_rows = int(fold_obs.get["n"])
-    # COMMIT POINT: tmp complete. Under a settled modulus the fold keeps
-    # one row per key (D rows included), so every bucket holding data
-    # keeps a tmp counterpart — the stale set below is empty. It is
-    # non-empty only when healing a crashed re-bucket (old-modulus dirs
-    # whose rows the recomputed fold moved elsewhere): those dirs hold
-    # pure duplicates, masked by the argmax until deleted here.
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(state_dir).getFileSystem(hconf)
-
-    def _bkt_dirs(root: str):
-        st = fs.globStatus(jvm.org.apache.hadoop.fs.Path(f"{root}/bkt=*"))
-        return [] if st is None else [s.getPath() for s in st]
-
-    tmp_parts = {d.getName() for d in _bkt_dirs(tmp)}
-    stale = [d for d in _bkt_dirs(state_dir) if d.getName() not in tmp_parts]
-    write_int_marker(spark, f"{state_dir}/{PENDING_SENTINEL}", nb)
-    mp = jvm.org.apache.hadoop.fs.Path(f"{state_dir}/{CDC_MARKER}")
-    fs.delete(mp, False)
-    finish_compaction_swap(spark, state_dir, CDC_MARKER, "bkt")
-    for d in stale:  # duplicates, argmax-masked until physically gone
-        fs.delete(d, True)
-    return int(n_rows)
+    row a crashed re-bucket left under a stale modulus dir (the commit
+    deletes those dirs), and free when the values agree."""
+    return _cdc_rewrite(spark, state_dir, None)
 
 
 def cdc_rebucket(spark: SparkSession, state_dir: str, new_n_buckets: int) -> int:
     """Migrate the CDC state to a NEW bucket modulus, in place: fold the
     op log to its argmax rows (cdc_compact_state semantics — op='D'
     tombstones kept), re-hash ``bkt = xxhash64(k) mod new_n_buckets``,
-    and rewrite through the shared crash-safe swap protocol. Returns the
-    migrated row count. This is the growth verb the frozen-at-first-
-    contact modulus needs: at 100 TB a 64-bucket layout saturates
-    point-lookup pruning (SCALING.md's 1000-key row), and until now the
-    only cure was a manual copy (the error in cdc_apply_stream used to
-    say 'compact into a fresh dir' — round-13 'next round' item #3).
+    and rewrite through the shared commit with the NEW modulus as the
+    sentinel value. Returns the migrated row count. This is the growth
+    verb the frozen-at-first-contact modulus needs: at 100 TB a 64-bucket
+    layout saturates point-lookup pruning (SCALING.md's 1000-key row).
 
-    Crash safety, step by step: the full re-hashed table lands in the
-    sibling tmp dir FIRST; the ``_compact_pending`` sentinel then carries
-    the NEW modulus; the old marker is deleted; finish_compaction_swap
-    moves the new ``bkt=`` dirs in and re-stamps the marker with the NEW
-    value; finally the OLD-modulus dirs with no new-name counterpart are
-    deleted. A crash before the sentinel leaves the old marker intact
-    (open_index clears the partial tmp); a crash after it is finished by
-    any reader/apply via open_index, which re-stamps the NEW marker — the
-    not-yet-deleted old-modulus dirs then hold pure DUPLICATES of rows
-    the rewrite placed under their new buckets, masked by every reader's
-    per-key argmax, and the next cdc_compact_state (whose fold re-hashes
-    ``bkt`` and deletes stale dirs) removes them physically. Readers are
-    correct in every window. Single-writer with the apply stream, like
-    all maintenance."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        PENDING_SENTINEL,
-        TMP_SUFFIX,
-        bucket_layout,
-        finish_compaction_swap,
-        open_index,
-    )
-
+    Crash safety: a crash before the sentinel leaves the old marker
+    intact (open_index clears the partial tmp); a crash after it is
+    finished by any reader/apply via open_index, which re-stamps the NEW
+    marker — the not-yet-deleted old-modulus dirs then hold pure
+    DUPLICATES of rows the rewrite placed under their new buckets,
+    masked by every reader's per-key argmax, and the next
+    cdc_compact_state removes them physically. Readers are correct in
+    every window. Single-writer with the apply stream."""
     new_nb = int(new_n_buckets)
     if new_nb < 1:
         raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
+    return _cdc_rewrite(spark, state_dir, new_nb)
+
+
+def _cdc_rewrite(spark: SparkSession, state_dir: str, new_nb: int | None) -> int:
+    """Fold the op log into ``new_nb`` buckets (None: the standing
+    modulus) through commit_rewrite."""
+    from bert_etl_spark.operators.index_lifecycle import commit_rewrite, open_index
+
     nb = open_index(spark, state_dir, CDC_MARKER, "bkt")
     if nb is None:
         raise ValueError(f"no applied CDC state under {state_dir}")
+    value = nb if new_nb is None else new_nb
     log = _cdc_read_log(spark, state_dir)
     if log is None:
-        # stamped-but-empty state: the modulus is the only thing to
-        # migrate — re-stamp it (atomic rename) and done
-        write_int_marker(spark, f"{state_dir}/{CDC_MARKER}", new_nb)
+        # stamped-but-empty state: nothing to fold; the modulus is the
+        # only thing to migrate — re-stamp it (atomic rename)
+        if value != nb:
+            write_int_marker(spark, f"{state_dir}/{CDC_MARKER}", value)
         return 0
-    folded = _cdc_argmax(log).withColumn("bkt", _cdc_bucket(new_nb))
-    tmp = f"{state_dir}{TMP_SUFFIX}"
     n_parts = int(
         spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
     )
-    # migrated row count via observed metric on the tmp write — the
-    # cdc_compact_state shape (round-14 batch 4)
-    from pyspark.sql import Observation
-
-    from bert_etl_spark.functions.observe import reliable_metrics
-
-    mig_obs = Observation()
-    with reliable_metrics(spark):
-        (
-            bucket_layout(
-                folded.observe(mig_obs, F.count(F.lit(1)).alias("n")),
-                "bkt",
-                min(n_parts, new_nb),
-            )
-            .write.partitionBy("bkt")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        n_rows = int(mig_obs.get["n"])
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(state_dir).getFileSystem(hconf)
-
-    def _bkt_dirs(root: str):
-        st = fs.globStatus(jvm.org.apache.hadoop.fs.Path(f"{root}/bkt=*"))
-        return [] if st is None else [s.getPath() for s in st]
-
-    tmp_parts = {d.getName() for d in _bkt_dirs(tmp)}
-    stale = [d for d in _bkt_dirs(state_dir) if d.getName() not in tmp_parts]
-    # COMMIT POINT: tmp complete — the sentinel carries the NEW modulus,
-    # so recovery from here lands the migrated layout
-    write_int_marker(spark, f"{state_dir}/{PENDING_SENTINEL}", new_nb)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{state_dir}/{CDC_MARKER}"), False)
-    finish_compaction_swap(spark, state_dir, CDC_MARKER, "bkt")
-    for d in stale:  # old-modulus dirs: duplicates, argmax-masked
-        fs.delete(d, True)
-    return int(n_rows)
+    return commit_rewrite(
+        spark, state_dir, CDC_MARKER, "bkt", nb,
+        _cdc_argmax(log).withColumn("bkt", _cdc_bucket(value)),
+        min(n_parts, value), value=value,
+    )
 
 
 def cdc_apply_stream(

@@ -448,43 +448,6 @@ def test_simlsh_rebuild_migrates_plane_count(spark, tmp_path):
         spark.conf.unset(life.KEYMAP_CONF)
 
 
-def test_simlsh_rebuild_crash_mid_swap_recovers(spark, tmp_path, monkeypatch):
-    """A crash inside the sentinel window (tmp complete, sentinel stamped
-    with the NEW plane count, old marker deleted) is finished by any
-    reader's open_index: the marker lands at the new count and the table
-    equals a completed migration's."""
-    idx = _mk_simlsh_idx(spark, tmp_path, "lsh_mig_crash")
-    done = _mk_simlsh_idx(spark, tmp_path, "lsh_mig_done")
-    want_n = sim.simlsh_index_rebuild(spark, done, 6)
-    want = sorted(
-        (r.vec_id, r.bucket)
-        for r in spark.read.option("basePath", done)
-        .parquet(done)
-        .select("vec_id", "bucket")
-        .collect()
-    )
-
-    def boom(*a, **kw):
-        raise RuntimeError("simulated crash mid-swap")
-
-    monkeypatch.setattr(life, "finish_compaction_swap", boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        sim.simlsh_index_rebuild(spark, idx, 6)
-    monkeypatch.undo()
-    assert read_int_marker(spark, f"{idx}/{life.PENDING_SENTINEL}") == 6
-    assert read_int_marker(spark, f"{idx}/{sim._SIMLSH_MARKER}") is None
-    assert life.open_index(spark, idx, sim._SIMLSH_MARKER, "bucket") == 6
-    got = sorted(
-        (r.vec_id, r.bucket)
-        for r in spark.read.option("basePath", idx)
-        .parquet(idx)
-        .select("vec_id", "bucket")
-        .collect()
-    )
-    assert got == want and len(got) == want_n
-    assert not os.path.exists(f"{idx}{life.TMP_SUFFIX}")
-
-
 def test_simlsh_migrate_probe_prunes_to_query_buckets(
     spark, tmp_path, partitions_read, sign_buckets
 ):
@@ -2267,52 +2230,25 @@ def test_textidx_refresh_stats_matches_fresh_build(spark, tmp_path):
 
 
 def test_textidx_refresh_stats_crash_safe_swap(spark, tmp_path):
-    """The refreshed stats ride the compaction sentinel: constructed
-    crash window (tmp fully written INCLUDING the staged
-    _collection_stats, sentinel stamped, marker deleted) → the next
-    open recovers the swap and the REFRESHED stats are in place."""
+    """The refreshed stats ride the compaction's tmp table: ingest leaves
+    the build-time stats frozen, a refresh-compact swaps the recomputed
+    stats in with the rewritten postings and leaves no tmp table. (The
+    crash windows of that swap are test_lifecycle_families's crash matrix,
+    ``text_refresh_compact``.)"""
     from bert_etl_spark.operators import text as tx
 
     docs = registry.tbl(spark, SF, "documents")
     idx = str(tmp_path / "idx")
-    life.build_index(
-        spark, idx, tx._TEXTIDX_MARKER, tx.TEXTIDX_BUCKETS,
-        tx._postings_plan(docs.filter(F.col("doc_id") % 2 == 0)),
-        "bucket", 8,
-        finalize=lambda: tx._write_collection_stats(spark, idx),
-    )
-    tx.textidx_ingest(
-        spark, docs.filter(F.col("doc_id") % 2 == 1), idx
+    tx._textidx_open_or_build(
+        spark, SF, idx, docs.filter(F.col("doc_id") % 2 == 0)
     )
     frozen_docs = tx.read_collection_stats(spark, idx).first()["n_docs"]
-    # construct the crash window by hand: the exact state a refresh-
-    # compact leaves if killed right after deleting the marker
-    table = spark.read.option("basePath", idx).parquet(idx)
-    tmp = f"{idx}{life.TMP_SUFFIX}"
-    table.repartition(8, "bucket").write.partitionBy("bucket").mode(
-        "overwrite"
-    ).parquet(tmp)
-    tmp_table = spark.read.option("basePath", tmp).parquet(tmp)
-    stats = tmp_table.select("doc_id", "dl").distinct().agg(
-        F.count("*").alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(
-        f"{tmp}/{tx._STATS_DIR}"
-    )
-    write_int_marker(
-        spark, f"{idx}/{life.PENDING_SENTINEL}", tx.TEXTIDX_BUCKETS
-    )
-    os.remove(f"{idx}/{tx._TEXTIDX_MARKER}")
-    # recovery (any verb's open_index) finishes the swap, artifacts too
-    assert (
-        life.open_index(spark, idx, tx._TEXTIDX_MARKER, "bucket")
-        == tx.TEXTIDX_BUCKETS
-    )
+    tx.textidx_ingest(spark, docs.filter(F.col("doc_id") % 2 == 1), idx)
+    assert tx.read_collection_stats(spark, idx).first()["n_docs"] == frozen_docs
+    tx.textidx_compact(spark, idx, refresh_stats=True)
     got = tx.read_collection_stats(spark, idx).first()
-    total = registry.tbl(spark, SF, "documents").count()
-    assert got["n_docs"] == total != frozen_docs
-    assert not os.path.exists(tmp)
+    assert got["n_docs"] == docs.count() != frozen_docs
+    assert not os.path.exists(f"{idx}{life.TMP_SUFFIX}")
 
 
 def _mk_rebuilt_fixture(spark, tmp_path, name="rb"):
@@ -2462,67 +2398,6 @@ def test_ivfpq_rebuild_preserves_rows_missing_from_source(spark, tmp_path):
     )
     assert kept == ingested_only  # provably preserved
     assert after.count() == n == n_live
-
-
-def test_ivfpq_rebuild_crash_before_sentinel_is_clean(spark, tmp_path, monkeypatch):
-    """A crash after the tmp rewrite but BEFORE the sentinel leaves the
-    OLD index fully intact (marker present, old quantizers, old rows);
-    the next open clears the partial tmp and a re-run completes."""
-    from bert_etl_spark.functions import markers as mk
-
-    idx, vectors = _mk_rebuilt_fixture(spark, tmp_path, "rb_crash1")
-    before_probe = _probe_rows(spark, idx)
-    real = mk.write_int_marker
-
-    def boom(spark_, path, value):
-        if path.endswith(life.PENDING_SENTINEL):
-            raise RuntimeError("simulated crash before sentinel")
-        return real(spark_, path, value)
-
-    monkeypatch.setattr(mk, "write_int_marker", boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        sim.ivfpq_index_rebuild(spark, idx, vectors)
-    monkeypatch.setattr(mk, "write_int_marker", real)
-    assert os.path.exists(f"{idx}{life.TMP_SUFFIX}")
-    # reader recovery: marker intact, tmp debris cleared, probe unchanged
-    assert (
-        life.open_index(spark, idx, sim._IVFPQ_MARKER, "cell")
-        == sim.N_CENTROIDS
-    )
-    assert not os.path.exists(f"{idx}{life.TMP_SUFFIX}")
-    assert _probe_rows(spark, idx) == before_probe
-    # and the rebuild completes on re-run
-    assert sim.ivfpq_index_rebuild(spark, idx, vectors) > 0
-
-
-def test_ivfpq_rebuild_crash_mid_swap_recovers(spark, tmp_path, monkeypatch):
-    """A crash inside the sentinel window (tmp complete INCLUDING the
-    staged new quantizers, sentinel stamped, marker deleted) is finished
-    by the next open_index: data AND codebooks land together — the probe
-    equals a completed rebuild's, bit for bit."""
-    idx, vectors = _mk_rebuilt_fixture(spark, tmp_path, "rb_crash2")
-    done_idx, _ = _mk_rebuilt_fixture(spark, tmp_path, "rb_done")
-    sim.ivfpq_index_rebuild(spark, done_idx, vectors)
-    want = _probe_rows(spark, done_idx)
-
-    def boom(*a, **kw):
-        raise RuntimeError("simulated crash mid-swap")
-
-    monkeypatch.setattr(life, "finish_compaction_swap", boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        sim.ivfpq_index_rebuild(spark, idx, vectors)
-    monkeypatch.undo()
-    assert read_int_marker(spark, f"{idx}/{life.PENDING_SENTINEL}") is not None
-    assert read_int_marker(spark, f"{idx}/{sim._IVFPQ_MARKER}") is None
-    # recovery via any reader's open
-    assert (
-        life.open_index(spark, idx, sim._IVFPQ_MARKER, "cell")
-        == sim.N_CENTROIDS
-    )
-    assert _probe_rows(spark, idx) == want
-    cb = sim.read_codebook(spark, idx)
-    assert [r.cid for r in cb] == list(range(sim.N_CENTROIDS))
-    assert not os.path.exists(f"{idx}{life.TMP_SUFFIX}")
 
 
 def test_ivfpq_rebuild_due_consults_floor_conf(spark):
@@ -2698,41 +2573,6 @@ def test_ivf_rebuild_retrains_and_preserves(spark, tmp_path):
         .collect()
     )
     assert rows1 == rows2
-
-
-def test_ivf_rebuild_crash_mid_swap_recovers(spark, tmp_path, monkeypatch):
-    """The shared sentinel-window proof for the vector-at-rest rebuild:
-    kill inside the swap (tmp complete incl. the new _codebook, sentinel
-    stamped, marker deleted) — any reader's open finishes it, data and
-    quantizer land together."""
-    idx = str(tmp_path / "ivf_rb_crash")
-    sim._ivf_assign(spark, SF, index_dir=idx)
-    sim.ivf_index_delete(
-        spark,
-        spark.range(sim.N_CENTROIDS).select(F.col("id").alias("vec_id")),
-        idx,
-    )
-
-    def boom(*a, **kw):
-        raise RuntimeError("simulated crash mid-swap")
-
-    monkeypatch.setattr(life, "finish_compaction_swap", boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        sim.ivf_index_rebuild(spark, idx)
-    monkeypatch.undo()
-    assert read_int_marker(spark, f"{idx}/{sim._IVF_MARKER}") is None
-    assert (
-        life.open_index(spark, idx, sim._IVF_MARKER, "cell")
-        == sim.N_CENTROIDS
-    )
-    cb = sim.read_codebook(spark, idx)
-    assert [r.cid for r in cb] == list(range(sim.N_CENTROIDS))
-    t = spark.read.option("basePath", idx).parquet(idx)
-    assert t.agg(F.min("vec_id")).first()[0] == sim.N_CENTROIDS
-    bad = t.withColumn("want", F.expr(sim._argmax_cell(cb)).cast("int")).filter(
-        F.col("cell") != F.col("want")
-    ).count()
-    assert bad == 0
 
 
 def test_maxsim_rebuild_retrains_from_live_tokens(spark, tmp_path):
