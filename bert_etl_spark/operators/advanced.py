@@ -43,6 +43,7 @@ from bert_etl_spark.operators.dedup import (
 )
 from bert_etl_spark.operators.registry import (
     checkpoint_once,
+    checkpoint_result,
     persist_once,
     query,
     sqlq,
@@ -454,7 +455,7 @@ def connected_components(
         )
         chg = Observation()
         with reliable_metrics(labels.sparkSession):
-            new_labels = (
+            new_labels = checkpoint_result(
                 hop.join(ptr, hop["component"] == ptr["p_id"], "left")
                 .select(
                     "doc_id",
@@ -470,7 +471,6 @@ def connected_components(
                     ).alias("changed"),
                 )
                 .drop("prev")
-                .localCheckpoint()
             )
             changed = int(chg.get["changed"] or 0)
         release(labels)
@@ -1698,7 +1698,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= KCORE_K).select("node")
-        e = e.join(
+        kept = e.join(
             bc(keep.withColumnRenamed("node", "u")), "u", "left_semi"
         ).join(
             bc(keep.withColumnRenamed("node", "v")), "v", "left_semi"
@@ -1709,7 +1709,14 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 6.7-12.3 s warm-family at sf0.1 vs 1.6 s with per-round
         # truncation. The surviving edge set only shrinks, so each
         # checkpoint is a tiny job (the pagerank_k_iters lineage idiom).
-        e = e.localCheckpoint(eager=True)
+        # The new checkpoint is self-contained data, so the previous
+        # peel's blocks are released now (the graph_bfs_hops idiom) — never
+        # the shared memoized edge table the first peel starts from — and
+        # the last peel, which the result reads, at release_internals().
+        peeled = checkpoint_result(kept)
+        if e is not edges:
+            release(e)
+        e = peeled
     final_deg = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
@@ -2134,9 +2141,10 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one persistent generation at a time: each hop checkpoints the grown
     # distance table and releases the previous generation's blocks (the
     # checkpoint is self-contained data, not lineage), so the query holds
-    # ONE cached RDD however many hops run — the footprint the lifecycle
-    # sweep (tests/test_lifecycle.py) pins repo-wide
-    dist = srcs.withColumn("dist", F.lit(0)).localCheckpoint(eager=True)
+    # ONE cached RDD however many hops run, and release_internals() frees
+    # that last one — the footprint the lifecycle sweep
+    # (tests/test_lifecycle.py) pins repo-wide
+    dist = checkpoint_result(srcs.withColumn("dist", F.lit(0)))
     frontier = dist.select("node")
     for h in range(1, BFS_HOPS + 1):
         nxt = (
@@ -2146,7 +2154,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(hint(dist.select("node")), "node", "left_anti")
             .withColumn("dist", F.lit(h))
         )
-        grown = dist.unionAll(nxt).localCheckpoint(eager=True)
+        grown = checkpoint_result(dist.unionAll(nxt))
         release(dist)
         dist = grown
         frontier = dist.filter(F.col("dist") == h).select("node")
@@ -2236,7 +2244,7 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q = cdc_apply_stream(stream, f"{tmp}/state", f"{tmp}/ckpt")
         q.awaitTermination()
-        return (
+        return checkpoint_result(
             latest_cdc_state(spark, f"{tmp}/state")
             .filter(F.col("op") == "U")
             .select(
@@ -2244,7 +2252,6 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "price",
                 F.col("seq").cast("int").alias("last_seq"),
             )
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -2301,7 +2308,7 @@ def streaming_cdc_apply_folded(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         cdc_compact_state(spark, f"{tmp}/state")
-        return (
+        return checkpoint_result(
             latest_cdc_state(spark, f"{tmp}/state")
             .filter(F.col("op") == "U")
             .select(
@@ -2309,7 +2316,6 @@ def streaming_cdc_apply_folded(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "price",
                 F.col("seq").cast("int").alias("last_seq"),
             )
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -2361,7 +2367,7 @@ def streaming_cdc_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys = ops.select("k").filter(
             F.col("k") % CDC_LOOKUP_MOD == CDC_LOOKUP_RESIDUE
         )
-        return (
+        return checkpoint_result(
             cdc_lookup(spark, f"{tmp}/state", keys)
             .select(
                 F.col("k").alias("o_orderkey"),
@@ -2369,7 +2375,6 @@ def streaming_cdc_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "price",
                 F.col("seq").cast("int").alias("last_seq"),
             )
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -2425,7 +2430,7 @@ def streaming_cdc_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_buckets=CDC_REBUCKET_FROM,
         ).awaitTermination()
         cdc_rebucket(spark, f"{tmp}/state", CDC_REBUCKET_TO)
-        return (
+        return checkpoint_result(
             latest_cdc_state(spark, f"{tmp}/state")
             .filter(F.col("op") == "U")
             .select(
@@ -2433,7 +2438,6 @@ def streaming_cdc_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "price",
                 F.col("seq").cast("int").alias("last_seq"),
             )
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -2512,7 +2516,7 @@ def streaming_cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFram
             "k long, seq int, op string, price double, currency string"
         ).parquet(f"{tmp}/in2")
         cdc_apply_stream(s2, f"{tmp}/state", f"{tmp}/ck2").awaitTermination()
-        return (
+        return checkpoint_result(
             latest_cdc_state(spark, f"{tmp}/state")
             .filter(F.col("op") == "U")
             .select(
@@ -2521,7 +2525,6 @@ def streaming_cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFram
                 "currency",
                 F.col("seq").cast("int").alias("last_seq"),
             )
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from bert_etl_spark.operators.registry import (
     checkpoint_once,
+    checkpoint_result,
     persist_once,
     query,
     spread,
@@ -523,12 +524,10 @@ def streaming_lsh_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream, f"{tmp}/ledger", f"{tmp}/out", f"{tmp}/ckpt"
         )
         q.awaitTermination()
-        # localCheckpoint: materialize the result off the temp dir so it
-        # can be deleted before the caller consumes the DataFrame
-        return (
-            spark.read.parquet(f"{tmp}/out")
-            .select("doc_i", "doc_j")
-            .localCheckpoint(eager=True)
+        # materialize the result off the temp dir so it can be deleted
+        # before the caller consumes the DataFrame
+        return checkpoint_result(
+            spark.read.parquet(f"{tmp}/out").select("doc_i", "doc_j")
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

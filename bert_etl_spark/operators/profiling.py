@@ -30,7 +30,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bert_etl_spark.functions.deterministic import sql_dsum
-from bert_etl_spark.operators.registry import ALL_ORACLES, query, spread, tbl
+from bert_etl_spark.operators.registry import (
+    ALL_ORACLES,
+    checkpoint_result,
+    query,
+    spread,
+    tbl,
+)
 
 PROFILE_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_linestatus", "l_shipdate")
 
@@ -501,7 +507,7 @@ def streaming_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         top = (
             exact.orderBy(F.desc("n"), "tok").limit(CMS_TOP_K).select("tok", "n")
         )
-        return cms_estimates(top, merged).localCheckpoint(eager=True)
+        return checkpoint_result(cms_estimates(top, merged))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -127,6 +127,27 @@ def persist_once(df: DataFrame, shared: bool = False) -> DataFrame:
     return df
 
 
+# Per-query RESULT materializations: the localCheckpoint a query returns
+# (a streaming demo's result read off a temp dir it then deletes, an
+# iterated graph loop's last generation). Dataset.unpersist cannot free
+# those blocks, so without tracking they wait for the ContextCleaner to
+# notice the dropped frame — a lag the JVM garbage collector decides, not
+# the caller. release_internals() frees them at the same between-queries
+# point as the persisted internals. Only (context, RDD id) is kept: a
+# caller that never calls release_internals loses nothing to the tracking
+# — the blocks still free when its frame is collected.
+_TRACKED_RESULTS: list[tuple[object, int]] = []
+
+
+def checkpoint_result(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint of a frame a query returns, its blocks
+    released at the next ``release_internals()``."""
+    out = df.localCheckpoint(eager=True)
+    rdd_id = out._jdf.queryExecution().analyzed().rdd().id()
+    _TRACKED_RESULTS.append((out.sparkSession.sparkContext._jsc, rdd_id))
+    return out
+
+
 # Session-scoped memo for the shared family tables materialized via
 # localCheckpoint (see checkpoint_once). Keyed by applicationId so a new
 # SparkContext never sees another context's RDD-backed DataFrames.
@@ -296,6 +317,15 @@ def release_internals() -> int:
         except Exception:
             pass
     _TRACKED.clear()
+    for jsc, rdd_id in _TRACKED_RESULTS:
+        try:
+            rdd = jsc.getPersistentRDDs().get(rdd_id)
+            if rdd is not None:
+                rdd.unpersist(False)
+                n += 1
+        except Exception:  # the context has stopped: nothing left to free
+            pass
+    _TRACKED_RESULTS.clear()
     return n
 
 

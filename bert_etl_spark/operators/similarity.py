@@ -47,6 +47,7 @@ from bert_etl_spark.operators.registry import (
     ALL_ORACLES,
     checkpoint_get,
     checkpoint_once,
+    checkpoint_result,
     query,
     tbl,
 )
@@ -2879,9 +2880,7 @@ def streaming_cdc_index_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         drain(batch2, "in2", "ck2")
         sync()  # epoch 2 delta only: re-updates + the resurrection
         assign = _ivf_assign(spark, sf_dir, index_dir=idx)
-        return _ivf_topk(spark, sf_dir, assign, idx).localCheckpoint(
-            eager=True
-        )
+        return checkpoint_result(_ivf_topk(spark, sf_dir, assign, idx))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
