@@ -3,7 +3,7 @@
 Spark's scheduler runs several jobs at once inside one application;
 actions are sequential only because driver code calls them sequentially.
 Verbs that end in a fan of small INDEPENDENT writes (a rebuild staging
-its codebook artifacts + keymap into the sibling tmp table) submit them
+its codebook artifacts into the sibling tmp table) submit them
 from driver threads so the tail of one job back-fills with the next
 job's tasks. ``InheritableThread`` keeps JVM thread-locals (job
 descriptions, scheduler pool) correct per job.

@@ -1172,11 +1172,6 @@ def graph_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 PAGERANK_ITERS = 5  # fixed for oracle determinism (unrolled CTE chain)
 PAGERANK_CHECKPOINT_EVERY = 8  # lineage truncation cadence for deep loops
 
-# "false" keeps the iterated graph loops fully lazy (plan-only contexts):
-# no eager repartition+count, each round pays its classic exchange — same
-# results, classic plan (the global_order ADAPTIVE_CONF pattern).
-GRAPH_EAGER_CONF = "spark.bert_etl.graph.eagerEdgePartition"
-
 # Row-count ceiling for broadcasting O(|V|) loop-state tables (PageRank's
 # contribution vector, LPA's labels, k-core's keep set, Jaccard's degrees).
 # Above it the loops fall back to plain shuffle joins; -1 (or 0) disables
@@ -1275,23 +1270,12 @@ def _und_by_dst(edges: DataFrame) -> DataFrame:
       exists to remove — measured, not hypothetical. The count is one
       pass over cached slim columns, paid once per query against k
       rounds of shuffles saved.
-    Plan-only contexts opt out via ``spark.bert_etl.graph.
-    eagerEdgePartition=false`` (construction stays lazy, classic
-    per-round exchanges). Skewed hot nodes concentrate in one partition
+    Skewed hot nodes concentrate in one partition
     exactly as they would on the reduce side of the per-round shuffle
     this replaces — no new skew exposure."""
     und = edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
-    try:
-        eager = (
-            edges.sparkSession.conf.get(GRAPH_EAGER_CONF, "true").lower()
-            != "false"
-        )
-    except Exception:
-        eager = True
-    if not eager:
-        return und
     d = persist_once(und.repartition("dst"))
     d.count()
     return d

@@ -72,25 +72,6 @@ PENDING_SENTINEL = "_compact_pending"
 TMP_SUFFIX = "_compact_tmp"
 TOMBSTONE_DIR = "_tombstones"
 
-# Optional persisted key→partition map (round-12 'next round' item #6):
-# a bare-key delete (GDPR opt-out — no vector to re-assign) otherwise
-# pays a full slim key scan to find where the key lives. The map is a
-# ``_keymap`` sub-table (underscore-hidden from the main reader) holding
-# one slim (key, part) row per indexed row, itself bucketed by
-# ``kbkt = xxhash64(key) mod KEYMAP_BUCKETS`` so lookups prune to the
-# REQUEST keys' bucket dirs — O(request) listing, O(request-buckets)
-# scan. It is strictly an OPTIMIZATION table: entries may be missing (a
-# crash between the main append and the map append; the replay's empty
-# fresh set skips both) or stale (deleted keys until the next compact
-# refresh), and correctness never depends on it — delete_keys' untrusted
-# cross-check catches both, falling back to the honest full key scan for
-# exactly the unmapped/stale residue. Opt in per family via
-# ``spark.bert_etl.index.keymap`` (writes gated by conf; reads use the
-# map whenever the dir exists).
-KEYMAP_DIR = "_keymap"
-KEYMAP_BUCKETS = 64
-KEYMAP_CONF = "spark.bert_etl.index.keymap"
-
 # Every reader masks deletes via a BROADCAST anti-join on the pending
 # tombstones (apply_tombstones) — sound only while the tombstone table is
 # small. This conf is the "broadcast strained ⇒ compaction overdue"
@@ -187,7 +168,7 @@ def finish_compaction_swap(
 
     ARTIFACT dirs staged in tmp swap too: any underscore-prefixed
     DIRECTORY child of the tmp table (a rewritten ``_codebook``, a
-    refreshed ``_collection_stats``, a re-bucketed ``_keymap``) replaces
+    refreshed ``_collection_stats``, a filtered ``_tombstones``) replaces
     its root counterpart after the partition dirs move — the hook that
     lets a rewrite verb refresh index-owned artifacts under the SAME
     sentinel protocol instead of a second, unprotected write
@@ -228,14 +209,9 @@ def finish_compaction_swap(
     fs.delete(p(sentinel), False)
     fs.delete(p(tmp), True)
     # a rewrite just committed (possibly with staged artifacts — a
-    # re-bucketed keymap, a filtered tombstone table): drop the schema
-    # memos so the next read re-infers against the new files
-    invalidate_schema(
-        spark,
-        index_dir,
-        f"{index_dir}/{KEYMAP_DIR}",
-        f"{index_dir}/{TOMBSTONE_DIR}",
-    )
+    # filtered tombstone table): drop the schema memos so the next read
+    # re-infers against the new files
+    invalidate_schema(spark, index_dir, f"{index_dir}/{TOMBSTONE_DIR}")
 
 
 def open_index(
@@ -295,16 +271,10 @@ def open_index(
         # abandoned fresh build: no marker was ever stamped, so ingest
         # (which requires one) can never have added rows — the partial
         # table is pure corpus derivation, safe to wipe and rebuild
-        # (including any partially seeded keymap, which would otherwise
-        # carry entries for the wiped rows)
         for d in _part_dirs(fs, p, index_dir, part_col):
             fs.delete(d, True)
-        if KEYMAP_DIR in names:
-            fs.delete(p(f"{index_dir}/{KEYMAP_DIR}"), True)
         fs.delete(p(f"{index_dir}/{BUILDING_SENTINEL}"), False)
-        invalidate_schema(
-            spark, index_dir, f"{index_dir}/{KEYMAP_DIR}"
-        )
+        invalidate_schema(spark, index_dir)
         return None
     if any(n.startswith(f"{part_col}=") for n in names):
         raise ValueError(
@@ -355,15 +325,11 @@ def build_index(
     part_col: str,
     n_parts: int,
     finalize=None,
-    keymap_key: str | None = None,
 ) -> None:
     """Fresh build of the partitioned index table, crash-safe via the
     ``_building`` sentinel (see module docstring). ``finalize`` runs after
     the data lands and before the marker is stamped — the hook for
     artifacts that are PART of the index (the MaxSim ``_codebook``).
-    ``keymap_key``: when set, also seed the ``_keymap`` sub-table from
-    the just-written rows (a slim read-back, not a plan re-execution) so
-    bare-key deletes of build-time rows prune too.
     Callers must have verified the dir is buildable via open_index."""
     from bert_etl_spark.functions.markers import write_int_marker
 
@@ -375,13 +341,6 @@ def build_index(
         .mode("append")  # dir verified empty of part dirs; append keeps
         .parquet(index_dir)  # the sentinel alive (overwrite wipes the dir)
     )
-    if keymap_key is not None:
-        written = read_with_cached_schema(
-            spark, index_dir, [index_dir], base_path=index_dir
-        )
-        keymap_record(
-            spark, index_dir, written, keymap_key, part_col, n_parts
-        )
     if finalize is not None:
         finalize()
     write_int_marker(spark, f"{index_dir}/{marker_name}", value)
@@ -398,12 +357,8 @@ def ingest_rows(
     part_col: str,
     n_parts: int,
     key: str = "vec_id",
-    keymap: bool = False,
 ) -> int:
     """Idempotent append of pre-assigned rows into the standing index.
-    ``keymap=True`` also appends the fresh rows' (key, part) pairs into
-    the ``_keymap`` sub-table (see the module constants) — same replay
-    proof, since only the post-dedup fresh set is recorded.
 
     Two dedup layers make at-least-once sources exactly-once at the sink:
     (1) WITHIN the batch, duplicate ``key`` rows collapse to one
@@ -459,7 +414,6 @@ def ingest_rows(
             .observe(parts_obs, F.collect_set(F.col(part_col)).alias("parts"))
             .localCheckpoint(eager=True)
         )
-        dups = None
         try:
             touched = list(parts_obs.get["parts"])
             table_keys = physical_pruned_scan(
@@ -477,17 +431,10 @@ def ingest_rows(
                 # against the scan: the index side stays distributed and
                 # unshuffled, and the result (keys already present) is
                 # bounded by batch size.
-                dups_plan = table_keys.select(key).join(
+                dups = table_keys.select(key).join(
                     F.broadcast(batch.select(key)), key, "left_semi"
                 )
-                if keymap:
-                    # keymap consumers execute ``fresh`` twice (main
-                    # append + map append): pin the bounded dup set so the
-                    # pruned scan runs once. Without keymap, fresh runs in
-                    # exactly one action (the observed write) and the
-                    # checkpoint would be a pure extra job.
-                    dups_plan = dups = dups_plan.localCheckpoint(eager=True)
-                fresh = batch.join(F.broadcast(dups_plan), key, "left_anti")
+                fresh = batch.join(F.broadcast(dups), key, "left_anti")
             # tripwire BEFORE the (single) write action; the count that
             # the mismatch message needs is only computed on that
             # exceptional path, so a fully-duplicate replay against a
@@ -527,17 +474,7 @@ def ingest_rows(
                 .mode("append")
                 .parquet(index_dir)
             )
-            n = int(n_obs.get["n"])
-            if n and keymap:
-                # after the main append: a crash between the two leaves
-                # the key unmapped (replay's fresh set is empty so the
-                # map is never double-written) — the delete-side
-                # cross-check covers unmapped keys, so the map can only
-                # ever be an under-approximation, never wrong
-                keymap_record(
-                    spark, index_dir, fresh, key, part_col, n_parts
-                )
-            return n
+            return int(n_obs.get["n"])
         finally:
             # deterministic release: an always-on ingest calls this per
             # micro-batch, and leaking one checkpoint block set per batch
@@ -546,8 +483,6 @@ def ingest_rows(
             # frame — release() unpersists the underlying checkpointed
             # RDD itself.
             release(batch)
-            if dups is not None:
-                release(dups)
 
 
 def upsert_rows(
@@ -559,7 +494,6 @@ def upsert_rows(
     part_col: str,
     n_parts: int,
     key: str = "vec_id",
-    keymap: bool = False,
     multi_rows: bool = False,
 ) -> tuple[int, int]:
     """Keyed in-place UPSERT into the standing index: each batch row
@@ -573,14 +507,11 @@ def upsert_rows(
     ``(n_replaced, n_inserted)``.
 
     Cost: O(touched partitions) rewrite + one SLIM two-column
-    (key, part) scan to locate the standing rows. The scan is
-    deliberate: the key→partition map is an under-approximation by
-    contract (stale/missing entries allowed), and an upsert that missed
-    a stale-located row would leave TWO live rows for the key — a
-    correctness break, unlike delete's cross-checked no-op — so
-    location comes from the one source that cannot lie. Bare-key
-    deletes already price this scan (SCALING.md: 0.7–1.2 s at a 9.4M-key
-    100× index); upserts are maintenance-cadence, not probe-path.
+    (key, part) scan to locate the standing rows: an upsert that missed
+    a standing row would leave TWO live rows for the key, so location
+    comes from the table itself. Bare-key deletes already price this
+    scan (SCALING.md: 0.7–1.2 s at a 9.4M-key 100× index); upserts are
+    maintenance-cadence, not probe-path.
 
     Protocol (the partial-swap form of the compaction protocol):
     touched = (dirs holding the batch keys) ∪ (the batch's new
@@ -608,7 +539,7 @@ def upsert_rows(
     row lands."""
     _, n_replaced, n_inserted = _upsert_delete_impl(
         spark, index_dir, marker_name, expected, assigned, None, part_col,
-        n_parts, key, keymap, multi_rows,
+        n_parts, key, multi_rows,
     )
     return (n_replaced, n_inserted)
 
@@ -623,7 +554,6 @@ def upsert_delete_rows(
     part_col: str,
     n_parts: int,
     key: str = "vec_id",
-    keymap: bool = False,
 ) -> tuple[int, int, int]:
     """Keyed upsert AND keyed delete in ONE touched-partition rewrite —
     the combined maintenance verb ``cdc_index_sync`` exists for (its
@@ -654,7 +584,7 @@ def upsert_delete_rows(
     checkpointed delta."""
     return _upsert_delete_impl(
         spark, index_dir, marker_name, expected, assigned, drop_keys,
-        part_col, n_parts, key, keymap, False,
+        part_col, n_parts, key, False,
     )
 
 
@@ -668,7 +598,6 @@ def _upsert_delete_impl(
     part_col: str,
     n_parts: int,
     key: str,
-    keymap: bool,
     multi_rows: bool,
 ) -> tuple[int, int, int]:
     from pyspark.sql import functions as F
@@ -821,17 +750,6 @@ def _upsert_delete_impl(
             spark, index_dir, marker_name, part_col, expected, rows,
             min(n_parts, len(touched)), stage=stage, touched=touched,
         )
-        fs, p = _fs(spark, index_dir)
-        if keymap or fs.exists(p(f"{index_dir}/{KEYMAP_DIR}")):
-            # post-commit append, like ingest: a superseded (key, old
-            # part) entry may remain — the map's documented stale-allowed
-            # under-approximation, healed by the next compact/rebuild
-            krows = (
-                batch.select(key, part_col).dropDuplicates()
-                if multi_rows
-                else batch
-            )
-            keymap_record(spark, index_dir, krows, key, part_col, n_parts)
         return (int(n_deleted), int(n_replaced), int(n_batch - n_replaced))
     finally:
         release(batch)
@@ -857,165 +775,6 @@ def _tombstone_files(fs, p, index_dir: str) -> list[tuple[str, int]]:
         for f in fs.listStatus(td)
         if not f.getPath().getName().startswith(("_", "."))
     ]
-
-
-def keymap_enabled(spark: SparkSession) -> bool:
-    """Conf gate for keymap WRITES (build/ingest). Reads never consult
-    the conf — a lookup uses the map whenever its dir exists."""
-    try:
-        return str(spark.conf.get(KEYMAP_CONF, "false")).lower() == "true"
-    except Exception:
-        return False
-
-
-def _keymap_bucket(col):
-    from pyspark.sql import functions as F
-
-    c = F.col(col) if isinstance(col, str) else col
-    return F.pmod(F.xxhash64(c), F.lit(KEYMAP_BUCKETS)).cast("int")
-
-
-def keymap_record(
-    spark: SparkSession,
-    index_dir: str,
-    rows: DataFrame,
-    key: str,
-    part_col: str,
-    n_parts: int = KEYMAP_BUCKETS,
-) -> None:
-    """Append (key, part) rows for freshly indexed rows into the map —
-    called with ingest's post-dedup ``fresh`` set, so replays (empty
-    fresh) write nothing and the map stays duplicate-free along the same
-    proof as the main append."""
-    (
-        bucket_layout(
-            rows.select(key, part_col).withColumn(
-                "kbkt", _keymap_bucket(key)
-            ),
-            "kbkt",
-            min(n_parts, KEYMAP_BUCKETS),
-        )
-        .write.partitionBy("kbkt")
-        .mode("append")
-        .parquet(f"{index_dir}/{KEYMAP_DIR}")
-    )
-
-
-def keymap_lookup(
-    spark: SparkSession,
-    index_dir: str,
-    request: DataFrame,
-    key: str,
-    kbkts: list[int] | None = None,
-):
-    """(key, part) rows for the request keys recorded in the map, pruned
-    to the request's ``kbkt=`` dirs — O(request) listing, never a full
-    map scan. None when the index carries no map (caller falls back to
-    the bare-key path). ``kbkts``: the request's keymap-bucket ids when
-    the caller already observed them on its request checkpoint
-    (delete_keys_by_map does — zero extra jobs); computed here otherwise
-    via a bounded observed collect_set (never a bare per-row collect,
-    whose driver footprint scales with |request| — round-14 advice,
-    'medium' item #2)."""
-    from pyspark.sql import functions as F
-
-    fs, p = _fs(spark, index_dir)
-    km = f"{index_dir}/{KEYMAP_DIR}"
-    if not fs.exists(p(km)):
-        return None
-    if kbkts is None:
-        from bert_etl_spark.functions.observe import observed_distinct
-
-        kbkts = observed_distinct(request, _keymap_bucket(key))
-    kbkts = sorted(set(kbkts))
-    scan = physical_pruned_scan(spark, km, "kbkt", kbkts)
-    if scan is None:  # map exists but holds none of the request buckets
-        return request.select(key).limit(0)
-    return (
-        scan.join(F.broadcast(request.select(key)), key, "left_semi")
-        .dropDuplicates([key])
-        .drop("kbkt")
-    )
-
-
-def delete_keys_by_map(
-    spark: SparkSession,
-    index_dir: str,
-    marker_name: str,
-    expected: int,
-    keys: DataFrame,
-    key: str = "vec_id",
-    part_col: str = "cell",
-) -> int:
-    """Bare-key delete accelerated by the persisted key→partition map:
-    keys the map locates go through delete_keys' O(touched-partitions)
-    pruned path (still cross-checked — a stale map entry cannot silently
-    no-op); only the UNMAPPED residue pays the full slim key scan, and a
-    map-less index degrades to exactly the old bare-key path."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    from bert_etl_spark.functions.observe import reliable_metrics
-
-    # both gate counts ride their checkpoint jobs as observed metrics:
-    # mapped ⊆ request and both are key-distinct, so |mapped| < |request|
-    # decides "unmapped residue exists" without a third count job
-    # (round-14 batch 4)
-    req_obs = Observation()
-    with reliable_metrics(keys.sparkSession):
-        request = (
-            keys.select(key)
-            .dropDuplicates([key])
-            .observe(
-                req_obs,
-                F.count(F.lit(1)).alias("n"),
-                # the keymap-bucket set rides the same checkpoint job —
-                # keymap_lookup then never collects per-row values
-                # (bounded ≤ KEYMAP_BUCKETS ints; round-14 advice #2)
-                F.collect_set(_keymap_bucket(key)).alias("kbkts"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        got = req_obs.get
-        n_request = int(got["n"])
-        req_kbkts = list(got["kbkts"])
-    try:
-        mapped = keymap_lookup(spark, index_dir, request, key, kbkts=req_kbkts)
-        if mapped is None:
-            return delete_keys(
-                spark, index_dir, marker_name, expected, request, key=key
-            )
-        map_obs = Observation()
-        with reliable_metrics(keys.sparkSession):
-            mapped = mapped.observe(
-                map_obs, F.count(F.lit(1)).alias("n")
-            ).localCheckpoint(eager=True)
-            n_mapped = int(map_obs.get["n"])
-        try:
-            n = 0
-            if n_mapped:
-                n += delete_keys(
-                    spark,
-                    index_dir,
-                    marker_name,
-                    expected,
-                    mapped,
-                    key=key,
-                    part_col=part_col,
-                )
-            if n_mapped < n_request:
-                unmapped = request.join(
-                    F.broadcast(mapped.select(key)), key, "left_anti"
-                )
-                n += delete_keys(
-                    spark, index_dir, marker_name, expected, unmapped,
-                    key=key,
-                )
-            return n
-        finally:
-            release(mapped)
-    finally:
-        release(request)
 
 
 def pending_tombstone_bytes(spark: SparkSession, index_dir: str) -> int:
@@ -1154,9 +913,9 @@ def delete_keys(
     broadcast anti-join); a feed deleting never-ingested keys, or one
     with stale part values, pays the same one-column scan the bare-key
     path always pays, and never silently no-ops. ``trusted_parts=True``
-    skips the cross-check — reserved for part values read back from the
-    index's OWN records (the persisted key→partition map), which cannot
-    be stale by construction.
+    skips the cross-check — reserved for part values the caller derives
+    from the index's OWN layout (the graph index's ``ebkt``), which
+    cannot be stale by construction.
     Consequence, stated explicitly:
     re-ingesting a tombstoned-but-uncompacted key is a no-op — ingest's
     anti-join sees the physical row and drops the arrival while the
@@ -1321,7 +1080,6 @@ def compact_index(
         spark, index_dir, marker_name, part_col, marker, table, n_parts,
         applied=applied,
         stage=[finalize_tmp] if finalize_tmp is not None else [],
-        keymap_key=key,
     )
 
 
@@ -1360,7 +1118,6 @@ def commit_rewrite(
     value: int | None = None,
     applied: list[str] = (),
     stage=(),
-    keymap_key: str | None = None,
     touched: list | None = None,
 ) -> int | None:
     """The one rewrite commit every durable table goes through: compact,
@@ -1370,9 +1127,7 @@ def commit_rewrite(
     1. write ``rows`` to the sibling tmp table (``_compact_tmp``);
     2. stage the index-owned artifacts INSIDE tmp: each ``stage(tmp)``
        callable (codebooks, collection stats, a filtered tombstone
-       table) and, when the index carries a key→partition map, the map
-       rebuilt on ``keymap_key`` from the rows just written — overlapped,
-       all strictly before the commit point;
+       table) — overlapped, all strictly before the commit point;
     3. single-writer tripwire: the layout marker must still read
        ``expected``;
     4. COMMIT POINT: stamp ``_compact_pending`` with ``value`` (default
@@ -1434,22 +1189,8 @@ def commit_rewrite(
             d = p(f"{tmp}/{part_col}={v}")  # replaces, never skips, them
             if not fs.exists(d):
                 fs.mkdirs(d)
-    stages = [lambda fn=fn: fn(tmp) for fn in stage]
-    if keymap_key is not None and fs.exists(p(f"{index_dir}/{KEYMAP_DIR}")):
-        # slim read-back of the rows just written, with their own schema
-        # (no inference job); underscore dirs staged alongside are hidden
-        # from the listing
-        slim = rows.select(keymap_key, part_col).schema
-        stages.append(lambda: keymap_record(
-            spark,
-            tmp,
-            spark.read.schema(slim).option("basePath", tmp).parquet(tmp),
-            keymap_key,
-            part_col,
-            n_parts,
-        ))
-    if stages:
-        overlap(*stages)
+    if stage:
+        overlap(*(lambda fn=fn: fn(tmp) for fn in stage))
     marker = read_int_marker(spark, f"{index_dir}/{marker_name}")
     if marker != expected:
         raise ValueError(
@@ -1686,8 +1427,7 @@ class IndexFamily:
     under the index's frozen quantizer. ``key`` is what deletes,
     tombstones and upserts address; ``row_key`` the per-row identity
     ingest dedups on, when one key spans many rows (a document's
-    postings). ``keymap``: the family keeps the optional key→partition
-    map for bare-key deletes."""
+    postings)."""
 
     label: str
     marker: str
@@ -1700,7 +1440,6 @@ class IndexFamily:
     cap: Callable[[int], int] = lambda layout: layout
     layouts: range | None = None
     row_key: str | None = None
-    keymap: bool = False
 
     def index_dir(self, spark: SparkSession) -> str | None:
         """The standing index dir the family's conf names, if any."""
@@ -1760,13 +1499,8 @@ def build_family(
         build_index(
             spark, index_dir, fam.marker, value, plan(), fam.part_col,
             fam.n_parts(spark, value), finalize=finalize,
-            keymap_key=fam.key if _keymap_on(spark, fam) else None,
         )
     return value
-
-
-def _keymap_on(spark: SparkSession, fam: IndexFamily) -> bool:
-    return fam.keymap and keymap_enabled(spark)
 
 
 def family_ingest(
@@ -1778,7 +1512,6 @@ def family_ingest(
         spark, index_dir, fam.marker, value,
         fam.assign(spark, batch, index_dir, value), fam.part_col,
         fam.n_parts(spark, value), key=fam.row_key or fam.key,
-        keymap=_keymap_on(spark, fam),
     )
 
 
@@ -1791,7 +1524,6 @@ def family_upsert(
         spark, index_dir, fam.marker, value,
         fam.assign(spark, batch, index_dir, value), fam.part_col,
         fam.n_parts(spark, value), key=fam.key,
-        keymap=_keymap_on(spark, fam),
         multi_rows=fam.row_key is not None,
     )
 
@@ -1810,7 +1542,6 @@ def family_upsert_delete(
         spark, index_dir, fam.marker, value,
         fam.assign(spark, batch, index_dir, value), keys, fam.part_col,
         fam.n_parts(spark, value), key=fam.key,
-        keymap=_keymap_on(spark, fam),
     )
 
 
@@ -1823,16 +1554,10 @@ def family_delete(
 ) -> int:
     """Tombstone ``keys``. A feed carrying the partition column prunes
     (delete_keys, cross-checked unless ``trusted_parts``) — only where a
-    key lives in one partition; a bare-key feed goes through the
-    key→partition map when the family keeps one, else the slim full key
+    key lives in one partition; a bare-key feed pays the slim full key
     scan."""
     value = open_family(spark, fam, index_dir, "delete from")
     part = fam.part_col if fam.row_key is None else None
-    if fam.keymap and part not in keys.columns:
-        return delete_keys_by_map(
-            spark, index_dir, fam.marker, value, keys, key=fam.key,
-            part_col=fam.part_col,
-        )
     return delete_keys(
         spark, index_dir, fam.marker, value, keys, key=fam.key,
         part_col=part, trusted_parts=trusted_parts,
@@ -1867,7 +1592,7 @@ def family_rewrite(
     return commit_rewrite(
         spark, index_dir, fam.marker, fam.part_col, expected, rows,
         fam.n_parts(spark, value), value=value, applied=applied,
-        stage=stage, keymap_key=fam.key,
+        stage=stage,
     )
 
 

@@ -417,7 +417,7 @@ def _ivf_rows(
 IVF = IndexFamily(
     label="IVF index", marker="_n_centroids", part_col="cell", key="vec_id",
     dir_conf=IVF_INDEX_DIR_CONF, layout=N_CENTROIDS, unit="centroids",
-    assign=_ivf_rows, keymap=True,
+    assign=_ivf_rows,
 )
 _IVF_MARKER = IVF.marker
 
@@ -856,7 +856,7 @@ SIMLSH = IndexFamily(
     label="sign-LSH index", marker="_n_planes", part_col="bucket",
     key="vec_id", dir_conf=SIMLSH_INDEX_DIR_CONF, layout=N_PLANES,
     unit="planes", assign=_lsh_rows, cap=lambda planes: 1 << planes,
-    layouts=range(1, 25), keymap=True,
+    layouts=range(1, 25),
 )
 _SIMLSH_MARKER = SIMLSH.marker
 
@@ -921,8 +921,8 @@ def simlsh_index_delete(
     spark: SparkSession, keys: DataFrame, index_dir: str
 ) -> int:
     """Tombstone-delete vectors from the standing sign-LSH index: a feed
-    carrying the bucket prunes (cross-checked), a bare-key feed goes
-    through the key→partition map when the index keeps one."""
+    carrying the bucket prunes (cross-checked), a bare-key feed pays the
+    slim full key scan."""
     return family_delete(spark, SIMLSH, keys, index_dir)
 
 
@@ -956,8 +956,7 @@ def simlsh_index_rebuild(
     NEW count as the sentinel value, so data and marker land together;
     a crash before the sentinel leaves the old layout untouched, after it
     any open_index finishes the migration. Rebuilding to the current
-    count is a plain compact with a keymap refresh. Returns the rebuilt
-    row count.
+    count is a plain compact. Returns the rebuilt row count.
 
     Reference anchor: ETLDataset.update's overwrite-in-place semantics
     (/root/reference/bert/etl/__init__.py:158-164)."""
@@ -1394,7 +1393,7 @@ def _ivfpq_rows(
 IVFPQ = IndexFamily(
     label="IVF-PQ index", marker="_n_centroids", part_col="cell",
     key="vec_id", dir_conf=IVFPQ_INDEX_DIR_CONF, layout=N_CENTROIDS,
-    unit="centroids", assign=_ivfpq_rows, keymap=True,
+    unit="centroids", assign=_ivfpq_rows,
 )
 _IVFPQ_MARKER = IVFPQ.marker
 
@@ -1459,8 +1458,7 @@ def ivfpq_index_stream(
 def ivfpq_index_delete(spark: SparkSession, keys: DataFrame, index_dir: str) -> int:
     """Tombstone-delete vectors from the standing IVF-PQ index (logical
     until compact; probes mask immediately). A feed carrying the cell
-    prunes; a bare-key feed goes through the key→partition map when the
-    index keeps one."""
+    prunes; a bare-key feed pays the slim full key scan."""
     return family_delete(spark, IVFPQ, keys, index_dir)
 
 
@@ -1519,8 +1517,8 @@ def ivfpq_index_rebuild(
     Nothing is ever dropped.
 
     Crash safety is commit_rewrite's: the re-encoded table, the NEW
-    ``_codebook``/``_pq_codebook`` (and a rebuilt ``_keymap``) land in
-    tmp and swap in together under one sentinel. Fresh-build parity
+    ``_codebook``/``_pq_codebook`` land in tmp and swap in together
+    under one sentinel. Fresh-build parity
     (tests pin it): after rebuild the index equals what
     ivfpq_build_or_open would produce over a corpus holding exactly the
     live rows. Run when the drift audit's mean recall falls below
@@ -1646,9 +1644,8 @@ def _vector_index_rebuild(
     rule over the LIVE rows (the ``fam.layout`` smallest live vec_ids'
     vectors, renumbered densely so the position-indexed encoder stays
     consistent), re-assign every live row, and commit data + the new
-    ``_codebook`` (+ a rebuilt ``_keymap``) together through
-    commit_rewrite, applying pending tombstones. Returns the rebuilt row
-    count."""
+    ``_codebook`` together through commit_rewrite, applying pending
+    tombstones. Returns the rebuilt row count."""
     layout = open_family(spark, fam, index_dir, "rebuild")
     # not checkpointed: the slim seed TakeOrdered and the rewrite each
     # re-run the columnar scan + broadcast tombstone anti-join instead
@@ -1678,7 +1675,7 @@ def ivf_index_rebuild(spark: SparkSession, index_dir: str) -> int:
     ivfpq_index_rebuild sibling for the family that stores its vectors
     AT REST (the live rows ARE the training data). New quantizer = the
     N_CENTROIDS smallest live vec_ids' vectors; every row re-assigns;
-    data + new ``_codebook`` (+ keymap) commit together; tombstones
+    data + new ``_codebook`` commit together; tombstones
     applied. Run when the quantizer went stale — training rows deleted,
     or ingest drifted the distribution."""
     return _vector_index_rebuild(spark, IVF, index_dir, _ivf_index_columns)
@@ -3036,7 +3033,6 @@ MAXSIM = IndexFamily(
     label="MaxSim index", marker="_n_centroids", part_col="cell",
     key="vec_id", dir_conf=MAXSIM_INDEX_DIR_CONF,
     layout=MAXSIM_IVF_CENTROIDS, unit="centroids", assign=_maxsim_rows,
-    keymap=True,
 )
 _MAXSIM_MARKER = MAXSIM.marker
 
@@ -3777,7 +3773,8 @@ def sim_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=ALL_ORACLES["sim_maxsim_incremental"],
 )
 def streaming_maxsim_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
+    import shutil
+    import tempfile
 
     # the standing corpus side: the session-shared (or durable) assignment
     assign = _maxsim_assign(spark, sf_dir)
@@ -3795,56 +3792,52 @@ def streaming_maxsim_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # arrivals land as a DOC-CLUSTERED file source: 3 files → 3
     # micro-batches under maxFilesPerTrigger=1, each holding whole docs
-    run_id = uuid.uuid4().hex[:12]
-    base = f"/tmp/bert_etl_maxsim_stream_{run_id}"
+    base = tempfile.mkdtemp(prefix="bert_etl_maxsim_stream_")
     src, out_dir, ckpt = f"{base}/arrivals", f"{base}/scores", f"{base}/ckpt"
-    arrivals = (
-        tbl(spark, sf_dir, "embeddings")
-        .withColumn("doc", F.expr(f"vec_id div {MAXSIM_GROUP}"))
-        .filter(f"doc >= {thr}")
-        .select("vec_id", "doc", "embedding")
-    )
-    arrivals.repartition(3, "doc").write.mode("overwrite").parquet(src)
-
-    def _score(batch_df: DataFrame, epoch_id: int) -> None:
-        # every arrival is new by construction; stating the predicate
-        # marks the batch as a selective probe side, so the cell join
-        # prunes the standing scan (dynamic partition pruning)
-        toks = (
-            batch_df.where(f"doc >= {thr}")
-            .selectExpr("vec_id", f"{as_double('embedding')} AS e")
-            .selectExpr("*", f"{l2_norm('e')} AS nrm")
+    try:
+        arrivals = (
+            tbl(spark, sf_dir, "embeddings")
+            .withColumn("doc", F.expr(f"vec_id div {MAXSIM_GROUP}"))
+            .filter(f"doc >= {thr}")
+            .select("vec_id", "doc", "embedding")
         )
-        cand = (
-            standing.join(F.broadcast(_maxsim_probes(toks, cent)), "cell")
-            .selectExpr("q_doc", "doc AS c_doc")
-            .distinct()
-        )
-        (
-            _maxsim_topk(corpus_assign, cand, toks)
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        arrivals.repartition(3, "doc").write.mode("overwrite").parquet(src)
 
-    stream = (
-        spark.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # the drained source and checkpoint are scratch; the scores dir stays
-    # alive behind the returned (lazy) DataFrame
-    import shutil
+        def _score(batch_df: DataFrame, epoch_id: int) -> None:
+            # every arrival is new by construction; stating the predicate
+            # marks the batch as a selective probe side, so the cell join
+            # prunes the standing scan (dynamic partition pruning)
+            toks = (
+                batch_df.where(f"doc >= {thr}")
+                .selectExpr("vec_id", f"{as_double('embedding')} AS e")
+                .selectExpr("*", f"{l2_norm('e')} AS nrm")
+            )
+            cand = (
+                standing.join(F.broadcast(_maxsim_probes(toks, cent)), "cell")
+                .selectExpr("q_doc", "doc AS c_doc")
+                .distinct()
+            )
+            (
+                _maxsim_topk(corpus_assign, cand, toks)
+                .write.mode("append")
+                .parquet(out_dir)
+            )
 
-    for scratch in (src, ckpt):
-        shutil.rmtree(scratch, ignore_errors=True)
-    return spark.read.parquet(out_dir)
+        stream = (
+            spark.readStream.schema(arrivals.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = (
+            stream.writeStream.foreachBatch(_score)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return checkpoint_result(spark.read.parquet(out_dir))
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 # FILTERED IVF — the two prunings composed, which is what filtered ANN

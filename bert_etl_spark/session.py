@@ -21,6 +21,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _default_driver_memory() -> str:
+    """min(48g, a quarter of physical RAM). The Python driver shares the
+    machine: in the test suite it hosts the in-process DuckDB oracle,
+    whose heaviest queries (the MMR ones) peak near 8 GB. On a 16 GB
+    machine a 48g heap, and also an 8g one, let the JVM and that peak
+    together reach the limit, and the kernel killed the JVM."""
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{min(48 * 1024, ram_mb // 4)}m"
+
+
 # Confs that matter at 100 TB, with values that also behave at test scale.
 _BASE_CONFS: dict[str, str] = {
     # --- correctness / determinism ---
@@ -46,7 +60,9 @@ _BASE_CONFS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     # --- memory: local mode is driver-only, so this is THE heap knob;
     #     the 1g default causes GC thrash on any real workload ---
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()
+    ),
     "spark.driver.maxResultSize": "4g",
     # --- shuffle ---
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
@@ -54,10 +70,10 @@ _BASE_CONFS: dict[str, str] = {
     "spark.sql.files.maxPartitionBytes": "128m",
     # File-listing strategy: above this many paths Spark lists via a
     # distributed job (scheduler round trip + task launch per read).
-    # The CDC op log and the key->partition map are 64-bucket layouts,
-    # so at the stock threshold (32) EVERY full read of either paid a
-    # listing job for 64 tiny dirs (measured 0.1-0.25 s each, on every
-    # latest_cdc_state/fold/rebucket call — round-14 batch 6). 128 keeps
+    # The CDC op log is a 64-bucket layout, so at the stock threshold
+    # (32) EVERY full read of it paid a listing job for 64 tiny dirs
+    # (measured 0.1-0.25 s each, on every latest_cdc_state/fold/rebucket
+    # call — round-14 batch 6). 128 keeps
     # all index-family layouts on the driver's threaded lister; tables
     # with hundreds+ of partition dirs (the 100 TB case) still use the
     # distributed path. Index probes list the whole index root and prune

@@ -360,7 +360,7 @@ def test_simlsh_stream_and_compact_lifecycle(spark, tmp_path):
         spark.conf.unset(sim.SIMLSH_INDEX_DIR_CONF)
 
 
-def _mk_simlsh_idx(spark, tmp_path, name, keymap=False):
+def _mk_simlsh_idx(spark, tmp_path, name):
     """Standing 4-plane sign-LSH index over the sf0.001 embeddings (the
     test_simlsh_ingest fixture shape, via the real build verb)."""
     idx = str(tmp_path / name)
@@ -369,8 +369,7 @@ def _mk_simlsh_idx(spark, tmp_path, name, keymap=False):
     ).drop("label")
     assert life.open_index(spark, idx, sim._SIMLSH_MARKER, "bucket") is None
     life.build_index(
-        spark, idx, sim._SIMLSH_MARKER, sim.N_PLANES, assign, "bucket", 4,
-        keymap_key="vec_id" if keymap else None,
+        spark, idx, sim._SIMLSH_MARKER, sim.N_PLANES, assign, "bucket", 4
     )
     return idx
 
@@ -379,73 +378,60 @@ def test_simlsh_rebuild_migrates_plane_count(spark, tmp_path):
     """simlsh_index_rebuild re-hashes the LIVE rows (standing + ingested
     − tombstoned) under the new plane count in place: marker re-stamped,
     every row's bucket equals its new-plane hash, ingested-only rows
-    preserved, tombstoned rows physically gone, keymap rebuilt to the
-    new buckets, and shrink-back works too."""
-    spark.conf.set(life.KEYMAP_CONF, "true")
-    try:
-        idx = _mk_simlsh_idx(spark, tmp_path, "lsh_mig", keymap=True)
-        emb = registry.tbl(spark, SF, "embeddings")
-        arrivals = emb.select(
-            (F.col("vec_id") + 4_000_000).alias("vec_id"), "embedding"
-        ).limit(16)
-        n_in = sim.simlsh_index_ingest(spark, arrivals, idx)
-        assert n_in == 16
-        dead = spark.createDataFrame([(1,), (2,)], "vec_id long")
-        assert sim.simlsh_index_delete(spark, dead, idx) == 2
-        total = emb.count() + n_in - 2
+    preserved, tombstoned rows physically gone, and shrink-back works
+    too."""
+    idx = _mk_simlsh_idx(spark, tmp_path, "lsh_mig")
+    emb = registry.tbl(spark, SF, "embeddings")
+    arrivals = emb.select(
+        (F.col("vec_id") + 4_000_000).alias("vec_id"), "embedding"
+    ).limit(16)
+    n_in = sim.simlsh_index_ingest(spark, arrivals, idx)
+    assert n_in == 16
+    dead = spark.createDataFrame([(1,), (2,)], "vec_id long")
+    assert sim.simlsh_index_delete(spark, dead, idx) == 2
+    total = emb.count() + n_in - 2
 
-        n = sim.simlsh_index_rebuild(spark, idx, 6)
-        assert n == total
-        assert read_int_marker(spark, f"{idx}/{sim._SIMLSH_MARKER}") == 6
-        rows = (
-            spark.read.option("basePath", idx)
-            .parquet(idx)
-            .select(
-                "vec_id",
-                "bucket",
-                F.expr(sim.sign_bucket("e", sim.planes_for(6)))
-                .cast("int")
-                .alias("want"),
-            )
+    n = sim.simlsh_index_rebuild(spark, idx, 6)
+    assert n == total
+    assert read_int_marker(spark, f"{idx}/{sim._SIMLSH_MARKER}") == 6
+    rows = (
+        spark.read.option("basePath", idx)
+        .parquet(idx)
+        .select(
+            "vec_id",
+            "bucket",
+            F.expr(sim.sign_bucket("e", sim.planes_for(6)))
+            .cast("int")
+            .alias("want"),
         )
-        assert rows.count() == total
-        assert rows.filter(F.col("bucket") != F.col("want")).count() == 0
-        ids = {r.vec_id for r in rows.select("vec_id").collect()}
-        assert 4_000_000 in ids or any(i >= 4_000_000 for i in ids)
-        assert not ids & {1, 2}  # tombstoned rows physically gone
-        assert not glob.glob(f"{idx}/_tombstones/*.parquet")
-        # grown fan-out actually used
-        got_buckets = {
-            int(d.split("bucket=")[1]) for d in glob.glob(f"{idx}/bucket=*")
-        }
-        assert max(got_buckets) >= 16  # beyond the 4-plane range
-        # keymap rebuilt to the NEW buckets
-        km = (
-            spark.read.option("basePath", f"{idx}/{life.KEYMAP_DIR}")
-            .parquet(f"{idx}/{life.KEYMAP_DIR}")
-        )
-        km_pairs = {(r.vec_id, r.bucket) for r in km.collect()}
-        assert km_pairs == {
-            (r.vec_id, r.bucket) for r in rows.select("vec_id", "bucket").collect()
-        }
-        # shrink back: prefix-planes property, counts conserved
-        assert sim.simlsh_index_rebuild(spark, idx, sim.N_PLANES) == total
-        assert (
-            read_int_marker(spark, f"{idx}/{sim._SIMLSH_MARKER}")
-            == sim.N_PLANES
-        )
-        back = spark.read.option("basePath", idx).parquet(idx)
-        assert back.count() == total
-        assert (
-            back.filter(F.col("bucket") >= (1 << sim.N_PLANES)).count() == 0
-        )
-        # refusals
-        with pytest.raises(ValueError, match="nothing to rebuild"):
-            sim.simlsh_index_rebuild(spark, str(tmp_path / "nope"), 6)
-        with pytest.raises(ValueError, match="out of range"):
-            sim.simlsh_index_rebuild(spark, idx, 0)
-    finally:
-        spark.conf.unset(life.KEYMAP_CONF)
+    )
+    assert rows.count() == total
+    assert rows.filter(F.col("bucket") != F.col("want")).count() == 0
+    ids = {r.vec_id for r in rows.select("vec_id").collect()}
+    assert 4_000_000 in ids or any(i >= 4_000_000 for i in ids)
+    assert not ids & {1, 2}  # tombstoned rows physically gone
+    assert not glob.glob(f"{idx}/_tombstones/*.parquet")
+    # grown fan-out actually used
+    got_buckets = {
+        int(d.split("bucket=")[1]) for d in glob.glob(f"{idx}/bucket=*")
+    }
+    assert max(got_buckets) >= 16  # beyond the 4-plane range
+    # shrink back: prefix-planes property, counts conserved
+    assert sim.simlsh_index_rebuild(spark, idx, sim.N_PLANES) == total
+    assert (
+        read_int_marker(spark, f"{idx}/{sim._SIMLSH_MARKER}")
+        == sim.N_PLANES
+    )
+    back = spark.read.option("basePath", idx).parquet(idx)
+    assert back.count() == total
+    assert (
+        back.filter(F.col("bucket") >= (1 << sim.N_PLANES)).count() == 0
+    )
+    # refusals
+    with pytest.raises(ValueError, match="nothing to rebuild"):
+        sim.simlsh_index_rebuild(spark, str(tmp_path / "nope"), 6)
+    with pytest.raises(ValueError, match="out of range"):
+        sim.simlsh_index_rebuild(spark, idx, 0)
 
 
 def test_simlsh_migrate_probe_prunes_to_query_buckets(
@@ -1579,70 +1565,61 @@ def test_ivf_upsert_replaces_inserts_resurrects(spark, tmp_path):
     """upsert_rows end to end through the IVF wrapper: an existing key's
     row is REPLACED in place (one physical row, new payload), a fresh
     key inserts, a tombstoned key resurrects atomically (its tombstone
-    gone), an un-upserted tombstoned key stays dead, counts are
-    conserved, and the keymap learns the new locations."""
-    spark.conf.set(life.KEYMAP_CONF, "true")
-    try:
-        idx = _mk_ivf_idx(spark, tmp_path, "ivf_ups")
-        emb = registry.tbl(spark, SF, "embeddings")
-        total = emb.count()
-        dead = spark.createDataFrame([(40,), (50,)], "vec_id long")
-        assert sim.ivf_index_delete(spark, dead, idx) == 2
-        upd = emb.filter(F.col("vec_id") == 100).select(
-            "vec_id",
-            "label",
-            F.transform(
-                "embedding", lambda x: (x.cast("double") + F.lit(9.5)).cast("float")
-            ).alias("embedding"),
-        )
-        ins = emb.filter(F.col("vec_id") == 100).select(
-            (F.col("vec_id") + 5_000_000).alias("vec_id"), "label", "embedding"
-        )
-        res = emb.filter(F.col("vec_id") == 50).select(
-            "vec_id", "label", "embedding"
-        )
-        nr, ni = sim.ivf_index_upsert(
-            spark, upd.unionByName(ins).unionByName(res), idx
-        )
-        assert (nr, ni) == (2, 1)  # 100 replaced, 50 replaced-in-place, new inserted
-        phys = spark.read.option("basePath", idx).parquet(idx)
-        live = life.apply_tombstones(spark, idx, phys, "vec_id")
-        # counts: total - dead(40) + insert; 50 resurrected, 100 replaced
-        assert live.count() == total - 1 + 1
-        assert phys.filter(F.col("vec_id") == 100).count() == 1  # replaced, not duplicated
-        got = phys.filter(F.col("vec_id") == 100).select("e").first()["e"]
-        want = [
-            float(x) + 9.5
-            for x in emb.filter(F.col("vec_id") == 100).first()["embedding"]
-        ]
-        assert got == pytest.approx(want)
-        assert live.filter(F.col("vec_id") == 50).count() == 1  # resurrected
-        assert live.filter(F.col("vec_id") == 40).count() == 0  # stays dead
-        ts = life.tombstones(spark, idx)
-        assert ts is not None and {r.vec_id for r in ts.collect()} == {40}
-        # keymap learned the fresh key (bare-key delete prunes through it)
-        km = spark.read.option("basePath", f"{idx}/{life.KEYMAP_DIR}").parquet(
-            f"{idx}/{life.KEYMAP_DIR}"
-        )
-        assert km.filter(F.col("vec_id") == 100 + 5_000_000).count() == 1
-        # idempotent re-run: same batch converges to the same state
-        nr2, ni2 = sim.ivf_index_upsert(
-            spark, upd.unionByName(ins).unionByName(res), idx
-        )
-        assert (nr2, ni2) == (3, 0)  # all three now standing
-        live2 = life.apply_tombstones(
-            spark,
-            idx,
-            spark.read.option("basePath", idx).parquet(idx),
-            "vec_id",
-        )
-        assert live2.count() == total
-        # refusals + empty batch
-        with pytest.raises(ValueError, match="no standing"):
-            sim.ivf_index_upsert(spark, upd, str(tmp_path / "nowhere"))
-        assert sim.ivf_index_upsert(spark, upd.limit(0), idx) == (0, 0)
-    finally:
-        spark.conf.unset(life.KEYMAP_CONF)
+    gone), an un-upserted tombstoned key stays dead, and counts are
+    conserved."""
+    idx = _mk_ivf_idx(spark, tmp_path, "ivf_ups")
+    emb = registry.tbl(spark, SF, "embeddings")
+    total = emb.count()
+    dead = spark.createDataFrame([(40,), (50,)], "vec_id long")
+    assert sim.ivf_index_delete(spark, dead, idx) == 2
+    upd = emb.filter(F.col("vec_id") == 100).select(
+        "vec_id",
+        "label",
+        F.transform(
+            "embedding", lambda x: (x.cast("double") + F.lit(9.5)).cast("float")
+        ).alias("embedding"),
+    )
+    ins = emb.filter(F.col("vec_id") == 100).select(
+        (F.col("vec_id") + 5_000_000).alias("vec_id"), "label", "embedding"
+    )
+    res = emb.filter(F.col("vec_id") == 50).select(
+        "vec_id", "label", "embedding"
+    )
+    nr, ni = sim.ivf_index_upsert(
+        spark, upd.unionByName(ins).unionByName(res), idx
+    )
+    assert (nr, ni) == (2, 1)  # 100 replaced, 50 replaced-in-place, new inserted
+    phys = spark.read.option("basePath", idx).parquet(idx)
+    live = life.apply_tombstones(spark, idx, phys, "vec_id")
+    # counts: total - dead(40) + insert; 50 resurrected, 100 replaced
+    assert live.count() == total - 1 + 1
+    assert phys.filter(F.col("vec_id") == 100).count() == 1  # replaced, not duplicated
+    got = phys.filter(F.col("vec_id") == 100).select("e").first()["e"]
+    want = [
+        float(x) + 9.5
+        for x in emb.filter(F.col("vec_id") == 100).first()["embedding"]
+    ]
+    assert got == pytest.approx(want)
+    assert live.filter(F.col("vec_id") == 50).count() == 1  # resurrected
+    assert live.filter(F.col("vec_id") == 40).count() == 0  # stays dead
+    ts = life.tombstones(spark, idx)
+    assert ts is not None and {r.vec_id for r in ts.collect()} == {40}
+    # idempotent re-run: same batch converges to the same state
+    nr2, ni2 = sim.ivf_index_upsert(
+        spark, upd.unionByName(ins).unionByName(res), idx
+    )
+    assert (nr2, ni2) == (3, 0)  # all three now standing
+    live2 = life.apply_tombstones(
+        spark,
+        idx,
+        spark.read.option("basePath", idx).parquet(idx),
+        "vec_id",
+    )
+    assert live2.count() == total
+    # refusals + empty batch
+    with pytest.raises(ValueError, match="no standing"):
+        sim.ivf_index_upsert(spark, upd, str(tmp_path / "nowhere"))
+    assert sim.ivf_index_upsert(spark, upd.limit(0), idx) == (0, 0)
 
 
 def test_ivf_upsert_moves_key_and_drains_cell(spark, tmp_path):
@@ -1957,119 +1934,6 @@ def test_mmr_batch_indexed_pool_comes_from_index(spark, tmp_path):
         spark.conf.unset(sim.IVFPQ_INDEX_DIR_CONF)
 
 
-def test_keymap_prunes_bare_key_deletes(spark, tmp_path):
-    """Round-12 ask #6: with the opt-in key→partition map, a BARE-KEY
-    delete prunes to the map's kbkt dirs and the located cells — proof
-    via garbage in an untouched cell dir and an unrequested kbkt dir
-    (any unpruned scan would crash). Compaction refreshes the map
-    (deleted keys drop out), and an unmapped key still falls back to the
-    honest full scan."""
-    idx = str(tmp_path / "keymap_idx")
-    rows = spark.createDataFrame(
-        [(i, i % 4) for i in range(40)], schema="vec_id long, cell int"
-    )
-    life.build_index(
-        spark, idx, "_n_centroids", 4, rows, "cell", 4, keymap_key="vec_id"
-    )
-    assert os.path.isdir(f"{idx}/{life.KEYMAP_DIR}")
-    batch = spark.createDataFrame(
-        [(100, 0), (101, 1)], schema="vec_id long, cell int"
-    )
-    assert life.ingest_rows(
-        spark, idx, "_n_centroids", 4, batch, "cell", 4, keymap=True
-    ) == 2
-    # replay writes neither data nor map entries
-    files_before = sorted(
-        os.path.join(r, f)
-        for r, _, fs_ in os.walk(f"{idx}/{life.KEYMAP_DIR}")
-        for f in fs_
-    )
-    assert life.ingest_rows(
-        spark, idx, "_n_centroids", 4, batch, "cell", 4, keymap=True
-    ) == 0
-    assert sorted(
-        os.path.join(r, f)
-        for r, _, fs_ in os.walk(f"{idx}/{life.KEYMAP_DIR}")
-        for f in fs_
-    ) == files_before
-    # lookup locates build-time AND ingested rows; ghosts stay unmapped
-    req = spark.createDataFrame(
-        [(0,), (101,), (999_999,)], schema="vec_id long"
-    )
-    mapped = life.keymap_lookup(spark, idx, req, "vec_id")
-    assert {
-        (r["vec_id"], r["cell"]) for r in mapped.collect()
-    } == {(0, 0), (101, 1)}
-    # garbage: in a cell neither doomed key lives in, and in a kbkt dir
-    # outside the request's buckets — the pruned delete reads neither
-    doomed = spark.createDataFrame([(0,), (101,)], schema="vec_id long")
-    req_kb = {
-        r["kb"]
-        for r in doomed.select(
-            life._keymap_bucket("vec_id").alias("kb")
-        ).collect()
-    }
-    other_kb = next(
-        d
-        for d in sorted(os.listdir(f"{idx}/{life.KEYMAP_DIR}"))
-        if d.startswith("kbkt=") and int(d.split("=")[1]) not in req_kb
-    )
-    g1 = f"{idx}/cell=2/part-garbage.parquet"
-    g2 = f"{idx}/{life.KEYMAP_DIR}/{other_kb}/part-garbage.parquet"
-    for g in (g1, g2):
-        with open(g, "w") as fh:
-            fh.write("this is not parquet")
-    try:
-        assert (
-            life.delete_keys_by_map(
-                spark, idx, "_n_centroids", 4, doomed, part_col="cell"
-            )
-            == 2
-        )
-    finally:
-        os.remove(g1)
-        os.remove(g2)
-    masked = life.apply_tombstones(
-        spark, idx, spark.read.option("basePath", idx).parquet(idx)
-    )
-    assert masked.filter(F.col("vec_id").isin(0, 101)).count() == 0
-    # compact applies tombstones AND refreshes the map
-    life.compact_index(spark, idx, "_n_centroids", "cell", 4)
-    assert life.keymap_lookup(spark, idx, doomed, "vec_id").count() == 0
-    # repeat delete of the now-dead keys: unmapped -> full-scan fallback
-    # -> records nothing, never silently wrong
-    assert (
-        life.delete_keys_by_map(
-            spark, idx, "_n_centroids", 4, doomed, part_col="cell"
-        )
-        == 0
-    )
-
-
-def test_ivfpq_keymap_conf_wiring(spark, tmp_path):
-    """spark.bert_etl.index.keymap=true: the IVF-PQ verbs seed/maintain
-    the map and a bare-key GDPR delete goes through it."""
-    idx = str(tmp_path / "ivfpq_km")
-    spark.conf.set(life.KEYMAP_CONF, "true")
-    try:
-        sim.ivfpq_build_or_open(spark, SF, idx)
-        assert os.path.isdir(f"{idx}/{life.KEYMAP_DIR}")
-        emb = registry.tbl(spark, SF, "embeddings").select(
-            (F.col("vec_id") + 2_500_000).alias("vec_id"), "embedding"
-        ).limit(6)
-        assert sim.ivfpq_index_ingest(spark, emb, idx) == 6
-        bare = spark.range(2_500_000, 2_500_006).select(
-            F.col("id").alias("vec_id")
-        )
-        assert sim.ivfpq_index_delete(spark, bare, idx) == 6
-        masked = life.apply_tombstones(
-            spark, idx, spark.read.option("basePath", idx).parquet(idx)
-        )
-        assert masked.filter(F.col("vec_id") >= 2_500_000).count() == 0
-    finally:
-        spark.conf.unset(life.KEYMAP_CONF)
-
-
 def test_edge_delete_derives_bucket_and_prunes(spark, tmp_path):
     """graph_edges_delete with a BARE pkey feed derives ebkt from the
     key itself (xxhash64 of the u prefix) — O(touched buckets) with no
@@ -2294,70 +2158,54 @@ def test_ivfpq_rebuild_retrains_and_applies_tombstones(spark, tmp_path):
     """ivfpq_index_rebuild re-trains both quantizers from the LIVE rows
     (rank-based first-N seeds, densely renumbered), re-encodes and
     re-partitions every live row, applies pending tombstones physically
-    (the deleted seed keys are GONE, their tombstone files cleared), and
-    refreshes the keymap when the index carries one."""
-    spark.conf.set(life.KEYMAP_CONF, "true")
-    try:
-        idx, vectors = _mk_rebuilt_fixture(spark, tmp_path)
-        n = sim.ivfpq_index_rebuild(spark, idx, vectors)
-        base_n = registry.tbl(spark, SF, "embeddings").count()
-        assert n == base_n - sim.PQ_K + sim.DRIFT_N
-        t = spark.read.option("basePath", idx).parquet(idx)
-        assert t.count() == n
-        assert t.agg(F.min("vec_id")).first()[0] == sim.PQ_K  # seeds gone
-        assert not os.path.exists(f"{idx}/{life.TOMBSTONE_DIR}") or not [
-            f
-            for f in os.listdir(f"{idx}/{life.TOMBSTONE_DIR}")
-            if not f.startswith(("_", "."))
-        ]
-        # re-trained codebooks: densely renumbered rank seeds over live
-        cb = sim.read_codebook(spark, idx)
-        assert [r.cid for r in cb] == list(range(sim.N_CENTROIDS))
-        live_sorted = (
-            t.orderBy("vec_id").limit(sim.N_CENTROIDS).collect()
-        )
-        assert [r["vec_id"] for r in live_sorted] == list(
-            range(sim.PQ_K, sim.PQ_K + sim.N_CENTROIDS)
-        )
-        # the new centroid 0 IS the smallest live vec_id's true vector
-        v16 = (
-            registry.tbl(spark, SF, "embeddings")
-            .filter(F.col("vec_id") == sim.PQ_K)
-            .select(F.expr(sim.as_double("embedding")).alias("e"))
-            .first()["e"]
-        )
-        assert [round(x, 12) for x in cb[0].ce] == [
-            round(float(x), 12) for x in v16
-        ]
-        # keymap rebuilt: every (vec_id, cell) pair matches the table
-        km = spark.read.option("basePath", f"{idx}/{life.KEYMAP_DIR}").parquet(
-            f"{idx}/{life.KEYMAP_DIR}"
-        )
-        a = sorted(
-            tuple(r) for r in km.select("vec_id", "cell").collect()
-        )
-        b = sorted(
-            tuple(r) for r in t.select("vec_id", "cell").collect()
-        )
-        assert a == b
-        # idempotence: rebuilding again derives the identical index
-        rows1 = sorted(
-            tuple(r)
-            for r in t.select(
-                "vec_id", "cell", F.col("codes").cast("string")
-            ).collect()
-        )
-        sim.ivfpq_index_rebuild(spark, idx, vectors)
-        t2 = spark.read.option("basePath", idx).parquet(idx)
-        rows2 = sorted(
-            tuple(r)
-            for r in t2.select(
-                "vec_id", "cell", F.col("codes").cast("string")
-            ).collect()
-        )
-        assert rows1 == rows2
-    finally:
-        spark.conf.unset(life.KEYMAP_CONF)
+    (the deleted seed keys are GONE, their tombstone files cleared)."""
+    idx, vectors = _mk_rebuilt_fixture(spark, tmp_path)
+    n = sim.ivfpq_index_rebuild(spark, idx, vectors)
+    base_n = registry.tbl(spark, SF, "embeddings").count()
+    assert n == base_n - sim.PQ_K + sim.DRIFT_N
+    t = spark.read.option("basePath", idx).parquet(idx)
+    assert t.count() == n
+    assert t.agg(F.min("vec_id")).first()[0] == sim.PQ_K  # seeds gone
+    assert not os.path.exists(f"{idx}/{life.TOMBSTONE_DIR}") or not [
+        f
+        for f in os.listdir(f"{idx}/{life.TOMBSTONE_DIR}")
+        if not f.startswith(("_", "."))
+    ]
+    # re-trained codebooks: densely renumbered rank seeds over live
+    cb = sim.read_codebook(spark, idx)
+    assert [r.cid for r in cb] == list(range(sim.N_CENTROIDS))
+    live_sorted = (
+        t.orderBy("vec_id").limit(sim.N_CENTROIDS).collect()
+    )
+    assert [r["vec_id"] for r in live_sorted] == list(
+        range(sim.PQ_K, sim.PQ_K + sim.N_CENTROIDS)
+    )
+    # the new centroid 0 IS the smallest live vec_id's true vector
+    v16 = (
+        registry.tbl(spark, SF, "embeddings")
+        .filter(F.col("vec_id") == sim.PQ_K)
+        .select(F.expr(sim.as_double("embedding")).alias("e"))
+        .first()["e"]
+    )
+    assert [round(x, 12) for x in cb[0].ce] == [
+        round(float(x), 12) for x in v16
+    ]
+    # idempotence: rebuilding again derives the identical index
+    rows1 = sorted(
+        tuple(r)
+        for r in t.select(
+            "vec_id", "cell", F.col("codes").cast("string")
+        ).collect()
+    )
+    sim.ivfpq_index_rebuild(spark, idx, vectors)
+    t2 = spark.read.option("basePath", idx).parquet(idx)
+    rows2 = sorted(
+        tuple(r)
+        for r in t2.select(
+            "vec_id", "cell", F.col("codes").cast("string")
+        ).collect()
+    )
+    assert rows1 == rows2
 
 
 def test_ivfpq_rebuild_preserves_rows_missing_from_source(spark, tmp_path):
@@ -2412,98 +2260,6 @@ def test_ivfpq_rebuild_due_consults_floor_conf(spark):
         assert not sim.ivfpq_rebuild_due(spark, df)
     finally:
         spark.conf.unset(sim.IVFPQ_RECALL_REBUILD_CONF)
-
-
-def _family_keymap_delete_check(spark, idx, delete_verb, part_col, doomed_ids):
-    """Shared proof body for the family bare-key delete via the map:
-    garbage planted in (a) a part dir holding NEITHER doomed key per the
-    map and (b) a kbkt dir outside the request's buckets — the pruned
-    delete reads neither; the tombstones land; probes mask the keys."""
-    doomed = spark.createDataFrame(
-        [(i,) for i in doomed_ids], schema="vec_id long"
-    )
-    mapped = life.keymap_lookup(spark, idx, doomed, "vec_id")
-    located = {(r["vec_id"], r[part_col]) for r in mapped.collect()}
-    assert {v for v, _ in located} == set(doomed_ids)  # all mapped
-    hit_parts = {p for _, p in located}
-    req_kb = {
-        r["kb"]
-        for r in doomed.select(
-            life._keymap_bucket("vec_id").alias("kb")
-        ).collect()
-    }
-    victim_part = next(
-        d
-        for d in sorted(os.listdir(idx))
-        if d.startswith(f"{part_col}=")
-        and int(d.split("=")[1]) not in hit_parts
-    )
-    victim_kb = next(
-        d
-        for d in sorted(os.listdir(f"{idx}/{life.KEYMAP_DIR}"))
-        if d.startswith("kbkt=") and int(d.split("=")[1]) not in req_kb
-    )
-    g1 = f"{idx}/{victim_part}/part-garbage.parquet"
-    g2 = f"{idx}/{life.KEYMAP_DIR}/{victim_kb}/part-garbage.parquet"
-    for g in (g1, g2):
-        with open(g, "w") as fh:
-            fh.write("this is not parquet")
-    try:
-        assert delete_verb(spark, doomed, idx) == len(doomed_ids)
-    finally:
-        os.remove(g1)
-        os.remove(g2)
-    masked = life.apply_tombstones(
-        spark, idx, spark.read.option("basePath", idx).parquet(idx)
-    )
-    assert masked.filter(F.col("vec_id").isin(*doomed_ids)).count() == 0
-
-
-def test_simlsh_keymap_bare_key_delete_prunes(spark, tmp_path):
-    """Round-13 'next round' item #5: the sign-LSH family writes the
-    key→partition map at build AND ingest under the conf, and its new
-    delete verb prunes a bare-key feed through it (garbage-file proof)."""
-    idx = str(tmp_path / "simlsh_km")
-    spark.conf.set(life.KEYMAP_CONF, "true")
-    spark.conf.set(sim.SIMLSH_INDEX_DIR_CONF, idx)
-    try:
-        sim._lsh_bucket_table(spark, SF)  # builds the durable index
-        assert os.path.isdir(f"{idx}/{life.KEYMAP_DIR}")
-        batch = spark.createDataFrame(
-            [(9_000_001, [0.5] * sim.EMBED_DIM), (9_000_002, [-0.5] * sim.EMBED_DIM)],
-            schema="vec_id long, embedding array<float>",
-        )
-        assert sim.simlsh_index_ingest(spark, batch, idx) == 2
-        _family_keymap_delete_check(
-            spark, idx, sim.simlsh_index_delete, "bucket",
-            [7, 9_000_001],  # one build-time key, one ingested key
-        )
-    finally:
-        spark.conf.unset(sim.SIMLSH_INDEX_DIR_CONF)
-        spark.conf.unset(life.KEYMAP_CONF)
-
-
-def test_maxsim_keymap_bare_key_delete_prunes(spark, tmp_path):
-    """The MaxSim twin: map written at build and ingest, bare-key delete
-    verb prunes through it (garbage-file proof)."""
-    idx = str(tmp_path / "maxsim_km")
-    spark.conf.set(life.KEYMAP_CONF, "true")
-    spark.conf.set(sim.MAXSIM_INDEX_DIR_CONF, idx)
-    try:
-        sim._maxsim_assign(spark, SF)  # builds the durable index
-        assert os.path.isdir(f"{idx}/{life.KEYMAP_DIR}")
-        batch = spark.createDataFrame(
-            [(9_100_000 + i, [0.25] * sim.EMBED_DIM) for i in range(4)],
-            schema="vec_id long, embedding array<float>",
-        )
-        assert sim.maxsim_index_ingest(spark, batch, idx) == 4
-        _family_keymap_delete_check(
-            spark, idx, sim.maxsim_index_delete, "cell",
-            [11, 9_100_002],
-        )
-    finally:
-        spark.conf.unset(sim.MAXSIM_INDEX_DIR_CONF)
-        spark.conf.unset(life.KEYMAP_CONF)
 
 
 def test_ivf_rebuild_retrains_and_preserves(spark, tmp_path):

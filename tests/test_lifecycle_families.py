@@ -215,19 +215,19 @@ WRITE_JOB_BUDGET = {
     ("ivf", "ingest"): 6,
     ("ivf", "upsert"): 10,
     ("ivf", "upsert_delete"): 10,
-    ("ivf", "delete"): 8,
+    ("ivf", "delete"): 6,
     ("ivf", "compact"): 4,
     ("ivfpq", "ingest"): 6,
     ("ivfpq", "upsert"): 10,
-    ("ivfpq", "delete"): 8,
+    ("ivfpq", "delete"): 6,
     ("ivfpq", "compact"): 4,
     ("simlsh", "ingest"): 6,
     ("simlsh", "upsert"): 10,
-    ("simlsh", "delete"): 8,
+    ("simlsh", "delete"): 6,
     ("simlsh", "compact"): 4,
     ("maxsim", "ingest"): 6,
     ("maxsim", "upsert"): 10,
-    ("maxsim", "delete"): 8,
+    ("maxsim", "delete"): 6,
     ("maxsim", "compact"): 4,
     ("text", "ingest"): 10,
     ("text", "upsert"): 13,

@@ -357,3 +357,38 @@ def test_index_quantizer_marker_mismatch_fails_loudly(spark, index_conf):
     )
     with pytest.raises(ValueError, match="centroid"):
         sim._maxsim_assign(spark, SF)
+
+
+def test_streaming_maxsim_scoring_leaves_no_scratch(spark, tmp_path, monkeypatch):
+    """streaming_maxsim_scoring stages its arrivals, checkpoint and scores
+    under one mkdtemp dir and removes all of it before returning; the
+    returned rows still equal sim_maxsim_incremental's, whose oracle is
+    the same SQL (test_oracle_parity checks both against it). Comparing
+    to that query spares a second run of the DuckDB oracle, which peaks
+    near 8 GB in this process."""
+    import tempfile
+
+    from tests.test_oracle_parity import _rowset
+
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    made = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def spy(*a, **kw):
+        made.append(real_mkdtemp(*a, **kw))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
+    df = registry.ALL_QUERIES["streaming_maxsim_scoring"](spark, SF)
+    got_rows, cols = df.collect(), df.columns
+    assert made and all(d.startswith(str(scratch)) for d in made)
+    assert os.listdir(scratch) == []
+
+    want = registry.ALL_QUERIES["sim_maxsim_incremental"](spark, SF)
+    assert registry.ALL_ORACLES["streaming_maxsim_scoring"] == (
+        registry.ALL_ORACLES["sim_maxsim_incremental"]
+    )
+    assert got_rows
+    assert _rowset(cols, got_rows) == _rowset(want.columns, want.collect())

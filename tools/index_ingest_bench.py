@@ -11,10 +11,7 @@ pre-seeded indexes of growing size, twice:
 
 - ``pruned``: the shipped ingest_rows (anti-join over touched dirs);
 - ``fullscan``: the round-11 shape, reproduced inline (anti-join over
-  the whole index's key column) — the control the fix retires;
-- ``pruned_keymap`` (round-13): ingest_rows with the opt-in
-  key→partition map maintained per batch — its delta over ``pruned``
-  is the map's per-batch overhead, which must also stay flat.
+  the whole index's key column) — the control the fix retires.
 
 Flat ``pruned`` seconds as rows grow 100x, against a growing
 ``fullscan`` curve, is the proof. Results land in SCALING.md.
@@ -65,10 +62,7 @@ def run_case(rows: int, variant: str) -> None:
             F.col("id").alias("vec_id"),
             F.pmod(F.xxhash64("id"), F.lit(N_PARTS)).cast("int").alias("cell"),
         )
-        life.build_index(
-            spark, idx, MARKER, N_PARTS, seed, "cell", N_PARTS,
-            keymap_key="vec_id" if variant == "pruned_keymap" else None,
-        )
+        life.build_index(spark, idx, MARKER, N_PARTS, seed, "cell", N_PARTS)
 
         def batch(i: int):
             # half genuinely new keys, half re-delivered duplicates —
@@ -109,11 +103,6 @@ def run_case(rows: int, variant: str) -> None:
             t0 = time.perf_counter()
             if variant == "pruned":
                 life.ingest_rows(spark, idx, MARKER, N_PARTS, b, "cell", N_PARTS)
-            elif variant == "pruned_keymap":
-                life.ingest_rows(
-                    spark, idx, MARKER, N_PARTS, b, "cell", N_PARTS,
-                    keymap=True,
-                )
             else:
                 ingest_fullscan(b)
             times.append(time.perf_counter() - t0)
@@ -144,7 +133,7 @@ def main() -> None:
         ).split(",")
     ]
     for rows in rows_list:
-        for variant in ("pruned", "pruned_keymap", "fullscan"):
+        for variant in ("pruned", "fullscan"):
             subprocess.run(
                 [sys.executable, os.path.abspath(__file__), "--case",
                  f"{rows}:{variant}"],
