@@ -60,7 +60,9 @@ re-validates the marker immediately before its append as a cheap tripwire
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -134,12 +136,11 @@ def read_with_cached_schema(
 
 
 def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
-
-    def p(s: str):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
+    # resolve the class once: each attribute step of a py4j package path
+    # is its own JVM round trip, so ``jvm.org.apache.hadoop.fs.Path(s)``
+    # paid five per path and ``p(s)`` pays one
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     return p(path).getFileSystem(hconf), p
 
 
@@ -184,27 +185,38 @@ def finish_compaction_swap(
         raise ValueError(
             f"no pending compaction at {index_dir} — nothing to finish"
         )
+    from bert_etl_spark.functions.fsfast import listdir_names, local_path
+
     tmp = f"{index_dir}{TMP_SUFFIX}"
     fs, p = _fs(spark, index_dir)
-    for src in _part_dirs(fs, p, tmp, part_col):
-        dst = p(f"{index_dir}/{src.getName()}")
-        if fs.exists(dst):
+    # what moves: partition dirs first, then artifact dirs. On a local
+    # path one listing of tmp and one of the root answer every
+    # existence check (a per-dir fs.exists is a JVM round trip, ~90 of
+    # them in a CDC due epoch); a remote store keeps the Hadoop route
+    tmp_names = listdir_names(tmp)
+    if tmp_names is not None:
+        lp = local_path(tmp)
+        moves = sorted(n for n in tmp_names if n.startswith(f"{part_col}="))
+        moves += sorted(
+            n for n in tmp_names
+            if n.startswith("_") and os.path.isdir(os.path.join(lp, n))
+        )
+        root_names = listdir_names(index_dir)
+    else:
+        moves = [d.getName() for d in _part_dirs(fs, p, tmp, part_col)]
+        if fs.exists(p(tmp)):
+            moves += [
+                st.getPath().getName()
+                for st in fs.listStatus(p(tmp))
+                if st.isDirectory() and st.getPath().getName().startswith("_")
+            ]
+        root_names = None
+    for name in moves:
+        dst = p(f"{index_dir}/{name}")
+        if name in root_names if root_names is not None else fs.exists(dst):
             fs.delete(dst, True)
-        if not fs.rename(src, dst):
-            raise IOError(f"compaction swap failed moving {src}")
-    tmp_p = p(tmp)
-    if fs.exists(tmp_p):
-        for st in fs.listStatus(tmp_p):
-            name = st.getPath().getName()
-            if not st.isDirectory() or not name.startswith("_"):
-                continue
-            dst = p(f"{index_dir}/{name}")
-            if fs.exists(dst):
-                fs.delete(dst, True)
-            if not fs.rename(st.getPath(), dst):
-                raise IOError(
-                    f"compaction swap failed moving artifact {name}"
-                )
+        if not fs.rename(p(f"{tmp}/{name}"), dst):
+            raise IOError(f"compaction swap failed moving {tmp}/{name}")
     write_int_marker(spark, f"{index_dir}/{marker_name}", value)
     fs.delete(p(sentinel), False)
     fs.delete(p(tmp), True)
@@ -386,8 +398,23 @@ def ingest_rows(
     before the append (single-writer tripwire). The across-batch
     anti-join is against PHYSICAL keys (physical_pruned_scan, tombstones
     NOT masked), so a tombstoned but not-yet-compacted key cannot be
-    resurrected by re-ingest — see delete_keys for the stated semantics."""
-    from bert_etl_spark.functions.markers import read_int_marker
+    resurrected by re-ingest — see delete_keys for the stated semantics.
+    The two halves are public for callers that choose between an
+    append and a rewrite after seeing the batch (the CDC apply epoch):
+    ``checkpointed_batch`` then ``append_batch``."""
+    with checkpointed_batch(assigned, part_col, key) as (batch, touched):
+        return append_batch(
+            spark, index_dir, marker_name, expected, batch, touched,
+            part_col, n_parts, key,
+        )
+
+
+@contextmanager
+def checkpointed_batch(assigned: DataFrame, part_col: str, key: str):
+    """``(batch, touched)``: ``assigned`` deduped on ``key`` and
+    checkpointed once, with the partition values it touches — one job.
+    The scope keeps observed metrics reliable for every action run in it
+    and releases the checkpoint on exit."""
     from bert_etl_spark.functions.observe import reliable_metrics
 
     from pyspark.sql import Observation
@@ -415,66 +442,7 @@ def ingest_rows(
             .localCheckpoint(eager=True)
         )
         try:
-            touched = list(parts_obs.get["parts"])
-            table_keys = physical_pruned_scan(
-                spark, index_dir, part_col, touched
-            )
-            if table_keys is None:  # touched partitions don't exist yet
-                fresh = batch
-            else:
-                # join DIRECTION matters at scale: a plain
-                # batch.join(table_keys, left_anti) can only broadcast the
-                # RIGHT side — Spark would ship the touched partitions'
-                # whole key column (measured: 7.8M keys broadcast,
-                # 4.6 s/batch at a 20M-row index, vs 0.6 s for the scan
-                # itself). Instead, broadcast the BATCH into a semi-join
-                # against the scan: the index side stays distributed and
-                # unshuffled, and the result (keys already present) is
-                # bounded by batch size.
-                dups = table_keys.select(key).join(
-                    F.broadcast(batch.select(key)), key, "left_semi"
-                )
-                fresh = batch.join(F.broadcast(dups), key, "left_anti")
-            # tripwire BEFORE the (single) write action; the count that
-            # the mismatch message needs is only computed on that
-            # exceptional path, so a fully-duplicate replay against a
-            # migrated layout still returns 0 instead of raising — the
-            # pre-observe semantics
-            marker = read_int_marker(spark, f"{index_dir}/{marker_name}")
-            if marker != expected:
-                if fresh.count():
-                    raise ValueError(
-                        f"index at {index_dir} changed underneath this "
-                        f"ingest (marker now {marker}, expected "
-                        f"{expected}) — a concurrent compact/rebuild "
-                        "violated the single-writer assumption; re-run "
-                        "the ingest against the settled index"
-                    )
-                return 0
-            # ONE action for append + fresh count: the count is an
-            # observed metric on the write (previously a separate count
-            # job per epoch; an empty fresh set writes no data files —
-            # only a refreshed _SUCCESS, which every reader already
-            # ignores). The EXPLICIT task count (bucket_layout's
-            # AQE-off fallback — e.g. inside the CDC apply epoch, where
-            # AQE is scoped off) derives from the batch's own touched
-            # partitions, not the session-wide shuffle count: a trickle
-            # batch touching 3 buckets writes 3 tasks, never
-            # n_parts mostly-empty ones (guide §2 — derive from data;
-            # round-14 verdict 'next round' #6: the upsert rewrite
-            # already sized by len(touched), the append now matches).
-            n_obs = Observation()
-            (
-                bucket_layout(
-                    fresh.observe(n_obs, F.count(F.lit(1)).alias("n")),
-                    part_col,
-                    min(n_parts, max(len(touched), 1)),
-                )
-                .write.partitionBy(part_col)
-                .mode("append")
-                .parquet(index_dir)
-            )
-            return int(n_obs.get["n"])
+            yield batch, list(parts_obs.get["parts"])
         finally:
             # deterministic release: an always-on ingest calls this per
             # micro-batch, and leaking one checkpoint block set per batch
@@ -483,6 +451,85 @@ def ingest_rows(
             # frame — release() unpersists the underlying checkpointed
             # RDD itself.
             release(batch)
+
+
+def append_batch(
+    spark: SparkSession,
+    index_dir: str,
+    marker_name: str,
+    expected: int,
+    batch: DataFrame,
+    touched: list,
+    part_col: str,
+    n_parts: int,
+    key: str = "vec_id",
+) -> int:
+    """The append half of ingest_rows: drop the rows of a
+    ``checkpointed_batch`` whose ``key`` already sits in the ``touched``
+    partitions, re-check the marker, append the rest. Returns the rows
+    appended. Run inside the batch's ``checkpointed_batch`` scope."""
+    from bert_etl_spark.functions.markers import read_int_marker
+
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    table_keys = physical_pruned_scan(spark, index_dir, part_col, touched)
+    if table_keys is None:  # touched partitions don't exist yet
+        fresh = batch
+    else:
+        # join DIRECTION matters at scale: a plain
+        # batch.join(table_keys, left_anti) can only broadcast the
+        # RIGHT side — Spark would ship the touched partitions'
+        # whole key column (measured: 7.8M keys broadcast,
+        # 4.6 s/batch at a 20M-row index, vs 0.6 s for the scan
+        # itself). Instead, broadcast the BATCH into a semi-join
+        # against the scan: the index side stays distributed and
+        # unshuffled, and the result (keys already present) is
+        # bounded by batch size.
+        dups = table_keys.select(key).join(
+            F.broadcast(batch.select(key)), key, "left_semi"
+        )
+        fresh = batch.join(F.broadcast(dups), key, "left_anti")
+    # tripwire BEFORE the (single) write action; the count that
+    # the mismatch message needs is only computed on that
+    # exceptional path, so a fully-duplicate replay against a
+    # migrated layout still returns 0 instead of raising — the
+    # pre-observe semantics
+    marker = read_int_marker(spark, f"{index_dir}/{marker_name}")
+    if marker != expected:
+        if fresh.count():
+            raise ValueError(
+                f"index at {index_dir} changed underneath this "
+                f"ingest (marker now {marker}, expected "
+                f"{expected}) — a concurrent compact/rebuild "
+                "violated the single-writer assumption; re-run "
+                "the ingest against the settled index"
+            )
+        return 0
+    # ONE action for append + fresh count: the count is an
+    # observed metric on the write (previously a separate count
+    # job per epoch; an empty fresh set writes no data files —
+    # only a refreshed _SUCCESS, which every reader already
+    # ignores). The EXPLICIT task count (bucket_layout's
+    # AQE-off fallback — e.g. inside the CDC apply epoch, where
+    # AQE is scoped off) derives from the batch's own touched
+    # partitions, not the session-wide shuffle count: a trickle
+    # batch touching 3 buckets writes 3 tasks, never
+    # n_parts mostly-empty ones (guide §2 — derive from data;
+    # round-14 verdict 'next round' #6: the upsert rewrite
+    # already sized by len(touched), the append now matches).
+    n_obs = Observation()
+    (
+        bucket_layout(
+            fresh.observe(n_obs, F.count(F.lit(1)).alias("n")),
+            part_col,
+            min(n_parts, max(len(touched), 1)),
+        )
+        .write.partitionBy(part_col)
+        .mode("append")
+        .parquet(index_dir)
+    )
+    return int(n_obs.get["n"])
 
 
 def upsert_rows(
@@ -1184,10 +1231,16 @@ def commit_rewrite(
             if d.getName() not in tmp_parts
         ]
     else:
+        from bert_etl_spark.functions.fsfast import listdir_names
+
         _write(rows)
+        written = listdir_names(tmp)  # one listing answers the checks below
         for v in touched:  # fully-drained dirs: stage EMPTY so the swap
             d = p(f"{tmp}/{part_col}={v}")  # replaces, never skips, them
-            if not fs.exists(d):
+            if not (
+                f"{part_col}={v}" in written if written is not None
+                else fs.exists(d)
+            ):
                 fs.mkdirs(d)
     if stage:
         overlap(*(lambda fn=fn: fn(tmp) for fn in stage))
@@ -1245,8 +1298,6 @@ def physical_pruned_scan(
     if lp is not None:
         # local fast path: one os.path.isdir per requested value —
         # microseconds, vs a JVM glob round trip per verb call
-        import os
-
         dirs = [
             f"{index_dir}/{part_col}={v}"
             for v in sorted(set(values))

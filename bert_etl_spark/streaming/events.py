@@ -1023,6 +1023,18 @@ def write_stream_parquet(
 #   trickle touches most of a 1k-bucket layout, so the rewrite stays
 #   O(state). Append-log + deferred fold is the LSM answer: write cost
 #   O(batch) always, read/merge cost amortized into compaction.)
+# - A DUE epoch (the in-path fold below is scheduled for it) writes once
+#   instead of appending and then folding: it rewrites the buckets T =
+#   the batch's buckets ∪ every bucket holding more than one data file
+#   (the debt _cdc_log_files counts) to argmax(log[T] ∪ batch), through
+#   commit_rewrite(touched=T). This is NOT the rejected per-epoch
+#   merge-and-swap: it runs only when the cadence already pays a full
+#   rewrite, and T is at most the whole log, so it never writes more
+#   than the append + fold it replaces; non-due epochs still append.
+#   The argmax drops re-delivered opkeys, so no replay guard runs. Its
+#   one difference from a full fold: a single-file bucket outside T
+#   keeps any within-batch superseded rows, which every reader's argmax
+#   masks (cdc_compact_state and cdc_rebucket stay full folds).
 # - READ (latest_cdc_state) computes the argmax per key over the log —
 #   exactly the view the old materialized table held, including op='D'
 #   tombstone rows so a late lower-seq upsert cannot resurrect a deleted
@@ -1034,15 +1046,17 @@ def write_stream_parquet(
 #   marker delete, per-bucket dir swap via finish_compaction_swap, marker
 #   re-stamp). open_index recovers an interrupted fold on the next apply
 #   or read. In-path cadence: ``compact_every=N`` epochs, or
-#   ``compact_when_log_files_over=F`` total data files (a driver-side FS
-#   listing — the measured-debt trigger, like the index families'
+#   ``compact_when_log_files_over=F`` total data files — the files now
+#   plus the one per touched bucket an append would add (a driver-side
+#   FS listing — the measured-debt trigger, like the index families'
 #   tombstone-bytes threshold).
 #
 # Convergence still does not depend on arrival order: the log holds every
 # op exactly once (opkey dedup), and argmax over a set is permutation-
 # invariant; a replayed micro-batch is dropped by the anti-join, and ops
 # re-delivered AFTER a fold (their opkey no longer in the log) re-append
-# as superseded rows the argmax ignores and the next fold drops. Deletes
+# as superseded rows the argmax ignores and the next fold drops (a due
+# epoch's argmax drops them at once). Deletes
 # stay as op='D' rows across folds, mirroring the durable-index tombstone
 # contract. Reference analog: ETLState's per-item read-modify-write
 # (/root/reference/bert/etl/__init__.py:86-164), batched and bucketed.
@@ -1192,22 +1206,22 @@ def cdc_lookup(
     return _cdc_argmax(hit).drop("opkey", "bkt")
 
 
-def _cdc_log_files(spark: SparkSession, state_dir: str) -> int:
-    """Total data files across the log's bucket dirs — one driver-side FS
-    glob, the compaction-debt signal (every appended epoch adds one file
-    per touched bucket; the fold resets to one per bucket). Local-FS
-    fast path: runs per epoch when the file-debt trigger is set."""
+def _cdc_bucket_files(spark: SparkSession, state_dir: str) -> dict[int, int]:
+    """Data files per bucket of the log — one driver-side FS listing.
+    Every appended epoch adds one file per touched bucket; a fold
+    leaves one per bucket, so a bucket holding more than one is debt.
+    Local-FS fast path: runs per epoch when a fold may be due."""
     from bert_etl_spark.functions.fsfast import local_path
 
+    counts: dict[int, int] = {}
     lp = local_path(state_dir)
     if lp is not None:
         import os
 
-        n = 0
         try:
             kids = os.listdir(lp)
         except FileNotFoundError:
-            return 0
+            return counts
         for k in kids:
             if not k.startswith("bkt="):
                 continue
@@ -1215,19 +1229,24 @@ def _cdc_log_files(spark: SparkSession, state_dir: str) -> int:
                 names = os.listdir(os.path.join(lp, k))
             except (FileNotFoundError, NotADirectoryError):
                 continue
-            n += sum(1 for f in names if not f.startswith(("_", ".")))
-        return n
+            counts[int(k[4:])] = sum(
+                1 for f in names if not f.startswith(("_", "."))
+            )
+        return counts
     jvm = spark.sparkContext._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(f"{state_dir}/bkt=*/*")
-    st = p.getFileSystem(hconf).globStatus(p)
-    if st is None:
-        return 0
-    return sum(
-        1
-        for s in st
-        if not s.getPath().getName().startswith(("_", "."))
-    )
+    for s in p.getFileSystem(hconf).globStatus(p) or []:
+        if not s.getPath().getName().startswith(("_", ".")):
+            b = int(s.getPath().getParent().getName()[4:])
+            counts[b] = counts.get(b, 0) + 1
+    return counts
+
+
+def _cdc_log_files(spark: SparkSession, state_dir: str) -> int:
+    """Total data files across the log's bucket dirs — the compaction-
+    debt signal of ``compact_when_log_files_over``."""
+    return sum(_cdc_bucket_files(spark, state_dir).values())
 
 
 def cdc_compact_state(spark: SparkSession, state_dir: str) -> int:
@@ -1294,6 +1313,44 @@ def _cdc_rewrite(spark: SparkSession, state_dir: str, new_nb: int | None) -> int
     )
 
 
+def _cdc_fold_batch(
+    state_dir: str, nb: int, batch: DataFrame, touched: list, n_parts: int
+) -> None:
+    """A due epoch's single write: rewrite the buckets T = the batch's
+    buckets ∪ every bucket holding more than one data file (the file
+    debt) to ``_cdc_argmax(log[T] ∪ batch)``, through the partial
+    commit_rewrite. The argmax drops re-delivered opkeys, so no replay
+    guard runs. ``bkt`` is re-hashed and rows are kept only when their
+    bucket is in T: a row a crashed re-bucket left under a stale dir in T
+    is dropped (its key's current row sits in its own bucket), and no
+    bucket outside T is written. Differs from a full fold only in the
+    single-file buckets outside T, which keep any within-batch superseded
+    rows that every reader's argmax masks."""
+    from bert_etl_spark.operators.index_lifecycle import (
+        commit_rewrite,
+        physical_pruned_scan,
+    )
+
+    spark = batch.sparkSession
+    debt = [b for b, n in _cdc_bucket_files(spark, state_dir).items() if n > 1]
+    t = sorted(set(touched) | set(debt))
+    if not t:  # an empty batch over a folded log: nothing to write
+        return
+    log = physical_pruned_scan(spark, state_dir, "bkt", t, merge_schema=True)
+    ops = batch if log is None else batch.unionByName(
+        log, allowMissingColumns=True
+    )
+    rows = (
+        _cdc_argmax(ops)
+        .withColumn("bkt", _cdc_bucket(nb))
+        .filter(F.col("bkt").isin(t))
+    )
+    commit_rewrite(
+        spark, state_dir, CDC_MARKER, "bkt", nb, rows,
+        min(n_parts, len(t)), touched=t,
+    )
+
+
 def cdc_apply_stream(
     stream: DataFrame,
     state_dir: str,
@@ -1306,42 +1363,53 @@ def cdc_apply_stream(
     the bucketed durable op log (see the section comment for the full
     design). Each epoch: open/recover the log (open_index — finishes an
     interrupted fold), stamp the bucket-modulus marker on first contact,
-    then ingest_rows the batch's ops keyed on opkey = k|seq|op — the
-    O(touched-buckets) exactly-once append. ``n_buckets`` is a persistent
-    layout property (frozen by the marker; later calls validate).
-    Readers: latest_cdc_state."""
+    checkpoint the batch's ops keyed on opkey = k|seq|op, then either
+    append them (the O(touched-buckets) exactly-once ingest) or, when the
+    in-lane fold is due, rewrite the batch's buckets and the buckets in
+    file debt in one commit (_cdc_fold_batch). ``n_buckets`` is a
+    persistent layout property (frozen by the marker; later calls
+    validate). Readers: latest_cdc_state."""
     from bert_etl_spark.operators.index_lifecycle import (
-        ingest_rows,
+        append_batch,
+        checkpointed_batch,
         open_index,
     )
 
     spark = stream.sparkSession
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
+    _SHUFFLE = "spark.sql.shuffle.partitions"
+    n_parts = min(
+        int(spark.conf.get(_SHUFFLE, "32") or "32"),
+        spark.sparkContext.defaultParallelism,
     )
 
     # The apply epoch's plans are BATCH-BOUNDED by construction (opkey
     # dedup of one micro-batch, broadcast semi/anti against the touched
-    # buckets' keys, an O(touched-buckets) append) and repeat on every
-    # trigger forever — exactly where AQE's per-stage re-planning is
-    # pure driver overhead and its runtime choices have nothing to
-    # decide (no join-strategy question: the batch side is broadcast by
-    # construction; no skew joins; writes are bucket-keyed). Measured
-    # round-14 session 3, 3-rep interleaved A/B at sf0.1:
+    # buckets' keys, an O(touched-buckets) append or rewrite) and repeat
+    # on every trigger forever — exactly where AQE's per-stage
+    # re-planning is pure driver overhead and its runtime choices have
+    # nothing to decide (no join-strategy question: the batch side is
+    # broadcast by construction; no skew joins; writes are bucket-keyed).
+    # Measured round-14 session 3, 3-rep interleaved A/B at sf0.1:
     # streaming_cdc_apply medians 7.81 -> 5.87 s, index_sync 12.89 ->
-    # 10.85 s with adaptive off. Earlier floor history: session 1 set a
-    # 1m coalescing floor here (min 6.9 vs 7.4 s), session 3 re-measured
-    # it on the CLONE session (apply_folded medians 9.08 -> 8.36) —
-    # both subsumed by disabling AQE in the epoch. Scoped per epoch on
-    # the stream's CLONED session ONLY (the micro-batch frame is bound
-    # to the clone — outer-session confs never reach its executions,
-    # the reliable_metrics finding, batch 4 — and the in-path fold is
-    # routed through the clone too, so the outer SHARED session is
-    # never mutated: round-14 advice 'medium' item #1) and restored
-    # after. Opt back in
-    # per deployment via spark.bert_etl.cdc.applyAdaptive=true (e.g. if
-    # a deployment's epochs are large enough that AQE coalescing of the
-    # epoch shuffles pays for its re-planning).
+    # 10.85 s with adaptive off; round 15's 32-core A/B kept it off.
+    # With AQE off nothing coalesces the epoch's shuffles, so the epoch
+    # also narrows them: shuffle and write widths are
+    # min(spark.sql.shuffle.partitions, defaultParallelism) — unchanged
+    # at 32+ cores and on a cluster, and on a 4-core box it removes the
+    # 8 waves of near-empty tasks each 32-wide shuffle paid. With the
+    # one-write due epoch, on perfbench index_churn (4 cores) a due
+    # epoch went from 7 jobs / 206 tasks to 3 / 25 and pass_s from 7.31
+    # to 5.11 s (medians of 12 alternating pairs); an appending epoch
+    # keeps its 4 jobs at 21 tasks instead of 133. Both confs are
+    # scoped per epoch on the stream's CLONED
+    # session ONLY (the micro-batch frame is bound to the clone —
+    # outer-session confs never reach its executions, the
+    # reliable_metrics finding, batch 4), so the outer SHARED session is
+    # never mutated (round-14 advice 'medium' item #1), and restored
+    # after. Opt back in per deployment via
+    # spark.bert_etl.cdc.applyAdaptive=true (e.g. if a deployment's
+    # epochs are large enough that AQE coalescing of the epoch shuffles
+    # pays for its re-planning); the widths are then AQE's.
     _AQE = "spark.sql.adaptive.enabled"
     CDC_APPLY_ADAPTIVE_CONF = "spark.bert_etl.cdc.applyAdaptive"
 
@@ -1354,23 +1422,23 @@ def cdc_apply_stream(
             _apply_inner(batch_df, epoch_id)
             return
         # toggle ONLY the stream's CLONED session — every epoch plan
-        # (the batch frame, its joins, the in-path fold, which
-        # _apply_inner routes through the clone) executes there, and the
-        # clone is private to this stream's serial foreachBatch lane.
-        # The outer SHARED session is never mutated: a concurrent query
-        # on it keeps AQE, and two apply streams can no longer
-        # interleave set/restore on the shared conf (round-14 advice,
-        # 'medium' item #1).
+        # (the batch frame, its joins, the due rewrite) executes there,
+        # and the clone is private to this stream's serial foreachBatch
+        # lane. A concurrent query on the outer session keeps its confs,
+        # and two apply streams cannot interleave set/restore.
         clone = batch_df.sparkSession
-        prev = clone.conf.get(_AQE, None)
-        clone.conf.set(_AQE, "false")
+        scoped = {_AQE: "false", _SHUFFLE: str(n_parts)}
+        prev = {key: clone.conf.get(key, None) for key in scoped}
+        for key, value in scoped.items():
+            clone.conf.set(key, value)
         try:
             _apply_inner(batch_df, epoch_id)
         finally:
-            if prev is None:
-                clone.conf.unset(_AQE)
-            else:
-                clone.conf.set(_AQE, prev)
+            for key, value in prev.items():
+                if value is None:
+                    clone.conf.unset(key)
+                else:
+                    clone.conf.set(key, value)
 
     def _apply_inner(batch_df: DataFrame, epoch_id: int) -> None:
         nb = open_index(spark, state_dir, CDC_MARKER, "bkt")
@@ -1401,24 +1469,22 @@ def cdc_apply_stream(
                 "state with cdc_rebucket (fold + rewrite under the new "
                 "modulus through the crash-safe swap)"
             )
-        ingest_rows(
-            spark,
-            state_dir,
-            CDC_MARKER,
-            nb,
-            ops,
-            "bkt",
-            min(n_parts, nb),
-            key="opkey",
-        )
-        due = compact_every and (int(epoch_id) + 1) % int(compact_every) == 0
-        if not due and compact_when_log_files_over:
-            due = _cdc_log_files(spark, state_dir) > compact_when_log_files_over
-        if due:
-            # the fold runs on the CLONE session so the epoch's scoped
-            # confs (AQE off unless applyAdaptive) govern it without the
-            # outer shared session ever being mutated (_apply's scope)
-            cdc_compact_state(batch_df.sparkSession, state_dir)
+        with checkpointed_batch(ops, "bkt", "opkey") as (batch, touched):
+            due = compact_every and (int(epoch_id) + 1) % int(compact_every) == 0
+            if not due and compact_when_log_files_over:
+                # the count an append would leave: it writes one file per
+                # touched bucket
+                due = (
+                    _cdc_log_files(spark, state_dir) + len(touched)
+                    > compact_when_log_files_over
+                )
+            if due:
+                _cdc_fold_batch(state_dir, nb, batch, touched, n_parts)
+            else:
+                append_batch(
+                    spark, state_dir, CDC_MARKER, nb, batch, touched, "bkt",
+                    min(n_parts, nb), key="opkey",
+                )
 
     return (
         stream.writeStream.foreachBatch(_apply)

@@ -9,7 +9,8 @@ every full-table rewrite verb — instead of one copy per family:
 - a standalone compact or delete (or graph ingest) called inside a
   crashed rewrite's sentinel window finishes the swap;
 - every rewrite verb, killed before its sentinel or inside its swap,
-  leaves either the old index or the completed rewrite;
+  leaves either the old index or the completed rewrite, and a due CDC
+  apply epoch so killed converges when its query restarts;
 - a sign-LSH index migrated to a new plane count keeps every write verb.
 """
 
@@ -541,6 +542,54 @@ def test_rewrite_commit_crash_matrix(
     assert _state(spark, family, d) == want
     assert len(want["rows"]) == n_done
     _assert_partitioned(spark, family, d)
+
+
+def _cdc_due_epoch(spark, d: str) -> None:
+    """One apply epoch of a batch that updates, deletes and inserts keys
+    of ``_cdc_state`` (due under ``compact_every=1``), on a fixed
+    checkpoint: a restart replays it."""
+    src = f"{d}_in2"
+    schema = "k long, seq int, op string, price double"
+    if not os.path.exists(src):
+        rows = (
+            [(k, 2, "U", k + 0.25) for k in range(0, 100, 7)]
+            + [(k, 2, "D", None) for k in range(50, 60)]
+            + [(k, 2, "U", 1.0) for k in range(500, 510)]
+        )
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    ev.cdc_apply_stream(
+        spark.readStream.schema(schema).parquet(src), d, f"{d}_ck2",
+        n_buckets=4, compact_every=1,
+    ).awaitTermination()
+
+
+@pytest.mark.parametrize("kill", ["before_sentinel", "mid_swap"])
+def test_cdc_due_epoch_crash_recovers(spark, tmp_path, monkeypatch, kill):
+    """A due CDC apply epoch commits its one rewrite through the same
+    sentinel swap. Killed before the sentinel or inside the swap, a
+    restart on the same query checkpoint replays the epoch and lands
+    the uncrashed end state: the same log rows, each op exactly once,
+    every row in its bucket, no sentinel or tmp left."""
+    ref = str(tmp_path / "ref")
+    _cdc_state(spark, ref)
+    _cdc_due_epoch(spark, ref)
+    want = _state(spark, "cdc", ref)
+    want_log = sorted(tuple(r) for r in _read(spark, ref).collect())
+    d = str(tmp_path / "cdc")
+    _cdc_state(spark, d)
+    with monkeypatch.context() as m:
+        _crash(m, kill)
+        with pytest.raises(Exception, match="simulated crash"):
+            _cdc_due_epoch(spark, d)
+    _cdc_due_epoch(spark, d)
+    assert not os.path.exists(f"{d}/{life.PENDING_SENTINEL}")
+    assert not os.path.exists(f"{d}{life.TMP_SUFFIX}")
+    assert _state(spark, "cdc", d) == want
+    log = sorted(tuple(r) for r in _read(spark, d).collect())
+    assert log == want_log
+    opkeys = [r.opkey for r in _read(spark, d).select("opkey").collect()]
+    assert len(opkeys) == len(set(opkeys))
+    _assert_partitioned(spark, "cdc", d)
 
 
 # --- standalone verbs inside a crashed compact's sentinel window --------

@@ -7,6 +7,7 @@ sinks + availableNow triggers make the runs synchronous and deterministic.
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -1370,6 +1371,115 @@ def test_cdc_inpath_fold_on_file_debt(spark, tmp_path):
         r["k"]: r["seq"] for r in ev.latest_cdc_state(spark, state).collect()
     }
     assert got == {k: 3 for k in range(64)}
+
+
+def _cdc_buckets(spark, keys, nb):
+    from bert_etl_spark.streaming import events as ev
+
+    return {
+        r["b"]
+        for r in spark.createDataFrame([(k,) for k in keys], "k long")
+        .select(ev._cdc_bucket(nb).alias("b"))
+        .collect()
+    }
+
+
+def _cdc_log_rows(spark, state):
+    return sorted(
+        repr(tuple(r))
+        for r in spark.read.option("basePath", state).parquet(state).collect()
+    )
+
+
+def test_cdc_due_epoch_writes_once(spark, tmp_path):
+    """A due epoch (compact_every) writes once: the buckets T = its
+    batch's buckets plus every bucket holding more than one data file
+    end with exactly one new file each, every other bucket keeps its
+    files and mtimes, the view equals appends followed by a full
+    cdc_compact_state, and a fresh-checkpoint replay of the due batch
+    leaves the log's rows unchanged."""
+    from bert_etl_spark.streaming import events as ev
+
+    schema = "k long, seq int, op string, price double"
+    feeds = [
+        [(k, 0, "U", float(k)) for k in range(200)],
+        [(k, 1, "U", k + 0.5) for k in range(12)]
+        + [(k, 1, "D", None) for k in range(12, 16)],
+        [(1000, 2, "U", 9.0), (3, 2, "D", None), (20, 2, "U", 7.0)],
+    ]
+    for i, rows in enumerate(feeds):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            str(tmp_path / f"in{i}")
+        )
+
+    def apply(state, i, ck, compact_every):
+        ev.cdc_apply_stream(
+            spark.readStream.schema(schema).parquet(str(tmp_path / f"in{i}")),
+            state,
+            str(tmp_path / ck),
+            compact_every=compact_every,
+        ).awaitTermination()
+
+    state = str(tmp_path / "state")
+    apply(state, 0, "a", 0)
+    apply(state, 1, "b", 0)  # appends: its buckets now hold two files
+    ref = str(tmp_path / "ref")
+    shutil.copytree(state, ref)
+    before = _state_mtimes(state)
+    debt = {int(b[4:]) for b, files in before.items() if len(files) > 1}
+    batch = _cdc_buckets(spark, [k for k, *_ in feeds[2]], ev.CDC_BUCKETS_DEFAULT)
+    assert debt - batch  # the fold must reach buckets the batch misses
+    t = {f"bkt={b}" for b in batch | debt}
+    apply(state, 2, "c", 1)
+    after = _state_mtimes(state)
+    assert set(after) == set(before) | t
+    for b, files in after.items():
+        if b in t:
+            assert len(files) == 1 and files[0] not in before.get(b, []), b
+        else:
+            assert files == before[b], f"untouched {b} was rewritten"
+
+    apply(ref, 2, "rc", 0)
+    ev.cdc_compact_state(spark, ref)
+
+    def view(d):
+        return sorted(
+            tuple(r)
+            for r in ev.latest_cdc_state(spark, d)
+            .select("k", "seq", "op", "price")
+            .collect()
+        )
+
+    assert view(state) == view(ref)
+    log = _cdc_log_rows(spark, state)
+    apply(state, 2, "c2", 1)  # fresh checkpoint: the due batch again
+    assert _cdc_log_rows(spark, state) == log
+
+
+@pytest.mark.parametrize("compact_every,max_jobs", [(1, 3), (0, 4)])
+def test_cdc_warm_epoch_job_budget(spark, tmp_path, compact_every, max_jobs):
+    """A warm apply epoch runs within its Spark job budget: 3 for a due
+    epoch (batch checkpoint, the op log's footer merge, the rewrite),
+    and for an appending epoch the 4 it took before the due epoch was
+    folded into one write. Counted on the stream's own job group."""
+    from bert_etl_spark.streaming import events as ev
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    state = str(tmp_path / "state")
+    for i in range(3):
+        rows = [(k, i, "U", float(k)) for k in range(40 * i, 40 * i + 60)]
+        q = ev.cdc_apply_stream(
+            _cdc_feed(spark, rows, str(tmp_path / f"in{i}")),
+            state,
+            str(tmp_path / f"ck{i}"),
+            compact_every=compact_every,
+        )
+        q.awaitTermination()
+    bus.waitUntilEmpty()
+    jobs = len(tracker.getJobIdsForGroup(str(q.runId)))
+    assert 0 < jobs <= max_jobs, jobs
 
 
 def test_cdc_lookup_reads_only_request_buckets(spark, tmp_path):

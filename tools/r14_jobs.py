@@ -1,9 +1,10 @@
 """Per-Spark-job timing for one query run via the event log.
 
 Runs the query (cold at warm-SF first for codegen, then timed at target
-SF), with spark.eventLog enabled, then prints every job's duration and
-call site — the missing per-action breakdown wall timers can't see
-inside a verb.
+SF), with spark.eventLog enabled, then prints every job's duration, stage and
+task counts (the job-start event's ``Stage Infos`` that were submitted —
+skipped stages excluded) and call site —
+the missing per-action breakdown wall timers can't see inside a verb.
 
 Usage: python tools/r14_jobs.py <query> [sf_dir]
 """
@@ -47,6 +48,7 @@ def main() -> None:
     print(f"=== {qname} timed run: {total:.2f}s ===")
     path = os.path.join(evdir, app_id)
     starts: dict[int, dict] = {}
+    submitted: set[int] = set()
     jobs = []
     with open(path) as fh:
         for line in fh:
@@ -57,6 +59,8 @@ def main() -> None:
             e = ev.get("Event")
             if e == "SparkListenerJobStart":
                 starts[ev["Job ID"]] = ev
+            elif e == "SparkListenerStageSubmitted":
+                submitted.add(ev["Stage Info"]["Stage ID"])
             elif e == "SparkListenerJobEnd":
                 s = starts.get(ev["Job ID"])
                 if s is None or s["Submission Time"] < marker:
@@ -65,16 +69,23 @@ def main() -> None:
                 site = s.get("Properties", {}).get(
                     "callSite.short", ""
                 ) or s.get("Properties", {}).get("spark.job.description", "")
-                jobs.append((s["Submission Time"], dur, ev["Job ID"], site))
+                infos = [i for i in s.get("Stage Infos", [])
+                         if i["Stage ID"] in submitted]
+                tasks = sum(i.get("Number of Tasks", 0) for i in infos)
+                jobs.append((s["Submission Time"], dur, ev["Job ID"],
+                             len(infos), tasks, site))
     jobs.sort()
     prev_end = None
     gap_total = 0.0
-    for sub, dur, jid, site in jobs:
+    for sub, dur, jid, n_stages, n_tasks, site in jobs:
         gap = 0.0 if prev_end is None else max(0.0, (sub - prev_end) / 1000.0)
         gap_total += gap
         prev_end = max(prev_end or 0, sub + dur * 1000.0)
-        print(f"job {jid:4d}  dur {dur:6.2f}s  gap_before {gap:5.2f}s  {site[:90]}")
-    print(f"jobs: {len(jobs)}, sum job dur {sum(j[1] for j in jobs):.2f}s, "
+        print(f"job {jid:4d}  dur {dur:6.2f}s  gap_before {gap:5.2f}s  "
+              f"stages {n_stages:2d}  tasks {n_tasks:4d}  {site[:90]}")
+    print(f"jobs: {len(jobs)}, stages {sum(j[3] for j in jobs)}, "
+          f"tasks {sum(j[4] for j in jobs)}, "
+          f"sum job dur {sum(j[1] for j in jobs):.2f}s, "
           f"sum gaps {gap_total:.2f}s (driver-side/planning)")
 
 
