@@ -60,7 +60,6 @@ re-validates the marker immediately before its append as a cheap tripwire
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass
@@ -185,38 +184,27 @@ def finish_compaction_swap(
         raise ValueError(
             f"no pending compaction at {index_dir} — nothing to finish"
         )
-    from bert_etl_spark.functions.fsfast import listdir_names, local_path
-
     tmp = f"{index_dir}{TMP_SUFFIX}"
     fs, p = _fs(spark, index_dir)
-    # what moves: partition dirs first, then artifact dirs. On a local
-    # path one listing of tmp and one of the root answer every
-    # existence check (a per-dir fs.exists is a JVM round trip, ~90 of
-    # them in a CDC due epoch); a remote store keeps the Hadoop route
-    tmp_names = listdir_names(tmp)
-    if tmp_names is not None:
-        lp = local_path(tmp)
-        moves = sorted(n for n in tmp_names if n.startswith(f"{part_col}="))
-        moves += sorted(
-            n for n in tmp_names
-            if n.startswith("_") and os.path.isdir(os.path.join(lp, n))
-        )
-        root_names = listdir_names(index_dir)
-    else:
-        moves = [d.getName() for d in _part_dirs(fs, p, tmp, part_col)]
-        if fs.exists(p(tmp)):
-            moves += [
-                st.getPath().getName()
-                for st in fs.listStatus(p(tmp))
-                if st.isDirectory() and st.getPath().getName().startswith("_")
-            ]
-        root_names = None
-    for name in moves:
-        dst = p(f"{index_dir}/{name}")
-        if name in root_names if root_names is not None else fs.exists(dst):
+    for src in _part_dirs(fs, p, tmp, part_col):
+        dst = p(f"{index_dir}/{src.getName()}")
+        if fs.exists(dst):
             fs.delete(dst, True)
-        if not fs.rename(p(f"{tmp}/{name}"), dst):
-            raise IOError(f"compaction swap failed moving {tmp}/{name}")
+        if not fs.rename(src, dst):
+            raise IOError(f"compaction swap failed moving {src}")
+    tmp_p = p(tmp)
+    if fs.exists(tmp_p):
+        for st in fs.listStatus(tmp_p):
+            name = st.getPath().getName()
+            if not st.isDirectory() or not name.startswith("_"):
+                continue
+            dst = p(f"{index_dir}/{name}")
+            if fs.exists(dst):
+                fs.delete(dst, True)
+            if not fs.rename(st.getPath(), dst):
+                raise IOError(
+                    f"compaction swap failed moving artifact {name}"
+                )
     write_int_marker(spark, f"{index_dir}/{marker_name}", value)
     fs.delete(p(sentinel), False)
     fs.delete(p(tmp), True)
@@ -1231,16 +1219,10 @@ def commit_rewrite(
             if d.getName() not in tmp_parts
         ]
     else:
-        from bert_etl_spark.functions.fsfast import listdir_names
-
         _write(rows)
-        written = listdir_names(tmp)  # one listing answers the checks below
         for v in touched:  # fully-drained dirs: stage EMPTY so the swap
             d = p(f"{tmp}/{part_col}={v}")  # replaces, never skips, them
-            if not (
-                f"{part_col}={v}" in written if written is not None
-                else fs.exists(d)
-            ):
+            if not fs.exists(d):
                 fs.mkdirs(d)
     if stage:
         overlap(*(lambda fn=fn: fn(tmp) for fn in stage))
@@ -1298,6 +1280,8 @@ def physical_pruned_scan(
     if lp is not None:
         # local fast path: one os.path.isdir per requested value —
         # microseconds, vs a JVM glob round trip per verb call
+        import os
+
         dirs = [
             f"{index_dir}/{part_col}={v}"
             for v in sorted(set(values))

@@ -1026,7 +1026,7 @@ def write_stream_parquet(
 # - A DUE epoch (the in-path fold below is scheduled for it) writes once
 #   instead of appending and then folding: it rewrites the buckets T =
 #   the batch's buckets ∪ every bucket holding more than one data file
-#   (the debt _cdc_log_files counts) to argmax(log[T] ∪ batch), through
+#   (the debt _cdc_bucket_files lists) to argmax(log[T] ∪ batch), through
 #   commit_rewrite(touched=T). This is NOT the rejected per-epoch
 #   merge-and-swap: it runs only when the cadence already pays a full
 #   rewrite, and T is at most the whole log, so it never writes more
@@ -1244,8 +1244,7 @@ def _cdc_bucket_files(spark: SparkSession, state_dir: str) -> dict[int, int]:
 
 
 def _cdc_log_files(spark: SparkSession, state_dir: str) -> int:
-    """Total data files across the log's bucket dirs — the compaction-
-    debt signal of ``compact_when_log_files_over``."""
+    """Total data files across the log's bucket dirs."""
     return sum(_cdc_bucket_files(spark, state_dir).values())
 
 
@@ -1314,11 +1313,17 @@ def _cdc_rewrite(spark: SparkSession, state_dir: str, new_nb: int | None) -> int
 
 
 def _cdc_fold_batch(
-    state_dir: str, nb: int, batch: DataFrame, touched: list, n_parts: int
+    state_dir: str,
+    nb: int,
+    batch: DataFrame,
+    touched: list,
+    files: dict[int, int],
+    n_parts: int,
 ) -> None:
     """A due epoch's single write: rewrite the buckets T = the batch's
     buckets ∪ every bucket holding more than one data file (the file
-    debt) to ``_cdc_argmax(log[T] ∪ batch)``, through the partial
+    debt, from ``files`` — _cdc_bucket_files' listing taken for the
+    epoch) to ``_cdc_argmax(log[T] ∪ batch)``, through the partial
     commit_rewrite. The argmax drops re-delivered opkeys, so no replay
     guard runs. ``bkt`` is re-hashed and rows are kept only when their
     bucket is in T: a row a crashed re-bucket left under a stale dir in T
@@ -1332,7 +1337,7 @@ def _cdc_fold_batch(
     )
 
     spark = batch.sparkSession
-    debt = [b for b, n in _cdc_bucket_files(spark, state_dir).items() if n > 1]
+    debt = [b for b, n in files.items() if n > 1]
     t = sorted(set(touched) | set(debt))
     if not t:  # an empty batch over a folded log: nothing to write
         return
@@ -1377,10 +1382,7 @@ def cdc_apply_stream(
 
     spark = stream.sparkSession
     _SHUFFLE = "spark.sql.shuffle.partitions"
-    n_parts = min(
-        int(spark.conf.get(_SHUFFLE, "32") or "32"),
-        spark.sparkContext.defaultParallelism,
-    )
+    shuffle_parts = int(spark.conf.get(_SHUFFLE, "32") or "32")
 
     # The apply epoch's plans are BATCH-BOUNDED by construction (opkey
     # dedup of one micro-batch, broadcast semi/anti against the touched
@@ -1394,10 +1396,17 @@ def cdc_apply_stream(
     # 10.85 s with adaptive off; round 15's 32-core A/B kept it off.
     # With AQE off nothing coalesces the epoch's shuffles, so the epoch
     # also narrows them: shuffle and write widths are
-    # min(spark.sql.shuffle.partitions, defaultParallelism) — unchanged
-    # at 32+ cores and on a cluster, and on a 4-core box it removes the
-    # 8 waves of near-empty tasks each 32-wide shuffle paid. With the
-    # one-write due epoch, on perfbench index_churn (4 cores) a due
+    # min(spark.sql.shuffle.partitions, defaultParallelism), read at
+    # each epoch so the width follows the cores registered then (on a
+    # cluster with dynamic allocation, the executors present at that
+    # epoch — fewer if idle ones were released). Nothing changes once
+    # defaultParallelism reaches the shuffle count; on local[4] it
+    # removes the 8 waves of near-empty tasks each 32-wide shuffle
+    # paid. Measured on local[4] only (there a due epoch rewriting a
+    # whole 9.4M-key log took 10.9-16.2 s, vs 12.8-19.8 s for the
+    # 32-wide append + fold before, 6 epochs each; SCALING.md); the
+    # cluster case is not. With
+    # the one-write due epoch, on perfbench index_churn (4 cores) a due
     # epoch went from 7 jobs / 206 tasks to 3 / 25 and pass_s from 7.31
     # to 5.11 s (medians of 12 alternating pairs); an appending epoch
     # keeps its 4 jobs at 21 tasks instead of 133. Both confs are
@@ -1419,7 +1428,7 @@ def cdc_apply_stream(
             == "true"
         )
         if keep_aqe:
-            _apply_inner(batch_df, epoch_id)
+            _apply_inner(batch_df, epoch_id, shuffle_parts)
             return
         # toggle ONLY the stream's CLONED session — every epoch plan
         # (the batch frame, its joins, the due rewrite) executes there,
@@ -1427,12 +1436,13 @@ def cdc_apply_stream(
         # lane. A concurrent query on the outer session keeps its confs,
         # and two apply streams cannot interleave set/restore.
         clone = batch_df.sparkSession
+        n_parts = min(shuffle_parts, clone.sparkContext.defaultParallelism)
         scoped = {_AQE: "false", _SHUFFLE: str(n_parts)}
         prev = {key: clone.conf.get(key, None) for key in scoped}
         for key, value in scoped.items():
             clone.conf.set(key, value)
         try:
-            _apply_inner(batch_df, epoch_id)
+            _apply_inner(batch_df, epoch_id, n_parts)
         finally:
             for key, value in prev.items():
                 if value is None:
@@ -1440,7 +1450,7 @@ def cdc_apply_stream(
                 else:
                     clone.conf.set(key, value)
 
-    def _apply_inner(batch_df: DataFrame, epoch_id: int) -> None:
+    def _apply_inner(batch_df: DataFrame, epoch_id: int, n_parts: int) -> None:
         nb = open_index(spark, state_dir, CDC_MARKER, "bkt")
         ops = batch_df.select(
             "*",
@@ -1471,15 +1481,19 @@ def cdc_apply_stream(
             )
         with checkpointed_batch(ops, "bkt", "opkey") as (batch, touched):
             due = compact_every and (int(epoch_id) + 1) % int(compact_every) == 0
+            files = None
             if not due and compact_when_log_files_over:
                 # the count an append would leave: it writes one file per
                 # touched bucket
+                files = _cdc_bucket_files(spark, state_dir)
                 due = (
-                    _cdc_log_files(spark, state_dir) + len(touched)
+                    sum(files.values()) + len(touched)
                     > compact_when_log_files_over
                 )
             if due:
-                _cdc_fold_batch(state_dir, nb, batch, touched, n_parts)
+                if files is None:
+                    files = _cdc_bucket_files(spark, state_dir)
+                _cdc_fold_batch(state_dir, nb, batch, touched, files, n_parts)
             else:
                 append_batch(
                     spark, state_dir, CDC_MARKER, nb, batch, touched, "bkt",

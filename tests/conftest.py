@@ -16,20 +16,6 @@ def spark():
 
 
 @pytest.fixture(scope="session")
-def oracle_connect(tmp_path_factory):
-    """``oracle_connect()``: a DuckDB connection for an oracle that
-    spills under the session's tmp dir. No ``memory_limit``: under a
-    2 GB cap the ``sim_mmr_batch_indexed`` and ``graph_kcore`` oracles
-    fail with OutOfMemoryException instead of spilling (the first one
-    also under 4 GB), and it is that oracle that sets the process's
-    peak RSS."""
-    import duckdb
-
-    spill = str(tmp_path_factory.mktemp("duckdb_spill"))
-    return lambda: duckdb.connect(config={"temp_directory": spill})
-
-
-@pytest.fixture(scope="session")
 def sf_small() -> str:
     return SF_SMALL
 

@@ -113,12 +113,14 @@ def test_occupancy_ratio_bounded_for_non_dyadic_knobs():
     assert 16 <= dhash_band_bits(10**10, 3.3) <= 63
 
 
-def test_dhash_adaptive_width_matches_duckdb_oracle(spark, oracle_connect):
+def test_dhash_adaptive_width_matches_duckdb_oracle(spark):
     """Run the WHOLE pipeline with the adaptive width genuinely ENGAGED
     (occupancy forced tiny so w > the 16-bit floor on a small corpus) and
     value-check Spark against the DuckDB oracle generated with the same
     knob — proving the width parameter threads both engines identically,
     not just at the floor the registered query hits at test SFs."""
+    import duckdb
+
     from bert_etl_spark.operators.multimodal import (
         dhash_band_bits,
         dhash_band_pairs,
@@ -140,7 +142,7 @@ def test_dhash_adaptive_width_matches_duckdb_oracle(spark, oracle_connect):
         (r.doc_i, r.doc_j, r.hamming)
         for r in dhash_band_pairs(dhash_bits(df, band_w=w)).collect()
     )
-    con = oracle_connect()
+    con = duckdb.connect()
     con.execute(
         "CREATE TABLE documents AS SELECT * FROM (VALUES "
         + ",".join(f"({i}, '{t}')" for i, t in texts)

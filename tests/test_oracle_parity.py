@@ -10,6 +10,7 @@ from __future__ import annotations
 import datetime as dt
 import math
 
+import duckdb
 import pytest
 
 from bert_etl_spark.catalog import TABLE_NAMES
@@ -25,8 +26,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="module")
-def oracle_con(oracle_connect):
-    con = oracle_connect()
+def oracle_con():
+    con = duckdb.connect()
     for name in TABLE_NAMES:
         con.sql(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF_DIR}/{name}.parquet')"

@@ -19,6 +19,7 @@ from __future__ import annotations
 import os
 import re
 
+import duckdb
 import pytest
 
 from bert_etl_spark.catalog import TABLE_NAMES
@@ -32,8 +33,8 @@ ORACLED = sorted(registry.ALL_ORACLES)
 
 
 @pytest.fixture(scope="module")
-def oracle_con(oracle_connect):
-    con = oracle_connect()
+def oracle_con():
+    con = duckdb.connect()
     for name in TABLE_NAMES:
         con.sql(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF_DIR}/{name}.parquet')"
